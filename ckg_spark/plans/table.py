@@ -163,6 +163,8 @@ def _write_snapshot_files(df: DataFrame, table_dir: str,
 
 # Only orderable primitive parquet types participate in min/max skipping.
 _STATS_TYPES = ("INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY")
+# ... and only when their bounds are JSON scalars
+_JSON_SCALARS = (str, int, float, bool)
 
 
 def _round_up_truncated(prefix: str) -> str | None:
@@ -185,7 +187,8 @@ def _file_column_stats(path: str) -> dict:
     """Per-file column min/max from the parquet footer (pyarrow): the
     Iceberg manifest's data-skipping stats. Strings are truncated to 64
     chars — a truncated UPPER bound is rounded up so it stays a valid
-    bound. Columns with missing stats are omitted (never skipped on)."""
+    bound. Columns with missing stats, or with bounds that are not JSON
+    scalars (timestamps, dates, decimals), are omitted (never skipped on)."""
     import pyarrow.parquet as pq
 
     try:
@@ -206,13 +209,24 @@ def _file_column_stats(path: str) -> dict:
                     or st.physical_type not in _STATS_TYPES):
                 ok[name] = False
                 continue
-            lo, hi = st.min, st.max
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                # pyarrow cannot decode INT32/INT64-backed decimal bounds
+                ok[name] = False
+                continue
             if isinstance(lo, bytes):
                 try:
                     lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
                 except UnicodeDecodeError:
                     ok[name] = False
                     continue
+            if not (isinstance(lo, _JSON_SCALARS)
+                    and isinstance(hi, _JSON_SCALARS)):
+                # timestamp / date / decimal bounds decode to datetime,
+                # date or Decimal, which the JSON manifest cannot hold
+                ok[name] = False
+                continue
             if isinstance(lo, str) and len(lo) > 64:
                 lo = lo[:64]  # a prefix is always a valid lower bound
             if isinstance(hi, str) and len(hi) > 64:

@@ -3,9 +3,11 @@
 Reference: report_manager/knowledge.py:501-530 builds an nx.DiGraph, ranks
 nodes by betweenness/closeness/pagerank/degree, keeps the top-15 and drops
 isolates; reduce_to_subgraph (knowledge.py:534-551) cuts the graph to a seed
-set + 1 hop. Here both are DataFrame-native: PageRank/degree come from
-operators/graph_algos (iterative joins), ranking is a window, and the
-subgraph cut is a semi-join — no driver-side graph object at any scale.
+set + 1 hop. Here degree, ranking and the subgraph cut are DataFrame-native
+(aggregates, a window, a semi-join). PageRank comes from
+operators/graph_algos, which iterates dictionary-scale graphs (at most
+``DRIVER_PAGERANK_MAX_EDGES`` edges) in numpy on the driver, as the
+reference does, and larger ones as distributed joins.
 
 Also ``run_post_query``: the reference's two-phase "post" queries splice a
 phase-1 result column into a phase-2 Cypher IN-list as a string

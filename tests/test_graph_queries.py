@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ckg_spark.operators import graph_algos as G
@@ -37,13 +38,23 @@ def test_hot_node_guard(spark):
     assert kept.where(F.col("subj") == "b").count() == 2
 
 
-def test_pagerank_sums_to_one(spark):
+def test_pagerank_sums_to_one(spark, monkeypatch):
+    """On the numpy driver tier and on the distributed loop (driver cap
+    0): ranks sum to one and match the loop's numpy replica to 1e-12
+    (uniform teleport is the personalized update seeded with every node)."""
+    from test_kg_qa import _numpy_ppr
+
     e = _edges(spark).where(F.col("pred") == "CO_MENTIONED_WITH")
-    pr = G.pagerank(e, iters=8).toPandas()
-    assert abs(pr["rank"].sum() - 1.0) < 1e-6
-    # chain a->b->c: c should outrank a
-    r = pr.set_index("id")["rank"]
-    assert r["c"] > r["a"]
+    edge_list = [(r.subj, r.obj) for r in e.collect()]
+    exp = _numpy_ppr(edge_list, ["a", "b", "c"], iters=8)
+    for cap in (G.DRIVER_PAGERANK_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", cap)
+        pr = G.pagerank(e, iters=8).toPandas()
+        assert abs(pr["rank"].sum() - 1.0) < 1e-6
+        # chain a->b->c: c should outrank a
+        r = pr.set_index("id")["rank"]
+        assert r["c"] > r["a"]
+        _assert_ranks_close(r.to_dict(), exp)
 
 
 def test_k_hop(spark):
@@ -316,3 +327,105 @@ def test_streaming_snapshot_comention_partials_merge_exact(
     assert sorted(map(tuple, read_merged_edges(spark, tbl).collect())) == want
     # raw table has one row per edge identity after compaction
     assert T.read(spark, tbl).count() == len(want)
+
+
+# ---------------------------------------------------------------------------
+# PageRank tiers: numpy on the driver vs the distributed loop
+# ---------------------------------------------------------------------------
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_ranks_close(got, exp, tol=1e-12):
+    assert set(got) == set(exp)
+    for k in exp:
+        assert abs(got[k] - exp[k]) < tol, (k, got[k], exp[k])
+
+
+def test_pagerank_bigint_and_empty_edges_on_both_tiers(spark, monkeypatch):
+    from pyspark.sql.types import LongType
+    from test_kg_qa import _numpy_ppr
+
+    edge_list = [(10, 20), (20, 30), (30, 10), (30, 40), (2 ** 40, 10)]
+    e = spark.createDataFrame(edge_list, "subj bigint, obj bigint")
+    empty = spark.createDataFrame([], "subj string, obj string")
+    exp = _numpy_ppr(edge_list, sorted({x for p in edge_list for x in p}))
+    for cap in (G.DRIVER_PAGERANK_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", cap)
+        out = G.pagerank(e)
+        assert out.schema["id"].dataType == LongType()
+        _assert_ranks_close({r.id: r.rank for r in out.collect()}, exp)
+        out = G.pagerank(empty)
+        assert out.columns == ["id", "rank"] and out.collect() == []
+
+
+@pytest.mark.parametrize("personalized", [False, True])
+def test_pagerank_cap_boundary_and_driver_job_count(spark, monkeypatch,
+                                                    personalized):
+    """``cap`` edges take the driver tier in at most 2 Spark jobs (the edge
+    fetch, plus the seed fetch when personalized); ``cap`` + 1 send the
+    graph to the distributed loop (a checkpoint job per round at least).
+    One input partition: a limit fetch scans partitions incrementally, one
+    job per step."""
+    e = (_edges(spark).where(F.col("pred") == "CO_MENTIONED_WITH")
+         .select("subj", "obj").coalesce(1))
+    seeds = spark.createDataFrame([("a",)], ["id"]).coalesce(1)
+    n_edges = e.count()
+
+    def rank(cap):
+        monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", cap)
+        if personalized:
+            return G.personalized_pagerank(e, seeds, iters=10)
+        return G.pagerank(e, iters=10)
+
+    drv, drv_jobs = _spark_jobs(spark, lambda: rank(n_edges))
+    dist, dist_jobs = _spark_jobs(spark, lambda: rank(n_edges - 1))
+    assert drv_jobs <= 2
+    assert dist_jobs > 10
+    _assert_ranks_close({r.id: r.rank for r in drv.collect()},
+                        {r.id: r.rank for r in dist.collect()})
+
+
+def test_pagerank_null_endpoint_takes_distributed_loop(spark, monkeypatch):
+    """A null id never joins in the distributed loop, so the driver tier
+    hands such graphs to it rather than rank the null as a node."""
+    e = spark.createDataFrame([("a", "b"), ("b", None)],
+                              "subj string, obj string")
+    got = sorted(G.pagerank(e).collect(), key=lambda r: str(r.id))
+    monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", 0)
+    want = sorted(G.pagerank(e).collect(), key=lambda r: str(r.id))
+    assert got == want
+
+
+@pytest.mark.parametrize("name", ["q107_personalized_pagerank",
+                                  "q108_pagerank"])
+def test_pagerank_queries_match_duckdb_oracle(spark, name):
+    """q107/q108 against their recursive-CTE DuckDB oracles on the sf0.001
+    driver testdata, compared as ``tools/check_oracles.py`` does: same
+    columns and row count, values rounded to 6 decimals, order-insensitive."""
+    import duckdb
+    from test_training_export import SF_DIR
+    from tools.check_oracles import _canon
+
+    from ckg_spark import driver_contract as DC
+
+    fn, sql = DC.QUERIES[name]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW customer AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/customer.parquet')")
+    got = fn(spark, SF_DIR).toPandas()
+    exp = con.execute(sql).df()
+    assert sorted(got.columns) == sorted(exp.columns)
+    assert len(got) == len(exp) > 0
+    assert _canon(got) == _canon(exp)

@@ -361,31 +361,65 @@ def _numpy_ppr(edge_list, seeds, iters=10, d=0.85):
     return {nodes[i]: r[i] for i in range(n)}
 
 
-def test_personalized_pagerank_matches_numpy(spark):
-    from ckg_spark.operators.graph_algos import personalized_pagerank
+def test_personalized_pagerank_matches_numpy(spark, monkeypatch):
+    """Both tiers (numpy on the driver, and the distributed loop with the
+    driver cap at 0) match the replica to 1e-12; a seed outside the graph
+    (zzz) is ignored."""
+    from ckg_spark.operators import graph_algos as G
 
     edge_list = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
                  ("d", "e"), ("x", "y")]  # e, y dangling; x/y off-seed
     edges = spark.createDataFrame(edge_list, ["subj", "obj"])
-    seeds = spark.createDataFrame([("a",)], ["id"])
-    got = {r.id: r.rank
-           for r in personalized_pagerank(edges, seeds, iters=10).collect()}
-    exp = _numpy_ppr(edge_list, ["a"], iters=10)
-    assert set(got) == set(exp)
-    for k in exp:
-        assert abs(got[k] - exp[k]) < 1e-12, (k, got[k], exp[k])
-    # defining property: the component unreachable from the seed is 0
-    assert got["x"] == 0.0 and got["y"] == 0.0
-    assert abs(sum(got.values()) - 1.0) < 1e-9  # mass conserved
+    for seed_ids in (["a"], ["a", "x"], ["c", "zzz"]):
+        seeds = spark.createDataFrame([(s,) for s in seed_ids], ["id"])
+        exp = _numpy_ppr(edge_list, [s for s in seed_ids if s != "zzz"],
+                         iters=10)
+        for cap in (G.DRIVER_PAGERANK_MAX_EDGES, 0):
+            monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", cap)
+            got = {r.id: r.rank
+                   for r in G.personalized_pagerank(edges, seeds,
+                                                    iters=10).collect()}
+            assert set(got) == set(exp)
+            for k in exp:
+                assert abs(got[k] - exp[k]) < 1e-12, (k, got[k], exp[k])
+            # defining property: the component unreachable from the seeds
+            # is 0
+            if "x" not in seed_ids:
+                assert got["x"] == 0.0 and got["y"] == 0.0
+            assert abs(sum(got.values()) - 1.0) < 1e-9  # mass conserved
 
 
-def test_personalized_pagerank_empty_seed_overlap(spark):
-    from ckg_spark.operators.graph_algos import personalized_pagerank
+def test_personalized_pagerank_empty_seed_overlap(spark, monkeypatch):
+    from ckg_spark.operators import graph_algos as G
 
     edges = spark.createDataFrame([("a", "b")], ["subj", "obj"])
     seeds = spark.createDataFrame([("zzz",)], ["id"])  # not in graph
-    got = personalized_pagerank(edges, seeds).collect()
-    assert {r.rank for r in got} == {0.0}
+    for cap in (G.DRIVER_PAGERANK_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", cap)
+        got = G.personalized_pagerank(edges, seeds).collect()
+        assert {r.rank for r in got} == {0.0}
+
+
+def test_personalized_pagerank_bigint_and_empty_both_tiers(spark,
+                                                           monkeypatch):
+    from pyspark.sql.types import LongType
+
+    from ckg_spark.operators import graph_algos as G
+
+    edge_list = [(100, 200), (200, 300), (300, 100), (300, 400)]
+    edges = spark.createDataFrame(edge_list, "subj bigint, obj bigint")
+    empty = spark.createDataFrame([], "subj bigint, obj bigint")
+    seeds = spark.createDataFrame([(100,), (999,), (None,)], "id bigint")
+    exp = _numpy_ppr(edge_list, [100])
+    for cap in (G.DRIVER_PAGERANK_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "DRIVER_PAGERANK_MAX_EDGES", cap)
+        out = G.personalized_pagerank(edges, seeds)
+        assert out.schema["id"].dataType == LongType()
+        got = {r.id: r.rank for r in out.collect()}
+        assert set(got) == set(exp)
+        for k in exp:
+            assert abs(got[k] - exp[k]) < 1e-12, (k, got[k], exp[k])
+        assert G.personalized_pagerank(empty, seeds).collect() == []
 
 
 def test_knowledge_summary_personalized_ranks_near_seed(spark):

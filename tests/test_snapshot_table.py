@@ -382,6 +382,32 @@ def test_string_stats_astral_upper_bound_not_skipped(spark, tmp_path):
                for st in m["file_stats"].values())
 
 
+def test_append_non_json_stats_columns_roundtrip(spark, tmp_path):
+    """timestamp_ntz, date and decimal columns have parquet min/max stats
+    that decode to datetime / date / Decimal, which the JSON manifest
+    cannot hold. The append must commit, leave those columns out of the
+    stats (never skipped on), and read back exactly with or without a
+    range_filter on them."""
+    import datetime as dt
+    from decimal import Decimal
+
+    rows = [(1, dt.datetime(2024, 1, 1, 8, 30), dt.date(2024, 1, 1),
+             Decimal("1.50")),
+            (2, dt.datetime(2024, 6, 1, 12, 0), dt.date(2024, 6, 1),
+             Decimal("2.25"))]
+    df = spark.createDataFrame(
+        rows, "k int, ts timestamp_ntz, d date, amt decimal(10,2)").coalesce(1)
+    d = str(tmp_path / "tbl")
+    assert T.append(df, d) == 1
+    [st] = T.read_manifest(d)["file_stats"].values()
+    assert st == {"k": [1, 2]}
+    assert sorted(tuple(r) for r in T.read(spark, d).collect()) == rows
+    cut = dt.datetime(2024, 3, 1)
+    got = (T.read(spark, d, range_filter={"ts": (cut, None)})
+           .where(f"ts >= timestamp_ntz'{cut}'").collect())
+    assert [tuple(r) for r in got] == rows[1:]
+
+
 def test_round_up_truncated_unit():
     assert T._round_up_truncated("abc") == "abd"
     assert T._round_up_truncated("ab\U0010FFFF") == "ac"
