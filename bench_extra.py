@@ -199,29 +199,7 @@ def breakdown_curation(spark) -> dict:
     return out
 
 
-def breakdown_extract_ab(spark) -> dict:
-    """A/B the extractor strategies at bench scale (extract-only, noop)."""
-    from bench import _ensure_bench_inputs
-    from ckg_spark.operators import extract as X
-    from ckg_spark.vocab import vocab_to_spark
-
-    vocab, tpath = _ensure_bench_inputs()
-    tables = vocab_to_spark(spark, vocab)
-    cpus = spark.sparkContext.defaultParallelism
-    grams = X.prepare_alias_grams(tables["aliases"])
-    out: dict = {}
-    import itertools
-    strategies = ["lead", "fused", "slice"]
-    for trial, s in itertools.product(range(2), strategies):
-        t = spark.read.parquet(tpath).repartition(
-            2 * cpus, "conv_id", "turn_idx")
-        m = X.extract_mentions(t, grams, strategy=s)
-        _timed(spark, f"extract:{s}:t{trial}", lambda: _noop(m), out)
-    return out
-
-
 BREAKDOWNS = {
-    "extract_ab": breakdown_extract_ab,
     "kg": breakdown_kg,
     "q31": breakdown_q31,
     "q93": breakdown_q93,

@@ -748,7 +748,7 @@ def _best_alias_values_sql() -> str:
 # DuckDB — (1) the deterministic 12-token window split of
 # transcripts_from_documents (list slicing over whitespace tokens), (2)
 # match_all n-gram dictionary extraction per turn (per-gram-length UNION ALL,
-# mirroring extract_mentions' union strategy), (3) keep='best' linking
+# the SQL form of extract_mentions' output), (3) keep='best' linking
 # (lowest rank then lowest ident per surface form, rank<>2 excluded), (4)
 # MENTIONED_IN_TURN group-count materialization with score = occurrences.
 Q32_SQL = f"""

@@ -3,24 +3,24 @@
 The reference consumes precomputed JensenLab tagger output (dictionary NER;
 see ckg/graphdb_builder/builder/cypher.yml:371 and
 databases/parsers/textminingParser.py:96-120). Here the tagger itself is
-re-expressed in Spark, with identical semantics implemented twice:
+re-expressed in Spark as one JVM-only matcher, ``extract_mentions``: one
+token-row stream, one broadcast join against the combined dictionary of
+unigram aliases and first words of multi-word aliases, one explode of the
+candidate grams and one broadcast join against the alias set. No Python
+runs per row.
 
-1. ``extract_mentions`` — the scale path, 100% JVM: lowercase/normalize the
-   text, split to a token array, generate n-grams for every alias length
-   present in the vocabulary (a pure Catalyst ``transform(sequence(...))``
-   over the token array — no shuffle, no Python), then broadcast-hash-join
-   the exploded grams against the distinct normalized alias set. Whole-stage
-   codegen covers tokenize -> gram -> join; cost is linear in corpus tokens x
-   max alias length.
+The matcher has two forms that differ in one step only, how a token row
+gets the ``max_n - 1`` tokens that follow it:
 
-2. ``extract_mentions_arrow`` — an Arrow-batched ``mapInPandas`` variant
-   (per BASELINE.json north_star: "vectorized Arrow/pandas UDFs ... batched
-   mention detection with dictionary/trie lookup"). The alias dictionary is
-   a broadcast variable (hash set keyed by n-gram), built once per executor.
-   Used for free-form text where custom token rules are needed; tests assert
-   bit-identical output vs the JVM path.
+- batch: ``lead()`` over ``Window.partitionBy(keys).orderBy(pos)``;
+- stream (``turns.isStreaming``): the token array rides along through
+  ``posexplode`` and ``get(toks, pos + i)`` reads the followers (null past
+  the end, also under ANSI mode). Structured Streaming forbids window
+  functions, so this is the only form that runs on a stream.
 
-Matching semantics (both paths):
+The form follows the input; there is no option to choose one.
+
+Matching semantics (both forms):
 - normalization: lowercase, every non-alphanumeric run becomes a single
   space (the tagger's token-boundary behavior; alias keys are lowercased
   exactly as ckg/graphdb_builder/mapping.py:69 does).
@@ -34,10 +34,9 @@ Matching semantics (both paths):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Iterable, Sequence
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 DEFAULT_KEYS = ("conv_id", "turn_idx")
 
@@ -79,129 +78,43 @@ def extract_mentions(
     keys: Sequence[str] = DEFAULT_KEYS,
     text_col: str = "text",
     gram_lengths: Iterable[int] | None = None,
-    single_scan: bool = False,
-    strategy: str = "lead",
 ) -> DataFrame:
     """JVM-only dictionary matching. Output: keys + (pos, n_words, alias_lc).
 
     ``pos`` is the 0-based token offset of the match start. One output row
     per alias occurrence (match_all semantics); run
     ``resolve_longest_match`` afterwards for tagger-style overlap pruning.
+    ``gram_lengths`` are the word counts present in ``alias_grams`` when
+    the caller already knows them (saves one collect job).
 
-    Strategies (all produce identical output; tests assert equality):
-    - 'lead' (default): posexplode tokens once, lead() window supplies the
-      following tokens, multi-word grams are built ONLY at positions whose
-      token is a known first word of a multi-word alias (broadcast
-      semi-join). Unigrams join with no string building at all. Measured
-      3.3x faster than 'union' at 600k turns AND scales 3.3x from 2->8
-      cores (the union form's 24M gram-string allocations are what
-      saturated the memory subsystem).
-    - 'union': one explode+join branch per alias length.
-    - 'slice': lead-equivalent but each token row carries its own
-      following-token window via slice() on the per-turn array — zero
-      window sort; streaming-safe (windows are forbidden on streams) and
-      the most noise-robust under contention (BENCH.md sweep).
-    - 'hash': 'slice' plus multi-gram candidates joined on
-      (n_words, xxhash64(window words)) long keys — zero gram-string
-      construction; fastest at low parallelism, slowest at 32 threads.
-    - single_scan=True: one projection building every gram length (one
-      input scan; for IO-bound cluster reads where re-scanning dominates).
+    Plan: tokenize and posexplode each turn once; attach the following
+    ``max_n - 1`` tokens (``lead()`` window in batch, ``get()`` on the
+    carried token array on a stream — see the module docstring); one
+    broadcast inner join against the combined first-token dictionary
+    (unigram aliases ∪ first words of multi-word aliases, flagged
+    is_uni/is_first) keeps only positions that can start a match; one
+    explode emits the unigram hit (the token string itself) and the
+    multi-word candidates; one broadcast join against the alias set
+    finalizes. Multi-word grams are only built at positions whose token
+    starts some multi-word alias, so unigram-heavy text allocates almost
+    no gram strings. A vocabulary without unigrams or without multi-word
+    aliases needs no special case: that side of the dictionary is empty.
     """
     ns = list(gram_lengths) if gram_lengths is not None else _gram_lengths(alias_grams)
+    max_n = max(ns, default=1)
+    multi_ns = [n for n in ns if n >= 2]
     toks = turns.select(*keys, tokens_col(F.col(text_col)).alias("toks"))
 
-    if strategy == "lead" and not single_scan:
-        return _extract_lead(toks, alias_grams, keys, ns)
-
-    if strategy == "fused" and not single_scan:
-        return _extract_fused(toks, alias_grams, keys, ns)
-
-    if strategy == "slice" and not single_scan:
-        return _extract_slice(toks, alias_grams, keys, ns)
-
-    if strategy == "hash" and not single_scan:
-        return _extract_hash(toks, alias_grams, keys, ns)
-
-    if single_scan:
-        per_n_exprs = [
-            (
-                f"CASE WHEN size(toks) >= {n} THEN "
-                f"transform(sequence(1, size(toks)-{n}+1), "
-                f"i -> named_struct('pos', i-1, 'gram', array_join(slice(toks, i, {n}), ' '))) "
-                f"ELSE array() END"
-            )
-            for n in ns
-        ]
-        grams_one = toks.select(
-            *keys,
-            F.explode(F.expr("concat(" + ", ".join(per_n_exprs) + ")")).alias("g"),
-        ).select(*keys, F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
-        return grams_one.join(
-            F.broadcast(alias_grams.select("gram", "n_words")), on="gram", how="inner"
-        ).select(
-            *keys,
-            F.col("pos").cast("int").alias("pos"),
-            F.col("n_words").cast("int").alias("n_words"),
-            F.col("gram").alias("alias_lc"),
-        )
-
-    # one union branch per alias length: each branch is explode + broadcast
-    # join fused into the same whole-stage-codegen pipeline; measured 2.3x
-    # faster at 600k turns than building a single concat'd gram array per
-    # row (big per-row allocations) and 1.6x faster than a first-word
-    # prefix-filtered two-phase join. sequence(a,b) with a>b is DESCENDING
-    # in Spark, hence the explicit size guard.
-    per_n = []
-    for n in ns:
-        branch = toks.select(
-            *keys,
-            F.explode(
-                F.expr(
-                    f"CASE WHEN size(toks) >= {n} THEN "
-                    f"transform(sequence(1, size(toks)-{n}+1), "
-                    f"i -> named_struct('pos', i-1, 'gram', array_join(slice(toks, i, {n}), ' '))) "
-                    f"ELSE array() END"
-                )
-            ).alias("g"),
-        ).select(*keys, F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
-        per_n.append(branch)
-
-    all_grams = per_n[0]
-    for b in per_n[1:]:
-        all_grams = all_grams.unionByName(b)
-
-    matched = all_grams.join(
-        F.broadcast(alias_grams.select("gram", "n_words")), on="gram", how="inner"
-    )
-    return matched.select(
-        *keys,
-        F.col("pos").cast("int").alias("pos"),
-        F.col("n_words").cast("int").alias("n_words"),
-        F.col("gram").alias("alias_lc"),
-    )
-
-
-def _extract_fused(toks: DataFrame, alias_grams: DataFrame,
-                   keys: Sequence[str], ns: list[int]) -> DataFrame:
-    """'fused' strategy: ONE scan + ONE positions explode for BOTH the
-    unigram and the multi-word branches — no union of branches (Spark has
-    no cross-branch common-subexpression elimination, so 'lead'/'slice'
-    tokenize and explode the corpus twice), and no window sort ('slice'
-    form: each position carries its following-token window via slice()).
-
-    Shape: explode positions once with their token window; one broadcast
-    inner join against the COMBINED first-token dictionary (unigram
-    aliases ∪ first words of multi-word aliases, flagged is_uni/is_first)
-    keeps only positions that can start any match; candidate grams for
-    every alias length explode from the surviving positions (unigram
-    candidates reuse the token string — no new allocation); one broadcast
-    join against the alias set finalizes. Output identical to
-    'lead'/'union'/'slice'/'hash' (tests assert equality)."""
-    max_n = max(ns) if ns else 1
-    multi_ns = [n for n in ns if n >= 2]
-    if not multi_ns:
-        # no multi-word aliases: plain posexplode + join, no windows at all
-        return _extract_lead(toks, alias_grams, keys, ns)
+    if turns.isStreaming:
+        rows = toks.select(*keys, "toks", F.posexplode("toks").alias("pos", "w"))
+        following = [F.get("toks", F.col("pos") + i).alias(f"w{i}")
+                     for i in range(1, max_n)]
+    else:
+        rows = toks.select(*keys, F.posexplode("toks").alias("pos", "w"))
+        win = Window.partitionBy(*keys).orderBy("pos")
+        following = [F.lead("w", i).over(win).alias(f"w{i}")
+                     for i in range(1, max_n)]
+    led = rows.where(F.col("w") != "").select(*keys, "pos", "w", *following)
 
     uni_words = (
         alias_grams.where(F.col("n_words") == 1)
@@ -213,291 +126,14 @@ def _extract_fused(toks: DataFrame, alias_grams: DataFrame,
         .distinct()
         .withColumn("is_first", F.lit(True))
     )
-    dict0 = (
-        uni_words.join(first_words, on="w", how="full_outer")
-        .select(
-            "w",
-            F.coalesce("is_uni", F.lit(False)).alias("is_uni"),
-            F.coalesce("is_first", F.lit(False)).alias("is_first"),
-        )
-        if 1 in ns
-        else first_words.select(
-            "w", F.lit(False).alias("is_uni"), F.col("is_first"))
+    dict0 = uni_words.join(first_words, on="w", how="full_outer").select(
+        "w",
+        F.coalesce("is_uni", F.lit(False)).alias("is_uni"),
+        F.coalesce("is_first", F.lit(False)).alias("is_first"),
     )
-
-    win_rows = toks.select(
-        *keys,
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 1 THEN "
-                "transform(sequence(1, size(toks)), "
-                f"i -> named_struct('pos', i-1, 'win', slice(toks, i, {max_n}))) "
-                "ELSE array() END"
-            )
-        ).alias("g"),
-    ).select(*keys, F.col("g.pos").alias("pos"), F.col("g.win").alias("win")) \
-     .where(F.col("win")[0] != "")
-
-    j = win_rows.join(
-        F.broadcast(dict0), on=win_rows["win"][0] == dict0["w"], how="inner")
-
-    gram_exprs = (
-        [F.when(F.col("is_uni"), F.col("w"))] if 1 in ns else []
-    ) + [
-        F.when(F.col("is_first") & (F.size("win") >= n),
-               F.array_join(F.slice("win", 1, n), " "))
-        for n in multi_ns
-    ]
-    cands = j.select(
-        *keys, "pos", F.explode(F.array(*gram_exprs)).alias("gram")
-    ).where(F.col("gram").isNotNull())
-    return cands.join(
-        F.broadcast(alias_grams.select("gram", "n_words")), on="gram"
-    ).select(
-        *keys, F.col("pos").cast("int").alias("pos"),
-        F.col("n_words").cast("int").alias("n_words"),
-        F.col("gram").alias("alias_lc"),
-    )
-
-
-def _extract_slice(toks: DataFrame, alias_grams: DataFrame,
-                   keys: Sequence[str], ns: list[int]) -> DataFrame:
-    """'slice' strategy: like 'lead' but ZERO window — each exploded token
-    row carries its own following-token window via slice() on the per-turn
-    token array, so there is no partitionBy sort of the token stream at all
-    (the 'lead' form needs a within-partition sort of every token row; on a
-    bandwidth-bound box that sort is the scaling cap). Output is identical
-    to 'lead'/'union' (tests assert equality)."""
-    max_n = max(ns) if ns else 1
-    win_rows = toks.select(
-        *keys,
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 1 THEN "
-                "transform(sequence(1, size(toks)), "
-                f"i -> named_struct('pos', i-1, 'win', slice(toks, i, {max_n}))) "
-                "ELSE array() END"
-            )
-        ).alias("g"),
-    ).select(*keys, F.col("g.pos").alias("pos"), F.col("g.win").alias("win")) \
-     .where(F.col("win")[0] != "")
-
-    uni = (
-        win_rows.select(*keys, "pos", F.col("win")[0].alias("w"))
-        .join(
-            F.broadcast(
-                alias_grams.where(F.col("n_words") == 1)
-                .select(F.col("gram").alias("w"), "n_words")
-            ),
-            on="w",
-        ).select(*keys, "pos", F.col("n_words").cast("int").alias("n_words"),
-                 F.col("w").alias("alias_lc"))
-        if 1 in ns
-        else None
-    )
-    multi_ns = [n for n in ns if n >= 2]
-    if not multi_ns:
-        return uni if uni is not None else win_rows.limit(0).select(
-            *keys, F.col("pos").cast("int").alias("pos"),
-            F.lit(0).alias("n_words"), F.col("win")[0].alias("alias_lc"))
-
-    first_words = (
-        alias_grams.where(F.col("n_words") >= 2)
-        .select(F.split("gram", " ")[0].alias("w"))
-        .distinct()
-    )
-    cand = win_rows.withColumn("w", F.col("win")[0]).join(
-        F.broadcast(first_words), on="w", how="left_semi")
-
-    gram_exprs = [
-        F.when(F.size("win") >= n, F.array_join(F.slice("win", 1, n), " "))
-        for n in multi_ns
-    ]
-    multi_grams = cand.select(
-        *keys, "pos", F.explode(F.array(*gram_exprs)).alias("gram")
-    ).where(F.col("gram").isNotNull())
-    multi = multi_grams.join(
-        F.broadcast(alias_grams.where(F.col("n_words") >= 2).select("gram", "n_words")),
-        on="gram",
-    ).select(*keys, "pos", F.col("n_words").cast("int").alias("n_words"),
-             F.col("gram").alias("alias_lc"))
-
-    out = multi if uni is None else uni.unionByName(multi)
-    return out.select(
-        *keys, F.col("pos").cast("int").alias("pos"),
-        F.col("n_words").cast("int").alias("n_words"), "alias_lc"
-    )
-
-
-def _extract_hash(toks: DataFrame, alias_grams: DataFrame,
-                  keys: Sequence[str], ns: list[int]) -> DataFrame:
-    """'hash' strategy: slice-windowed (zero sort, zero shuffle) AND
-    zero gram-string construction — multi-word candidates join on
-    (n_words, xxhash64(word_0..word_{n-1})) LONG keys instead of building a
-    concat'd gram string per candidate position. The matched surface form
-    is recovered from the broadcast side (exact dictionary match, so the
-    broadcast gram IS the surface text). Collision odds are
-    ~candidates x vocab / 2^64 — immaterial; the equality tests vs
-    'lead'/'union' would catch any.
-
-    Rationale: at 600k turns the 'lead'/'slice' forms allocate millions of
-    multi-gram strings only to hash-and-discard them in the broadcast probe;
-    on a memory-bandwidth-bound box those allocations are the scaling cap
-    (cf. BENCH.md round-1 analysis). Hashing the window words directly keeps
-    the hot path in fixed-width longs."""
-    max_n = max(ns) if ns else 1
-    win_rows = toks.select(
-        *keys,
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 1 THEN "
-                "transform(sequence(1, size(toks)), "
-                f"i -> named_struct('pos', i-1, 'win', slice(toks, i, {max_n}))) "
-                "ELSE array() END"
-            )
-        ).alias("g"),
-    ).select(*keys, F.col("g.pos").alias("pos"), F.col("g.win").alias("win")) \
-     .where(F.col("win")[0] != "")
-
-    uni = (
-        win_rows.select(*keys, "pos", F.col("win")[0].alias("w"))
-        .join(
-            F.broadcast(
-                alias_grams.where(F.col("n_words") == 1)
-                .select(F.col("gram").alias("w"), "n_words")
-            ),
-            on="w",
-        ).select(*keys, "pos", F.col("n_words").cast("int").alias("n_words"),
-                 F.col("w").alias("alias_lc"))
-        if 1 in ns
-        else None
-    )
-    multi_ns = [n for n in ns if n >= 2]
-    if not multi_ns:
-        return uni if uni is not None else win_rows.limit(0).select(
-            *keys, F.col("pos").cast("int").alias("pos"),
-            F.lit(0).alias("n_words"), F.col("win")[0].alias("alias_lc"))
-
-    first_words = (
-        alias_grams.where(F.col("n_words") >= 2)
-        .select(F.split("gram", " ")[0].alias("w"))
-        .distinct()
-    )
-    cand = win_rows.withColumn("w", F.col("win")[0]).join(
-        F.broadcast(first_words), on="w", how="left_semi")
-
-    # candidate (n, hash-of-first-n-window-words) pairs — longs, no strings
-    hash_exprs = [
-        F.struct(
-            F.lit(n).alias("n"),
-            F.when(F.size("win") >= n,
-                   F.xxhash64(*[F.col("win")[i] for i in range(n)])).alias("h"),
-        )
-        for n in multi_ns
-    ]
-    cand_h = cand.select(
-        *keys, "pos", F.explode(F.array(*hash_exprs)).alias("g")
-    ).select(*keys, "pos", F.col("g.n").alias("_n"), F.col("g.h").alias("_h")) \
-     .where(F.col("_h").isNotNull())
-
-    # broadcast side: same hash over the alias's own words
-    words = F.split(F.col("gram"), " ")
-    rel = None
-    for n in multi_ns:
-        r = (
-            alias_grams.where(F.col("n_words") == n)
-            .select(
-                F.lit(n).alias("_n"),
-                F.xxhash64(*[words[i] for i in range(n)]).alias("_h"),
-                F.col("gram"), F.col("n_words"),
-            )
-        )
-        rel = r if rel is None else rel.unionByName(r)
-
-    multi = cand_h.join(F.broadcast(rel), on=["_n", "_h"], how="inner").select(
-        *keys, "pos", F.col("n_words").cast("int").alias("n_words"),
-        F.col("gram").alias("alias_lc"),
-    )
-
-    out = multi if uni is None else uni.unionByName(multi)
-    return out.select(
-        *keys, F.col("pos").cast("int").alias("pos"),
-        F.col("n_words").cast("int").alias("n_words"), "alias_lc"
-    )
-
-
-def _extract_lead(toks: DataFrame, alias_grams: DataFrame,
-                  keys: Sequence[str], ns: list[int]) -> DataFrame:
-    """'lead' strategy: token rows + lead() window + first-word-filtered
-    multi-gram construction (see extract_mentions docstring).
-
-    Single-pass form (r6): the unigram and multi-word branches used to be
-    separate subtrees unioned at the end; Spark has no cross-branch
-    common-subexpression elimination, so the scan + tokenize + posexplode
-    (and, under an upstream repartition, the full-text exchange) ran
-    TWICE. Both branches now come off ONE token-row stream: a single
-    broadcast inner join against the combined first-token dictionary
-    (unigram aliases ∪ first words of multi-word aliases, flagged
-    is_uni/is_first) keeps positions that can start any match, then one
-    explode emits the unigram hit (the token string itself — no new
-    allocation) and/or the lead-windowed multi-gram candidates, finalized
-    by one broadcast join against the alias set. Output is identical
-    (tests assert equality vs 'union'/'single_scan'/'slice'/'hash')."""
-    from pyspark.sql import Window
-
-    max_n = max(ns) if ns else 1
-    tok_rows = toks.select(
-        *keys, F.posexplode("toks").alias("pos", "w")
-    ).where(F.col("w") != "")
-
-    multi_ns = [n for n in ns if n >= 2]
-    if not multi_ns:
-        if 1 not in ns:
-            return tok_rows.limit(0).select(
-                *keys, F.col("pos").cast("int").alias("pos"),
-                F.lit(0).alias("n_words"), F.col("w").alias("alias_lc"))
-        return (
-            tok_rows.join(
-                F.broadcast(
-                    alias_grams.where(F.col("n_words") == 1)
-                    .select(F.col("gram").alias("w"), "n_words")
-                ),
-                on="w",
-            ).select(*keys, F.col("pos").cast("int").alias("pos"),
-                     F.col("n_words").cast("int").alias("n_words"),
-                     F.col("w").alias("alias_lc"))
-        )
-
-    w = Window.partitionBy(*keys).orderBy("pos")
-    lead_cols = [F.lead("w", i).over(w).alias(f"w{i}") for i in range(1, max_n)]
-    led = tok_rows.select(*keys, "pos", "w", *lead_cols)
-
-    first_words = (
-        alias_grams.where(F.col("n_words") >= 2)
-        .select(F.split("gram", " ")[0].alias("w"))
-        .distinct()
-        .withColumn("is_first", F.lit(True))
-    )
-    if 1 in ns:
-        uni_words = (
-            alias_grams.where(F.col("n_words") == 1)
-            .select(F.col("gram").alias("w"), F.lit(True).alias("is_uni"))
-        )
-        dict0 = (
-            uni_words.join(first_words, on="w", how="full_outer")
-            .select(
-                "w",
-                F.coalesce("is_uni", F.lit(False)).alias("is_uni"),
-                F.coalesce("is_first", F.lit(False)).alias("is_first"),
-            )
-        )
-    else:
-        dict0 = first_words.select(
-            "w", F.lit(False).alias("is_uni"), F.col("is_first"))
-
     cand = led.join(F.broadcast(dict0), on="w", how="inner")
 
-    gram_exprs = [F.when(F.col("is_uni"), F.col("w"))] if 1 in ns else []
+    gram_exprs = [F.when(F.col("is_uni"), F.col("w"))]
     for n in multi_ns:
         parts = ["w"] + [f"w{i}" for i in range(1, n)]
         gram_exprs.append(
@@ -514,68 +150,6 @@ def _extract_lead(toks: DataFrame, alias_grams: DataFrame,
         F.col("n_words").cast("int").alias("n_words"),
         F.col("gram").alias("alias_lc"),
     )
-
-
-def extract_mentions_arrow(
-    turns: DataFrame,
-    alias_grams: DataFrame,
-    keys: Sequence[str] = DEFAULT_KEYS,
-    text_col: str = "text",
-) -> DataFrame:
-    """Arrow-batched mapInPandas dictionary matcher (same output contract).
-
-    The normalized alias set is shipped as a Spark broadcast variable; each
-    Arrow batch is tokenized with vectorized pandas string ops and probed
-    against the per-executor hash dictionary. No per-row Python dispatch —
-    the UDF is invoked once per record batch (north rule M8).
-    """
-    import re
-
-    spark = turns.sparkSession
-    gram_rows = alias_grams.select("gram", "n_words").collect()
-    gram_set = frozenset(r["gram"] for r in gram_rows)
-    ns = sorted({r["n_words"] for r in gram_rows})
-    bc = spark.sparkContext.broadcast((gram_set, ns))
-
-    key_fields = ", ".join(
-        f"{k} {turns.schema[k].dataType.simpleString()}" for k in keys
-    )
-    out_schema = f"{key_fields}, pos int, n_words int, alias_lc string"
-    norm_re = re.compile(r"[^a-z0-9]+")
-
-    def matcher(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grams, lens = bc.value
-        for pdf in batches:
-            out_keys: dict[str, list] = {k: [] for k in keys}
-            pos_l: list[int] = []
-            n_l: list[int] = []
-            al_l: list[str] = []
-            texts = pdf[text_col].fillna("").str.lower().map(
-                lambda s: norm_re.sub(" ", s).strip()
-            )
-            key_vals = [pdf[k].tolist() for k in keys]
-            for row_i, t in enumerate(texts.tolist()):
-                toks = t.split(" ") if t else []
-                sz = len(toks)
-                for n in lens:
-                    if sz < n:
-                        continue
-                    if n == 1:
-                        cand = toks
-                    else:
-                        cand = [" ".join(toks[i : i + n]) for i in range(sz - n + 1)]
-                    for i, g in enumerate(cand):
-                        if g in grams:
-                            for kidx, k in enumerate(keys):
-                                out_keys[k].append(key_vals[kidx][row_i])
-                            pos_l.append(i)
-                            n_l.append(n)
-                            al_l.append(g)
-            out = pd.DataFrame({**out_keys, "pos": pos_l, "n_words": n_l,
-                                "alias_lc": al_l})
-            yield out
-
-    return turns.mapInPandas(matcher, schema=out_schema)
 
 
 def resolve_longest_match(

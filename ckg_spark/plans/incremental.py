@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from ..operators import extract as X
 from ..operators import link as L
 from ..operators import materialize as M
-from ..streaming.ingest import _batch_linked
+from ..streaming.ingest import linked_mentions
 from . import table as T
 
 
@@ -107,8 +107,8 @@ def sync_mention_edges(
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
     delta = spark.read.parquet(*new_files)
-    linked = _batch_linked(delta, alias_grams, alias_table,
-                           vocab_tables.get("stoplist"), canonical)
+    linked = linked_mentions(delta, alias_grams, alias_table,
+                             vocab_tables.get("stoplist"), canonical)
     edges = M.mention_edges(linked)
     if comention:
         # PARTIAL co-mention counts for this delta; exact totals come

@@ -43,7 +43,6 @@ def run_pipeline(
     out_dir: str,
     longest_match: bool = False,
     keep: str = "best",
-    use_arrow_extractor: bool = False,
     conv_partitions: int | None = None,
     graph_table_dir: str | None = None,
 ) -> PipelineResult:
@@ -77,8 +76,7 @@ def run_pipeline(
         t = transcripts
         if conv_partitions:
             t = t.repartition(conv_partitions, "conv_id")
-        extractor = X.extract_mentions_arrow if use_arrow_extractor else X.extract_mentions
-        m = extractor(t, alias_grams)
+        m = X.extract_mentions(t, alias_grams)
         if longest_match:
             m = X.resolve_longest_match(m)
         mentions = LIN.write_stage(m, out_dir, "10_mentions", run_id)

@@ -637,22 +637,20 @@ def read_files(spark: SparkSession, table_dir: str, files: list[str],
             df = df.withColumn(c, F.lit(None).cast(ptypes.get(c, "string")))
         return df
 
-    if not files:
-        # empty selection (e.g. an idle incremental sync): an empty frame
-        # with the snapshot's schema, never None
-        if not m["files"]:
-            raise ValueError(
-                f"snapshot v{m['version']} has no data files to derive a "
-                "schema from")
-        f0 = m["files"][0]
-        df = attach(reader.parquet(f0), sorted(fparts.get(f0, {}).items()))
-        return df.where(F.lit(False))
+    # empty selection (e.g. an idle incremental sync): an empty frame with
+    # the snapshot's schema, never None; an evolved table's schema spans
+    # every era, so it comes from all files, otherwise the first suffices
+    scan = files or (m["files"] if evolved else m["files"][:1])
+    if not scan:
+        raise ValueError(
+            f"snapshot v{m['version']} has no data files to derive a "
+            "schema from")
     groups: dict[tuple, list[str]] = {}
-    for f in files:
+    for f in scan:
         groups.setdefault(tuple(sorted(fparts.get(f, {}).items())), []).append(f)
     out = None
     for key, fs in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
         df = attach(reader.parquet(*fs), key)
         out = df if out is None else out.unionByName(
             df, allowMissingColumns=evolved)
-    return out
+    return out if files else out.where(F.lit(False))

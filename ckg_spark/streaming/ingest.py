@@ -12,7 +12,9 @@ location gives exactly-once per file; the lineage table records batch ids.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Sequence
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import extract as X
 from ..operators import link as L
@@ -44,9 +46,9 @@ def stream_mention_edges(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        edges = _batch_edges(batch_df, alias_grams, alias_table, stoplist,
-                             canonical)
-        edges.write.mode("append").parquet(out_dir)
+        linked = linked_mentions(batch_df, alias_grams, alias_table, stoplist,
+                                 canonical)
+        M.mention_edges(linked).write.mode("append").parquet(out_dir)
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -56,28 +58,24 @@ def stream_mention_edges(
     )
 
 
-def _batch_linked(batch_df: DataFrame, alias_grams, alias_table, stoplist,
-                  canonical: DataFrame | None) -> DataFrame:
-    """One micro-batch through the identical batch operators:
-    extract -> link -> canonicalize; returns the canonicalized mention
-    stream both edge families derive from."""
-    from pyspark.sql import functions as F
+def linked_mentions(turns: DataFrame, alias_grams, alias_table, stoplist,
+                    canonical: DataFrame | None = None,
+                    keys: Sequence[str] = X.DEFAULT_KEYS) -> DataFrame:
+    """The one extract -> link -> canonicalize composition shared by the
+    stream sinks, ``plans.incremental`` and ``streaming.stateful``; returns
+    the canonicalized mention stream both edge families derive from.
+    ``turns`` may be a batch or a streaming DataFrame.
 
-    mentions = X.extract_mentions(batch_df, alias_grams)
-    linked = L.link_mentions(mentions, alias_table, stoplist, keep="best")
-    cmap = (
-        canonical
-        if canonical is not None
-        else linked.select("ident").distinct()
-        .select("ident", F.col("ident").alias("canonical_id"))
-    )
-    return M.canonicalize_linked(linked, cmap)
-
-
-def _batch_edges(batch_df: DataFrame, alias_grams, alias_table, stoplist,
-                 canonical: DataFrame | None) -> DataFrame:
-    return M.mention_edges(
-        _batch_linked(batch_df, alias_grams, alias_table, stoplist, canonical))
+    ``canonical=None`` means every ident is its own canonical id, so
+    ``canonical_id`` is a copy of ``ident`` (no identity map, no join).
+    The stages are called through their modules so a tracer can wrap
+    ``X.extract_mentions`` and ``L.link_mentions``."""
+    mentions = X.extract_mentions(turns, alias_grams, keys=keys)
+    linked = L.link_mentions(mentions, alias_table, stoplist, keys=keys,
+                             keep="best")
+    if canonical is None:
+        return linked.withColumn("canonical_id", F.col("ident"))
+    return M.canonicalize_linked(linked, canonical)
 
 
 def stream_mention_edges_snapshot(
@@ -157,8 +155,8 @@ def stream_mention_edges_snapshot(
         if mapping_table_dir is not None:
             from ..plans.canon import read_canonical_mapping
             cmap = read_canonical_mapping(spark, mapping_table_dir)
-        linked = _batch_linked(batch_df, alias_grams, alias_table, stoplist,
-                               cmap)
+        linked = linked_mentions(batch_df, alias_grams, alias_table, stoplist,
+                                 cmap)
         edges = M.mention_edges(linked)
         if comention:
             edges = edges.unionByName(M.comention_edges(linked))

@@ -29,6 +29,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import extract as X
 from ..operators import link as L
+from .ingest import linked_mentions
 
 
 def linked_mention_stream(
@@ -36,22 +37,23 @@ def linked_mention_stream(
     vocab_tables: dict,
     keys: Iterable[str] = ("conv_id", "turn_idx", "ts"),
 ) -> DataFrame:
-    """Stateless extract+link over a streaming turns DataFrame.
+    """Stateless extract -> link over a streaming turns DataFrame, through
+    the shared ``ingest.linked_mentions`` composition (no canonical map, so
+    ``canonical_id`` equals ``ident``).
 
-    Both stages are streaming-safe by construction: extraction is a
-    per-row explode + broadcast join (no window functions on the stream)
-    and linking is broadcast-only, so the plan stays incrementalizable.
-    Uses the 'slice' strategy because 'lead' needs a window over the
-    stream, which Structured Streaming forbids.
+    Both stages are streaming-safe: on a streaming input the extractor
+    takes its stream form (each token row reads its following tokens from
+    the carried token array; Structured Streaming forbids the batch form's
+    window) and linking is broadcast-only, so the plan stays
+    incrementalizable. On a batch input the same call takes the batch form,
+    which is what the tests compare the stream against.
     """
-    alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
-    alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    mentions = X.extract_mentions(
-        stream_turns, alias_grams, keys=tuple(keys), strategy="slice"
-    )
-    return L.link_mentions(
-        mentions, alias_table, vocab_tables.get("stoplist"), keys=tuple(keys),
-        keep="best",
+    return linked_mentions(
+        stream_turns,
+        X.prepare_alias_grams(vocab_tables["aliases"]),
+        L.prepare_alias_table(vocab_tables["aliases"]),
+        vocab_tables.get("stoplist"),
+        keys=tuple(keys),
     )
 
 

@@ -233,7 +233,7 @@ def test_sync_graph_matches_batch_under_identity_drift(spark, tmp_path,
     from ckg_spark.operators import link as L
     from ckg_spark.operators import materialize as M
     from ckg_spark.operators.canonicalize import canonical_mapping
-    from ckg_spark.streaming.ingest import _batch_linked
+    from ckg_spark.streaming.ingest import linked_mentions
     from ckg_spark.vocab import build_vocab
 
     vb = build_vocab(n_entities=120, seed=7)  # matches conftest vocab_tables
@@ -246,8 +246,8 @@ def test_sync_graph_matches_batch_under_identity_drift(spark, tmp_path,
     # pick two idents that really emit edges, so the merge bites
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    probe = _batch_linked(chunks[0], alias_grams, alias_table,
-                          vocab_tables["stoplist"], None)
+    probe = linked_mentions(chunks[0], alias_grams, alias_table,
+                            vocab_tables["stoplist"], None)
     ia, ib = [r["ident"] for r in
               probe.select("ident").distinct().orderBy("ident").limit(2).collect()]
 
@@ -270,8 +270,8 @@ def test_sync_graph_matches_batch_under_identity_drift(spark, tmp_path,
 
     all_idents = vocab_tables["aliases"].select("ident").distinct()
     full_map = canonical_mapping(_edges(spark, [(ia, ib)]), all_idents)
-    linked = _batch_linked(T.read(spark, tdir), alias_grams, alias_table,
-                           vocab_tables["stoplist"], full_map)
+    linked = linked_mentions(T.read(spark, tdir), alias_grams, alias_table,
+                             vocab_tables["stoplist"], full_map)
     want = M.mention_edges(linked).unionByName(M.comention_edges(linked))
 
     key = lambda df: sorted(map(tuple, df.select(
@@ -297,7 +297,7 @@ def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
     from ckg_spark.operators import materialize as M
     from ckg_spark.operators.canonicalize import canonical_mapping
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from ckg_spark.streaming.ingest import (_batch_linked,
+    from ckg_spark.streaming.ingest import (linked_mentions,
                                             stream_mention_edges_snapshot)
     from ckg_spark.vocab import build_vocab
 
@@ -310,8 +310,8 @@ def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
 
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    probe = _batch_linked(spark.createDataFrame(pdf1), alias_grams,
-                          alias_table, vocab_tables["stoplist"], None)
+    probe = linked_mentions(spark.createDataFrame(pdf1), alias_grams,
+                            alias_table, vocab_tables["stoplist"], None)
     ia, ib = [r["ident"] for r in probe.select("ident").distinct()
               .orderBy("ident").limit(2).collect()]
 
@@ -346,9 +346,9 @@ def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
     all_idents = vocab_tables["aliases"].select("ident").distinct()
     full_map = canonical_mapping(_edges(spark, [(ia, ib)]), all_idents)
     import pandas as pd
-    linked = _batch_linked(spark.createDataFrame(pd.concat([pdf1, pdf2])),
-                           alias_grams, alias_table,
-                           vocab_tables["stoplist"], full_map)
+    linked = linked_mentions(spark.createDataFrame(pd.concat([pdf1, pdf2])),
+                             alias_grams, alias_table,
+                             vocab_tables["stoplist"], full_map)
     want = M.mention_edges(linked).unionByName(M.comention_edges(linked))
     key = lambda df: sorted(map(tuple, df.select(
         "subj", "pred", "obj", "score").collect()))

@@ -287,7 +287,7 @@ def test_streaming_snapshot_comention_partials_merge_exact(
     from ckg_spark.plans import table as T
     from ckg_spark.plans.incremental import compact_merged, read_merged_edges
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from ckg_spark.streaming.ingest import (_batch_linked,
+    from ckg_spark.streaming.ingest import (linked_mentions,
                                             stream_mention_edges_snapshot)
     from ckg_spark.operators import extract as X
     from ckg_spark.operators import link as L
@@ -311,7 +311,7 @@ def test_streaming_snapshot_comention_partials_merge_exact(
     assert (raw.where("pred = 'CO_MENTIONED_WITH'")
             .groupBy(*EDGE_KEY).count().where("count > 1").count()) > 0
 
-    linked = _batch_linked(
+    linked = linked_mentions(
         spark.createDataFrame(transcripts_pdf),
         X.prepare_alias_grams(vocab_tables["aliases"]),
         L.prepare_alias_table(vocab_tables["aliases"]),

@@ -9,9 +9,10 @@ import pytest
 from ckg_spark.datagen import gen_transcripts
 from ckg_spark.plans import incremental as I
 from ckg_spark.plans import table as T
-from ckg_spark.streaming.ingest import _batch_edges
+from ckg_spark.streaming.ingest import linked_mentions
 from ckg_spark.operators import extract as X
 from ckg_spark.operators import link as L
+from ckg_spark.operators import materialize as M
 from ckg_spark.vocab import build_vocab, vocab_to_spark
 
 
@@ -49,8 +50,9 @@ def test_sync_matches_full_batch(spark, tmp_path, vocab_tables):
     # the union of delta edges == edges of a single full-batch run
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    full = _batch_edges(T.read(spark, tdir), alias_grams, alias_table,
-                        vocab_tables["stoplist"], None)
+    full = M.mention_edges(linked_mentions(
+        T.read(spark, tdir), alias_grams, alias_table,
+        vocab_tables["stoplist"], None))
     assert _edge_set(T.read(spark, edir)) == _edge_set(full)
     # every edge commit is stamped with the source version it consumed
     stamps = [s["properties"].get("transcripts_version")
@@ -122,8 +124,6 @@ def test_comention_partials_merge_to_exact_totals(spark, tmp_path,
     deltas. Appending PARTIAL counts per sync and summing on read must
     equal a single full-batch run; compact_merged folds partials without
     changing the view or losing the sync high-water mark."""
-    from ckg_spark.operators import materialize as MZ
-    from ckg_spark.streaming.ingest import _batch_linked
 
     tdir = str(tmp_path / "transcripts")
     edir = str(tmp_path / "edges")
@@ -134,9 +134,9 @@ def test_comention_partials_merge_to_exact_totals(spark, tmp_path,
 
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    linked = _batch_linked(T.read(spark, tdir), alias_grams, alias_table,
-                           vocab_tables["stoplist"], None)
-    full = MZ.mention_edges(linked).unionByName(MZ.comention_edges(linked))
+    linked = linked_mentions(T.read(spark, tdir), alias_grams, alias_table,
+                             vocab_tables["stoplist"], None)
+    full = M.mention_edges(linked).unionByName(M.comention_edges(linked))
 
     merged = I.read_merged_edges(spark, edir)
     assert _edge_set(merged) == _edge_set(full)
@@ -153,7 +153,7 @@ def test_comention_partials_merge_to_exact_totals(spark, tmp_path,
     r = I.sync_mention_edges(spark, tdir, vocab_tables, edir,
                              comention=True)
     assert r.from_version == 3 and r.n_edges > 0
-    linked4 = _batch_linked(T.read(spark, tdir), alias_grams, alias_table,
-                            vocab_tables["stoplist"], None)
-    full4 = MZ.mention_edges(linked4).unionByName(MZ.comention_edges(linked4))
+    linked4 = linked_mentions(T.read(spark, tdir), alias_grams, alias_table,
+                              vocab_tables["stoplist"], None)
+    full4 = M.mention_edges(linked4).unionByName(M.comention_edges(linked4))
     assert _edge_set(I.read_merged_edges(spark, edir)) == _edge_set(full4)

@@ -73,16 +73,18 @@ def test_determinism_across_parallelism(spark, vocab, vocab_tables,
     pd.testing.assert_frame_equal(lo, hi)
 
 
-def test_pipeline_arrow_extractor_equivalent(spark, vocab_tables, transcripts_df,
+def test_pipeline_arrow_extractor_equivalent(spark, vocab, vocab_tables,
+                                             transcripts_pdf, transcripts_df,
                                              tmp_path):
-    """The Arrow mapInPandas extractor yields the identical triple set."""
-    r_jvm = run_pipeline(spark, transcripts_df, vocab_tables, str(tmp_path / "j"))
-    r_arrow = run_pipeline(spark, transcripts_df, vocab_tables, str(tmp_path / "a"),
-                           use_arrow_extractor=True)
+    """keep='all' linking (every candidate id per mention, the reference's
+    1:N semantics) yields the oracle's triple set and scores."""
+    res = run_pipeline(spark, transcripts_df, vocab_tables, str(tmp_path / "a"),
+                       keep="all")
     k = ["subj", "pred", "obj", "source", "score", "evidence_type"]
-    jv = r_jvm.edges.toPandas()[k].sort_values(k).reset_index(drop=True)
-    ar = r_arrow.edges.toPandas()[k].sort_values(k).reset_index(drop=True)
-    pd.testing.assert_frame_equal(jv, ar)
+    got = res.edges.toPandas()[k].sort_values(k).reset_index(drop=True)
+    exp = oracle_triples(transcripts_pdf, vocab, keep="all")
+    exp = exp[k].sort_values(k).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
 def test_pipeline_longest_match_matches_oracle(spark, vocab, vocab_tables,

@@ -589,3 +589,19 @@ def test_read_files_mixed_partition_entries_union(spark, tmp_path):
     # unknown files still refused loudly
     with pytest.raises(ValueError, match="not in snapshot"):
         T.read_files(spark, d, ["nope.parquet"])
+
+
+def test_read_files_empty_selection_on_evolved_schema(spark, tmp_path):
+    """An idle incremental read (zero files selected) of a schema-evolved
+    table has the same columns and types as a read of all its files, not
+    just the first era's."""
+    d = str(tmp_path / "tbl")
+    T.append(_df(spark, [1, 2]), d)                       # k, v
+    T.append(spark.createDataFrame(
+        pd.DataFrame({"k": [3], "v": [30], "w": ["x"]})), d)  # + w
+    assert T.read_manifest(d).get("schema_evolved")
+    idle = T.read_files(spark, d, [])
+    full = T.read_files(spark, d, T.read_manifest(d)["files"])
+    assert idle.count() == 0
+    assert sorted(idle.dtypes) == sorted(full.dtypes)
+    assert sorted(idle.dtypes) == sorted(T.read(spark, d).dtypes)

@@ -38,7 +38,6 @@ def main() -> int:
     ap.add_argument("--conv-partitions", type=int, default=None,
                     help="explicit hash(conv_id) repartition width")
     ap.add_argument("--longest-match", action="store_true")
-    ap.add_argument("--arrow-extractor", action="store_true")
     ap.add_argument("--cpus", type=int, default=None, help="local mode cores")
     args = ap.parse_args()
 
@@ -72,7 +71,6 @@ def main() -> int:
     res = run_pipeline(
         spark, transcripts, tables, args.out,
         longest_match=args.longest_match,
-        use_arrow_extractor=args.arrow_extractor,
         conv_partitions=args.conv_partitions,
     )
     n_edges = res.edges.count()
