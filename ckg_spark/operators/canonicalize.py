@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .ckpt import checkpoint_reset_stats as _ckpt
+from .ckpt import checkpoint_reset_stats as _ckpt, collect_if_small
 
 
 def _driver_union_find(pairs: list[tuple[str, str]]) -> dict[str, str]:
@@ -234,9 +234,14 @@ def incremental_canonical_mapping(
     parts = incremental_canonical_parts(
         prev_mapping, new_edges, new_idents=new_idents, src=src, dst=dst,
         driver_threshold=driver_threshold)
-    mapping = (parts["untouched"].unionByName(parts["changed"])
-               .unionByName(parts["isolated"]))
-    return mapping, parts["remaps"]
+    return post_sync_mapping(parts), parts["remaps"]
+
+
+def post_sync_mapping(parts: dict) -> DataFrame:
+    """The full mapping after a fold: untouched ∪ changed ∪ isolated
+    (disjoint by construction)."""
+    return (parts["untouched"].unionByName(parts["changed"])
+            .unionByName(parts["isolated"]))
 
 
 def incremental_canonical_parts(
@@ -248,104 +253,78 @@ def incremental_canonical_parts(
     driver_threshold: int | None = DRIVER_CC_MAX_EDGES,
 ) -> dict:
     """The pieces of ``incremental_canonical_mapping`` before the final
-    union, for callers that must avoid touching the O(history) part:
+    union (``post_sync_mapping``), for callers that must avoid touching
+    the O(history) part:
 
     - ``changed``: (ident, canonical_id) for every ident of an affected
       component or new edge — O(delta + touched membership) rows;
-    - ``isolated``: brand-new edge-less idents self-mapped — O(new idents);
-    - ``affected_prev``: the prior rows of touched components (what
-      ``changed`` supersedes) — lets a sync diff changed-vs-prior without
-      joining the full mapping;
-    - ``untouched``: prior rows passing through (LAZY anti-join — only the
-      full-mapping API evaluates it);
-    - ``remaps``: distinct (old_canonical_id, new_canonical_id) merge log.
+    - ``isolated``: brand-new edge-less idents self-mapped;
+    - ``untouched``: prior rows passing through;
+    - ``remaps``: distinct (old_canonical_id, new_canonical_id) merge log;
+    - ``delta``: the rows a merge-on-read table appends: ``changed`` rows
+      whose prior canon differs (diffed over touched components only),
+      plus ``isolated``; ``n_delta`` and ``n_remaps`` count it and remaps.
 
-    A snapshot-table sync appends ``changed``-diff + ``isolated`` only, so
-    its per-sync SHUFFLE work is O(delta); the full prior mapping is
-    scanned once (broadcast semi-join probes; the scan of an
-    entity-dictionary-scale table is the cheap part) and never shuffled.
+    Tiers follow input size. If the prior mapping, the raw ``new_edges``
+    and ``new_idents`` each fit ``DRIVER_PARTS_MAX_ROWS``, each is fetched
+    once (``ckpt.collect_if_small``: the fetch is its size probe; prior
+    mapping first, so big history falls through after one fetch) and the
+    rest — pairs, endpoints, union-find, diff, counts — is Python at no
+    Spark job. Otherwise the distributed plan shuffles O(delta), only
+    probes the prior mapping, and counts ``delta`` and ``remaps`` on one
+    checkpoint each. Tests assert both tiers agree.
     """
     spark = new_edges.sparkSession
+    cap = min(driver_threshold or 0, DRIVER_PARTS_MAX_ROWS)
+    prev_rows = ([] if prev_mapping is None else
+                 _rows_if_small(prev_mapping.select("ident", "canonical_id"),
+                                cap))
+    edge_rows = (_rows_if_small(new_edges.select(src, dst), cap)
+                 if prev_rows is not None else None)
+    ident_rows = None
+    if edge_rows is not None:
+        ident_rows = ([] if new_idents is None else _rows_if_small(
+            new_idents.select(new_idents.columns[0]), cap))
+    if ident_rows is not None:
+        return _driver_incremental_parts(spark, prev_rows, edge_rows,
+                                         ident_rows)
+
     e = (
         new_edges.select(F.col(src).alias("ident_a"), F.col(dst).alias("ident_b"))
         .where(F.col("ident_a") != F.col("ident_b"))
         .distinct()
     )
-    # Driver-scale fast path (same two-tier design as connected_components'
-    # DRIVER_CC_MAX_EDGES): when the delta, the prior mapping and the
-    # ident dictionary all fit under the threshold — probed with truncated
-    # collects that can never flood the driver — the entire parts
-    # computation is a few Python set operations instead of ~a dozen tiny
-    # distributed join/checkpoint jobs, each of which costs fixed
-    # driver-coordination time regardless of data size. Anything oversize
-    # falls through to the distributed path unchanged (tests assert both
-    # paths agree).
-    parts_cap = min(driver_threshold or 0, DRIVER_PARTS_MAX_ROWS)
-    if parts_cap:
-        # cheapest probe first: a truncated COUNT of the prior mapping
-        # (scans at most cap+1 rows, transfers one number), so the normal
-        # at-scale regime — big history, small delta — rejects the fast
-        # path for the price of one trivial job before anything collects
-        prev_small = prev_mapping is None or (
-            prev_mapping.limit(parts_cap + 1).count() <= parts_cap)
-        e_rows = e.limit(parts_cap + 1).collect() if prev_small else []
-        if prev_small and len(e_rows) <= parts_cap:
-            prev_rows = None
-            if prev_mapping is None:
-                prev_rows = []
-            else:
-                collected = (prev_mapping.select("ident", "canonical_id")
-                             .limit(parts_cap + 1).collect())
-                if len(collected) <= parts_cap:
-                    prev_rows = [(r[0], r[1]) for r in collected]
-            if prev_rows is not None:
-                ep = (
-                    new_edges.select(F.col(src).alias("ident"))
-                    .unionByName(new_edges.select(F.col(dst).alias("ident")))
-                    .where(F.col("ident").isNotNull())
-                    .distinct().limit(parts_cap + 1).collect()
-                )
-                ni = {r[0] for r in ep} if len(ep) <= parts_cap else None
-                if ni is not None and new_idents is not None:
-                    extra = (new_idents.select(
-                        F.col(new_idents.columns[0]).alias("ident"))
-                        .where(F.col("ident").isNotNull())
-                        .distinct().limit(parts_cap + 1).collect())
-                    ni = (ni | {r[0] for r in extra}
-                          if len(extra) <= parts_cap else None)
-                if ni is not None:
-                    return _driver_incremental_parts(
-                        spark, [(r[0], r[1]) for r in e_rows], prev_rows, ni)
+    # every RAW edge endpoint counts as observed — a self-loop (a, a)
+    # contributes no CC edge but its vertex must still enter the mapping
+    # (batch canonical_mapping self-maps it via all_idents)
+    ni = (
+        new_edges.select(F.col(src).alias("ident"))
+        .unionByName(new_edges.select(F.col(dst).alias("ident")))
+        .where(F.col("ident").isNotNull())  # a NULL endpoint must not self-map
+        .distinct()
+    )
+    if new_idents is not None:
+        ni = ni.unionByName(
+            new_idents.select(F.col(new_idents.columns[0]).alias("ident"))
+            .where(F.col("ident").isNotNull())
+        ).distinct()
     if prev_mapping is None:
         # first fold: no history means no touched components, no stars, no
         # untouched pass-through and no remaps — short-circuit those to
         # empty literals instead of running ~5 provably-empty join/ckpt
         # jobs (driver-contract q93 pays this fold's fixed cost per bench)
-        prev = spark.createDataFrame([], "ident string, canonical_id string")
-        empty = spark.createDataFrame([], "ident string, canonical_id string")
+        empty = spark.createDataFrame([], _MAPPING_SCHEMA)
         comps = connected_components(e, driver_threshold=driver_threshold)
         changed = _ckpt(
             comps.select("ident", F.col("component").alias("canonical_id")))
-        raw_endpoints = (
-            new_edges.select(F.col(src).alias("ident"))
-            .unionByName(new_edges.select(F.col(dst).alias("ident")))
-            .where(F.col("ident").isNotNull())
-            .distinct()
-        )
-        ni = raw_endpoints
-        if new_idents is not None:
-            ni = ni.unionByName(
-                new_idents.select(F.col(new_idents.columns[0]).alias("ident"))
-                .where(F.col("ident").isNotNull())
-            ).distinct()
         iso = (
             ni.join(changed, on="ident", how="left_anti")
             .select("ident", F.col("ident").alias("canonical_id"))
         )
+        delta = _ckpt(changed.unionByName(iso))
         return {"untouched": empty, "changed": changed, "isolated": iso,
-                "affected_prev": empty,
-                "remaps": spark.createDataFrame(
-                    [], "old_canonical_id string, new_canonical_id string")}
+                "remaps": spark.createDataFrame([], _REMAP_SCHEMA),
+                "delta": delta, "n_delta": delta.count(), "n_remaps": 0}
     prev = prev_mapping.select("ident", "canonical_id")
 
     touched = (
@@ -372,21 +351,6 @@ def incremental_canonical_parts(
         comps.select("ident", F.col("component").alias("canonical_id")))
 
     untouched = prev.join(touched_canons, on="canonical_id", how="left_anti")
-    # every RAW edge endpoint counts as observed — a self-loop (a, a)
-    # contributes no CC edge but its vertex must still enter the mapping
-    # (batch canonical_mapping self-maps it via all_idents)
-    raw_endpoints = (
-        new_edges.select(F.col(src).alias("ident"))
-        .unionByName(new_edges.select(F.col(dst).alias("ident")))
-        .where(F.col("ident").isNotNull())  # a NULL endpoint must not self-map
-        .distinct()
-    )
-    ni = raw_endpoints
-    if new_idents is not None:
-        ni = ni.unionByName(
-            new_idents.select(F.col(new_idents.columns[0]).alias("ident"))
-            .where(F.col("ident").isNotNull())
-        ).distinct()
     # prev is only PROBED (left_semi joins keyed on the ident set — AQE
     # broadcasts the set when it is dictionary-scale and falls back to a
     # shuffle when a backfill-sized delta makes it corpus-scale; NO
@@ -407,32 +371,48 @@ def incremental_canonical_parts(
         .select("ident", F.col("ident").alias("canonical_id"))
     )
 
-    remaps = (
-        affected_prev
-        .join(changed.withColumnRenamed("canonical_id", "new_canonical_id"),
-              on="ident")
-        .where(F.col("canonical_id") != F.col("new_canonical_id"))
-        .select(F.col("canonical_id").alias("old_canonical_id"),
-                "new_canonical_id")
+    old = affected_prev.withColumnRenamed("canonical_id", "_old")
+    remaps = _ckpt(
+        changed.withColumnRenamed("canonical_id", "new_canonical_id")
+        .join(old, on="ident")
+        .where(F.col("_old") != F.col("new_canonical_id"))
+        .select(F.col("_old").alias("old_canonical_id"), "new_canonical_id")
         .distinct()
     )
+    # a changed row is new to the table unless its prior canon in the
+    # affected set already matches (every prior row of a changed ident is
+    # in the affected set)
+    delta = _ckpt(
+        changed.join(old, on="ident", how="left")
+        .where(~F.col("_old").eqNullSafe(F.col("canonical_id")))
+        .select("ident", "canonical_id").unionByName(iso)
+    )
     return {"untouched": untouched.select("ident", "canonical_id"),
-            "changed": changed, "isolated": iso,
-            "affected_prev": affected_prev, "remaps": remaps}
+            "changed": changed, "isolated": iso, "remaps": remaps,
+            "delta": delta, "n_delta": delta.count(),
+            "n_remaps": remaps.count()}
 
 
 _MAPPING_SCHEMA = "ident string, canonical_id string"
 _REMAP_SCHEMA = "old_canonical_id string, new_canonical_id string"
 
 
-def _driver_incremental_parts(spark, e_pairs: list, prev_rows: list,
-                              ni: set) -> dict:
-    """Driver-side rendition of ``incremental_canonical_parts`` for
-    dictionary-scale inputs (see the call site for the probing contract).
-    Semantics identical to the distributed path: union-find over
-    {delta edges} ∪ {stars of touched components} relabels exactly the
-    affected idents; untouched rows pass through; brand-new edge-less
-    idents self-map; remaps log (old -> new) for absorbed components."""
+def _rows_if_small(df: DataFrame, cap: int) -> list[tuple] | None:
+    """``df``'s rows as tuples when it has at most ``cap`` rows (one
+    truncated fetch), else None; a zero cap fetches nothing."""
+    pdf = collect_if_small(df, cap) if cap else None
+    return None if pdf is None else list(pdf.itertuples(index=False,
+                                                        name=None))
+
+
+def _driver_incremental_parts(spark, prev_rows: list, edge_rows: list,
+                              ident_rows: list) -> dict:
+    """Driver-side rendition of ``incremental_canonical_parts`` over the
+    fetched prior mapping, raw edge pairs and new idents. Semantics
+    identical to the distributed path: union-find over {delta edges} ∪
+    {stars of touched components} relabels exactly the affected idents;
+    untouched rows pass through; brand-new edge-less idents self-map;
+    remaps log (old -> new) for absorbed components."""
 
     def _df(rows, schema):
         if not rows:
@@ -441,24 +421,33 @@ def _driver_incremental_parts(spark, e_pairs: list, prev_rows: list,
         # connected_components); every list here is <= driver_threshold
         return F.broadcast(spark.createDataFrame(rows, schema))
 
+    # the distributed path's filters: a NULL endpoint joins no pair and
+    # self-maps nowhere; a self-loop is no CC edge but its vertex is seen
+    e_pairs = sorted({(a, b) for a, b in edge_rows
+                      if a is not None and b is not None and a != b})
+    ni = ({x for pair in edge_rows for x in pair}
+          | {i for (i,) in ident_rows}) - {None}
     prev_map = dict(prev_rows)
-    touched = {a for a, _ in e_pairs} | {b for _, b in e_pairs}
+    touched = {x for pair in e_pairs for x in pair}
     touched_canons = {prev_map[i] for i in touched if i in prev_map}
-    affected = [(i, c) for i, c in prev_rows if c in touched_canons]
+    affected = {i: c for i, c in prev_rows if c in touched_canons}
     changed_map = _driver_union_find(
-        list(e_pairs) + [(i, c) for i, c in affected if i != c])
+        e_pairs + [(i, c) for i, c in affected.items() if i != c])
     untouched = sorted((i, c) for i, c in prev_rows
                        if c not in touched_canons)
     known = prev_map.keys() | changed_map.keys()
     iso = sorted((i, i) for i in ni if i not in known)
-    remaps = sorted({(c, changed_map[i]) for i, c in affected
+    remaps = sorted({(c, changed_map[i]) for i, c in affected.items()
                      if changed_map[i] != c})
+    delta = sorted((i, c) for i, c in changed_map.items()
+                   if affected.get(i) != c) + iso
     return {
         "untouched": _df(untouched, _MAPPING_SCHEMA),
         "changed": _df(sorted(changed_map.items()), _MAPPING_SCHEMA),
         "isolated": _df(iso, _MAPPING_SCHEMA),
-        "affected_prev": _df(sorted(affected), _MAPPING_SCHEMA),
         "remaps": _df(remaps, _REMAP_SCHEMA),
+        "delta": _df(delta, _MAPPING_SCHEMA),
+        "n_delta": len(delta), "n_remaps": len(remaps),
     }
 
 

@@ -16,6 +16,10 @@ DataFrame as a FRESH LogicalRDD scan over the already-materialized internal
 row RDD, so the leaf estimate resets to ``spark.sql.defaultSizeInBytes``
 instead of inheriting the product. Zero extra jobs, zero Python round-trip —
 the rebuilt plan scans the same executor-local checkpoint blocks.
+
+``collect_if_small`` is the other way to pin a frame down: its one truncated
+fetch is both the size probe and the collect of a two-tier operator's
+driver path.
 """
 
 from __future__ import annotations
@@ -42,3 +46,15 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
         return DataFrame(jnew, spark)
     except Exception:
         return ck
+
+
+def collect_if_small(df: DataFrame, cap: int):
+    """``df`` as a pandas frame when it has at most ``cap`` rows, else None.
+
+    One truncated ``limit(cap + 1)`` fetch is both the size probe and the
+    collect: a big input can never flood the driver, and a small one costs
+    one Spark job instead of a count followed by a collect. The fetch goes
+    through Arrow (``toPandas``), ~5x cheaper than Row objects at 500k rows,
+    which is also the price an input just over a cap pays for the probe."""
+    rows = df.limit(cap + 1).toPandas()
+    return rows if len(rows) <= cap else None

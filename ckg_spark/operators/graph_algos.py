@@ -14,7 +14,7 @@ distributed join loop (setting the constant to 0 forces it). The community
 algorithms split the same way (driver below their caps, contraction or a
 refusal above; their ``driver_threshold=0`` forces the distributed path
 where there is one). An input's first size probe is one truncated Arrow
-fetch (``_collect_if_small``). Results are deterministic under any
+fetch (``ckpt.collect_if_small``). Results are deterministic under any
 parallelism.
 """
 
@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .ckpt import checkpoint_reset_stats as _ckpt
+from .ckpt import checkpoint_reset_stats as _ckpt, collect_if_small
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -66,18 +66,6 @@ def hot_node_filtered_edges(edges: DataFrame, max_degree: int = 200) -> DataFram
 # 0.4 GB), and an input just over the cap pays its truncated fetch
 # (0.3-0.5 s at 500k) on top of a ~10 s loop.
 DRIVER_PAGERANK_MAX_EDGES = 500_000
-
-
-def _collect_if_small(df: DataFrame, cap: int):
-    """``df`` as a pandas frame when it has at most ``cap`` rows, else None.
-
-    One truncated ``limit(cap + 1)`` fetch is both the size probe and the
-    collect: a big input can never flood the driver, and a small one costs
-    one Spark job instead of a count followed by a collect. The fetch goes
-    through Arrow (``toPandas``), ~5x cheaper than Row objects at 500k rows,
-    which is also the price an input just over a cap pays for the probe."""
-    rows = df.limit(cap + 1).toPandas()
-    return rows if len(rows) <= cap else None
 
 
 def _driver_pagerank(pairs, seed_ids: list | None, iters: int,
@@ -131,7 +119,7 @@ def _power_iteration(edges: DataFrame, seeds: DataFrame | None, iters: int,
              .distinct())
     cap = DRIVER_PAGERANK_MAX_EDGES
     if cap:
-        rows = _collect_if_small(pairs, cap)
+        rows = collect_if_small(pairs, cap)
         # a null endpoint never joins in the distributed loop; keep its
         # semantics by sending such graphs there
         if rows is not None and rows.isna().any(axis=None):
@@ -139,7 +127,7 @@ def _power_iteration(edges: DataFrame, seeds: DataFrame | None, iters: int,
         seed_ids = None
         if rows is not None and seeds is not None:
             # a null seed never joins either
-            seed_rows = _collect_if_small(
+            seed_rows = collect_if_small(
                 seeds.select("id").where(F.col("id").isNotNull()), cap)
             if seed_rows is None:
                 rows = None
@@ -478,7 +466,7 @@ def louvain(edges: DataFrame, weight_col: str | None = None,
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
     if driver_threshold:
-        rows = _collect_if_small(e, driver_threshold)
+        rows = collect_if_small(e, driver_threshold)
         if rows is not None:
             pairs = list(rows.itertuples(index=False, name=None))
             mapping = _driver_louvain(pairs)
@@ -698,7 +686,7 @@ def greedy_modularity(edges: DataFrame, weight_col: str | None = None,
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
     cap = int(driver_threshold or DRIVER_LOUVAIN_MAX_EDGES)
-    rows = _collect_if_small(e, cap)
+    rows = collect_if_small(e, cap)
     if rows is not None:
         pairs = list(rows.itertuples(index=False, name=None))
         mapping = _driver_cnm(pairs)
@@ -796,7 +784,7 @@ def girvan_newman(edges: DataFrame, n_communities: int = 2,
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
     cap = int(driver_threshold or DRIVER_GN_MAX_EDGES)
-    rows = _collect_if_small(e, cap)
+    rows = collect_if_small(e, cap)
     if rows is None:
         raise ValueError(
             f"girvan_newman is driver-bound; edge count exceeds {cap}. "
@@ -870,7 +858,7 @@ def affinity_propagation(edges: DataFrame, weight_col: str | None = None,
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
     cap = int(driver_threshold or DRIVER_AP_MAX_EDGES)
-    rows = _collect_if_small(e, cap)
+    rows = collect_if_small(e, cap)
     if rows is None:
         raise ValueError(
             f"affinity_propagation needs the dense NxN adjacency; edge "

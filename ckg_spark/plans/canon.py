@@ -31,9 +31,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators.canonicalize import (incremental_canonical_mapping,
-                                      incremental_canonical_parts)
-from ..operators.ckpt import checkpoint_reset_stats as _ckpt
+from ..operators.canonicalize import (incremental_canonical_parts,
+                                      post_sync_mapping)
 from . import table as T
 
 _MAP_SCHEMA = "ident string, canonical_id string, map_version int"
@@ -50,6 +49,7 @@ class CanonSyncReport:
     mapping_version: int | None  # None when the delta was a no-op
     n_changed: int
     n_remaps: int
+    mapping: DataFrame  # post-sync (ident, canonical_id)
 
 
 def read_canonical_mapping(spark: SparkSession, mapping_table_dir: str,
@@ -73,40 +73,29 @@ def sync_canonical_mapping(
 
     Appends ONLY the changed/new rows (merge-on-read keeps reads exact),
     plus the (old -> new) canon pairs to the remap side table. Safe to
-    call with an empty delta (no commit)."""
-    exists = T.current_version(mapping_table_dir) is not None
+    call with an empty delta (no commit). The parts carry the rows to
+    append and both counts (Python lengths on the driver tier, which
+    fetches each input once; one count per checkpoint on the distributed
+    tier), so nothing is counted here. The report's ``mapping`` is
+    untouched ∪ changed ∪ isolated: what ``read_canonical_mapping``
+    returns after the commit, without reading the table again."""
+    cur = T.current_version(mapping_table_dir)
     prev = (read_canonical_mapping(spark, mapping_table_dir)
-            if exists else None)
+            if cur is not None else None)
     parts = incremental_canonical_parts(prev, new_edges,
                                         new_idents=new_idents)
-    remaps = parts["remaps"]
-    # diff changed-vs-PRIOR over the affected rows only (O(touched), never
-    # an O(history) join): a changed row is new to the table unless its
-    # prior canon in the affected set already matches
-    delta = parts["changed"].join(
-        parts["affected_prev"].withColumnRenamed("canonical_id", "_old"),
-        on="ident", how="left",
-    ).where(
-        F.col("_old").isNull() | (F.col("_old") != F.col("canonical_id"))
-    ).select("ident", "canonical_id").unionByName(parts["isolated"])
-
-    next_v = (T.current_version(mapping_table_dir) or 0) + 1
-    delta = delta.withColumn("map_version", F.lit(next_v).cast("int"))
-    # materialize once: count + append + the writer's own recount would
-    # otherwise re-run the anti-join/window plan three times
-    delta = _ckpt(delta)
-    n_changed = delta.count()
-    if n_changed == 0 and exists:
-        return CanonSyncReport(None, 0, 0)
-    mv = T.append(delta, mapping_table_dir, properties=properties or {})
-
-    remaps = _ckpt(remaps.withColumn("map_version", F.lit(mv).cast("int")))
-    n_remaps = remaps.count()
-    if n_remaps or T.current_version(_remap_dir(mapping_table_dir)) is None:
-        if n_remaps == 0:
-            remaps = spark.createDataFrame([], _REMAP_SCHEMA)
-        T.append(remaps, _remap_dir(mapping_table_dir))
-    return CanonSyncReport(mv, n_changed, n_remaps)
+    mapping = post_sync_mapping(parts)
+    if parts["n_delta"] == 0 and cur is not None:
+        return CanonSyncReport(None, 0, 0, mapping)
+    next_v = (cur or 0) + 1
+    mv = T.append(
+        parts["delta"].withColumn("map_version", F.lit(next_v).cast("int")),
+        mapping_table_dir, properties=properties or {})
+    rd = _remap_dir(mapping_table_dir)
+    if parts["n_remaps"] or T.current_version(rd) is None:
+        T.append(parts["remaps"].withColumn("map_version",
+                                            F.lit(mv).cast("int")), rd)
+    return CanonSyncReport(mv, parts["n_delta"], parts["n_remaps"], mapping)
 
 
 def read_remap_log(spark: SparkSession, mapping_table_dir: str,
@@ -122,7 +111,9 @@ def read_remap_log(spark: SparkSession, mapping_table_dir: str,
     rd = _remap_dir(mapping_table_dir)
     if T.current_version(rd) is None:
         return spark.createDataFrame([], _REMAP_SCHEMA.rsplit(",", 1)[0])
-    rows = T.read(spark, rd).orderBy("map_version").collect()
+    # sorted on the driver (stable; rows within one version are
+    # independent): the log is dictionary-scale, an orderBy costs 3 jobs
+    rows = sorted(T.read(spark, rd).collect(), key=lambda r: r["map_version"])
     if through_version is not None:
         rows = [r for r in rows if r["map_version"] <= through_version]
     final: dict[str, str] = {}
@@ -186,15 +177,15 @@ def sync_graph(
     canon with no patch record)."""
     from . import incremental as I
 
-    idents = vocab_tables["aliases"].select("ident").distinct()
+    # raw alias rows: the parts dedupe idents themselves
+    idents = vocab_tables["aliases"].select("ident")
     if identity_edges is None:
         identity_edges = spark.createDataFrame(
             [], "ident_a string, ident_b string")
-    sync_canonical_mapping(spark, mapping_table_dir, identity_edges,
-                           new_idents=idents)
-    cmap = read_canonical_mapping(spark, mapping_table_dir)
+    rep = sync_canonical_mapping(spark, mapping_table_dir, identity_edges,
+                                 new_idents=idents)
     return I.sync_mention_edges(spark, transcripts_table_dir, vocab_tables,
-                                edges_table_dir, canonical=cmap,
+                                edges_table_dir, canonical=rep.mapping,
                                 to_version=to_version)
 
 

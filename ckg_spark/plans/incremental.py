@@ -106,7 +106,9 @@ def sync_mention_edges(
 
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    delta = spark.read.parquet(*new_files)
+    # read_files, NOT spark.read.parquet: a raw path read drops the
+    # hive partition columns, which live in the manifest
+    delta = T.read_files(spark, transcripts_table_dir, new_files, cur)
     linked = linked_mentions(delta, alias_grams, alias_table,
                              vocab_tables.get("stoplist"), canonical)
     edges = M.mention_edges(linked)

@@ -149,15 +149,17 @@ def _write_snapshot_files(df: DataFrame, table_dir: str,
         w = w.partitionBy(*partition_by)
     w.parquet(prefix)
     files = _list_parquet_files(prefix)
-    spark = df.sparkSession
-    rows = spark.read.parquet(prefix).count() if files else 0
+    # row count and data-skipping stats both come from the footers of the
+    # files just written, each opened once: no Spark job re-scans them
+    footers = [_file_footer(f) for f in files]
+    rows = sum(n for n, _ in footers)
     fparts = ({f: _file_partition_values(f, prefix) for f in files}
               if partition_by else {})
     ptypes = ({f.name: f.dataType.simpleString()
                for f in df.schema.fields if f.name in (partition_by or [])}
               if partition_by else {})
     schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-    fstats = {f: _file_column_stats(f) for f in files}
+    fstats = {f: st for f, (_, st) in zip(files, footers)}
     return files, rows, sid, fparts, ptypes, schema, fstats
 
 
@@ -183,18 +185,16 @@ def _round_up_truncated(prefix: str) -> str | None:
     return None
 
 
-def _file_column_stats(path: str) -> dict:
-    """Per-file column min/max from the parquet footer (pyarrow): the
-    Iceberg manifest's data-skipping stats. Strings are truncated to 64
-    chars — a truncated UPPER bound is rounded up so it stays a valid
-    bound. Columns with missing stats, or with bounds that are not JSON
-    scalars (timestamps, dates, decimals), are omitted (never skipped on)."""
+def _file_footer(path: str) -> tuple[int, dict]:
+    """(row count, column min/max) from one parquet footer (pyarrow): the
+    Iceberg manifest's per-file record count and data-skipping stats.
+    Strings are truncated to 64 chars — a truncated UPPER bound is rounded
+    up so it stays a valid bound. Columns with missing stats, or with
+    bounds that are not JSON scalars (timestamps, dates, decimals), are
+    omitted (never skipped on)."""
     import pyarrow.parquet as pq
 
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return {}
+    md = pq.ParquetFile(path).metadata
     mins: dict = {}
     maxs: dict = {}
     ok: dict = {}
@@ -245,7 +245,7 @@ def _file_column_stats(path: str) -> dict:
                 continue
             mins[name] = lo if name not in mins else min(mins[name], lo)
             maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-    return {c: [mins[c], maxs[c]] for c in mins if ok.get(c)}
+    return md.num_rows, {c: [mins[c], maxs[c]] for c in mins if ok.get(c)}
 
 
 def _partition_extra(pm: dict | None, partition_by: list[str] | None,
@@ -379,8 +379,7 @@ def read(spark: SparkSession, table_dir: str,
     if not m["files"]:
         raise FileNotFoundError(f"snapshot v{m['version']} has no data files")
     evolved = bool(m.get("schema_evolved"))
-    reader = (spark.read.option("mergeSchema", "true") if evolved
-              else spark.read)
+    reader = _reader(spark, m)
     live = _skip_by_stats(m, range_filter)
     fparts = m.get("file_partitions", {})
     ptypes = m.get("partition_types", {})
@@ -443,6 +442,28 @@ def read(spark: SparkSession, table_dir: str,
                 F.col(c).isNull() if v is None
                 else F.col(c) == F.lit(str(v)).cast(ptypes.get(c, "string")))
     return out
+
+
+def _reader(spark: SparkSession, m: dict):
+    """Parquet reader for a snapshot's files: file schemas merged when
+    evolved; else, when every file holds exactly the manifest ``schema``
+    (no partition columns), that schema, which skips the inference job.
+    No ``schema``, or type strings that do not parse back to themselves
+    (a nested name needing quotes), fall back to inference."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    if m.get("schema_evolved"):
+        return spark.read.option("mergeSchema", "true")
+    if (not m.get("schema") or m.get("partition_by")
+            or m.get("file_partitions")):
+        return spark.read
+    try:
+        st = _parse_datatype_string(", ".join(
+            "`{}` {}".format(n.replace("`", "``"), t) for n, t in m["schema"]))
+    except Exception:
+        return spark.read
+    same = [[f.name, f.dataType.simpleString()] for f in st.fields]
+    return spark.read.schema(st) if same == m["schema"] else spark.read
 
 
 def _skip_by_stats(manifest: dict, range_filter: dict | None) -> list[str]:
@@ -618,8 +639,7 @@ def read_files(spark: SparkSession, table_dir: str, files: list[str],
         raise ValueError(
             f"files not in snapshot v{m['version']}'s manifest: {missing[:3]}")
     evolved = bool(m.get("schema_evolved"))
-    reader = (spark.read.option("mergeSchema", "true") if evolved
-              else spark.read)
+    reader = _reader(spark, m)
     fparts = m.get("file_partitions", {})
     ptypes = m.get("partition_types", {})
     # every partition column the table has ever had: groups from a spec era

@@ -77,11 +77,11 @@ def test_driver_parts_fast_path_equals_distributed(spark):
     fast = incremental_canonical_parts(m1, _edges(spark, d2), new_idents=ni)
     slow = incremental_canonical_parts(m1, _edges(spark, d2), new_idents=ni,
                                        driver_threshold=0)
-    for key in ("untouched", "changed", "isolated", "affected_prev"):
+    for key in ("untouched", "changed", "isolated", "delta", "remaps"):
         assert sorted(map(tuple, fast[key].collect())) == \
             sorted(map(tuple, slow[key].collect())), key
-    assert sorted(map(tuple, fast["remaps"].collect())) == \
-        sorted(map(tuple, slow["remaps"].collect()))
+    assert (fast["n_delta"], fast["n_remaps"]) == \
+        (slow["n_delta"], slow["n_remaps"]) == (fast["delta"].count(), 1)
     # the fast path engaged (driver DataFrames have no shuffle lineage):
     # sanity — merged component relabels to the global min 'a'
     changed = {r["ident"]: r["canonical_id"] for r in fast["changed"].collect()}
@@ -476,3 +476,67 @@ def test_folded_through_survives_later_appends(spark, tmp_path):
     got = sorted(map(tuple, C.read_graph_edges(spark, edir, mdir)
                      .select("subj", "obj", "score").collect()))
     assert got == [("e1", "t:1", 2.0), ("e5", "t:9", 1.0)]
+
+
+def test_sync_tiers_agree_on_tables_reports_and_mapping(spark, tmp_path,
+                                                        monkeypatch):
+    """The same three syncs with the parts' driver tier and with it off
+    (DRIVER_PARTS_MAX_ROWS = 0) commit identical mapping-table and
+    remap-log rows and report identical counts, and each report's mapping
+    (what sync_graph hands on) equals read_canonical_mapping after the
+    commit. Tick 2 merges two components and self-loops z; tick 3 is
+    idle."""
+    from ckg_spark.operators import canonicalize as CZ
+
+    ticks = [([("b", "c"), ("x", "y")], ["iso1", "b"]),
+             ([("c", "x"), ("a", "y"), ("z", "z")], ["iso2"]),
+             ([], ["b"])]
+    out = []
+    for cap in (CZ.DRIVER_PARTS_MAX_ROWS, 0):
+        monkeypatch.setattr(CZ, "DRIVER_PARTS_MAX_ROWS", cap)
+        d = str(tmp_path / f"m{cap}")
+        reps = []
+        for pairs, ids in ticks:
+            rep = C.sync_canonical_mapping(
+                spark, d, _edges(spark, pairs),
+                new_idents=spark.createDataFrame([(i,) for i in ids],
+                                                 "ident string"))
+            got = sorted(map(tuple, rep.mapping.collect()))
+            assert got == sorted(map(tuple, C.read_canonical_mapping(
+                spark, d).collect()))
+            reps.append((rep.mapping_version, rep.n_changed, rep.n_remaps,
+                         got))
+        out.append((reps, sorted(map(tuple, T.read(spark, d).collect())),
+                    sorted(map(tuple, T.read(spark, C._remap_dir(d))
+                               .collect()))))
+    assert out[0] == out[1]
+    reps, _, log = out[0]
+    assert [r[:3] for r in reps] == [(1, 5, 0), (2, 7, 2), (None, 0, 0)]
+    assert log == [("b", "a", 2), ("x", "a", 2)]
+
+
+def test_sync_graph_tick_job_budget(spark, tmp_path, vocab_tables):
+    """One dictionary-scale tick — a transcript append, then sync_graph
+    with an identity merge — runs in at most 20 Spark jobs: row counts
+    come from parquet footers, the mapping fold fetches each input once
+    and counts nothing, and the post-sync mapping is handed on without
+    re-reading the table. The first tick is the warm-up."""
+    from ckg_spark.datagen import gen_transcripts
+    from ckg_spark.vocab import build_vocab
+    from test_graph_queries import _spark_jobs
+
+    vb = build_vocab(n_entities=120, seed=7)  # matches conftest vocab_tables
+    tdir, edir, mdir = (str(tmp_path / n) for n in ("t", "e", "m"))
+    chunks = [spark.createDataFrame(gen_transcripts(150, vocab=vb, seed=s))
+              for s in (51, 52)]
+    ia, ib = sorted(vb.aliases["ident"].unique())[:2]
+
+    def tick(k, identity_edges=None):
+        T.append(chunks[k], tdir)
+        return C.sync_graph(spark, tdir, vocab_tables, edir, mdir,
+                            identity_edges=identity_edges)
+
+    tick(0)
+    rep, jobs = _spark_jobs(spark, lambda: tick(1, _edges(spark, [(ia, ib)])))
+    assert rep.n_edges > 0 and len(C.read_remap_log(spark, mdir).collect()) == 1
+    assert jobs <= 20, jobs

@@ -157,3 +157,23 @@ def test_comention_partials_merge_to_exact_totals(spark, tmp_path,
                               vocab_tables["stoplist"], None)
     full4 = M.mention_edges(linked4).unionByName(M.comention_edges(linked4))
     assert _edge_set(I.read_merged_edges(spark, edir)) == _edge_set(full4)
+
+
+def test_sync_partitioned_transcript_table(spark, tmp_path, vocab_tables):
+    """Transcripts appended with partition_by=["conv_id"] keep conv_id in
+    the manifest, not in the data files. The sync reads the delta through
+    the manifest and emits the same edges as over an unpartitioned
+    table."""
+    chunks = [_chunk(spark, 120, seed) for seed in (41, 42)]
+    got = {}
+    for part in (None, ["conv_id"]):
+        tdir = str(tmp_path / f"t{bool(part)}")
+        edir = str(tmp_path / f"e{bool(part)}")
+        for ch in chunks:
+            T.append(ch, tdir, partition_by=part)
+            I.sync_mention_edges(spark, tdir, vocab_tables, edir,
+                                 comention=True)
+        got[part is not None] = _edge_set(I.read_merged_edges(spark, edir))
+    assert T.read_manifest(str(tmp_path / "tTrue"))["partition_by"] == [
+        "conv_id"]
+    assert got[True] == got[False] and got[False]

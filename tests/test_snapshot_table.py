@@ -605,3 +605,86 @@ def test_read_files_empty_selection_on_evolved_schema(spark, tmp_path):
     assert idle.count() == 0
     assert sorted(idle.dtypes) == sorted(full.dtypes)
     assert sorted(idle.dtypes) == sorted(T.read(spark, d).dtypes)
+
+
+def test_read_schema_from_manifest_equals_inferred(spark, tmp_path):
+    """An unpartitioned, unevolved snapshot hands its manifest schema to
+    the reader, which then runs no inference job. That schema equals the
+    inferred one for every column type; a manifest without ``schema`` and
+    a nested field name the type string cannot carry fall back to
+    inference."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from test_graph_queries import _spark_jobs
+
+    rows = [("a", 2 ** 40, 1.5, dt.datetime(2024, 1, 1, 8, 30),
+             dt.datetime(2024, 1, 2, 9, 0), dt.date(2024, 1, 3),
+             Decimal("1.50"), ["x", "y"], ("s", 3))]
+    df = spark.createDataFrame(
+        rows, "s string, b bigint, x double, ts timestamp, "
+              "ntz timestamp_ntz, d date, amt decimal(10,2), "
+              "arr array<string>, st struct<f:string,g:int>").coalesce(1)
+    d = str(tmp_path / "tbl")
+    T.append(df, d)
+    files = T.read_manifest(d)["files"]
+    inferred = spark.read.parquet(*files).schema
+    got, jobs = _spark_jobs(spark, lambda: T.read(spark, d))
+    assert got.schema == inferred and jobs == 0
+    assert T.read_files(spark, d, files).schema == inferred
+    assert [tuple(r) for r in got.collect()] == rows
+
+    # a manifest written before schemas were recorded
+    mp = T._manifest_path(d, 1)
+    with open(mp) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    assert T.read(spark, d).schema == inferred
+
+    odd = spark.createDataFrame([((1,),)], "st struct<`a b`:int>")
+    d2 = str(tmp_path / "odd")
+    T.append(odd, d2)
+    assert T.read(spark, d2).schema == spark.read.parquet(
+        *T.read_manifest(d2)["files"]).schema
+
+
+def test_manifest_row_count_from_footers(spark, tmp_path):
+    """The manifest's row_count is read from the footers of the files just
+    written. It equals a Spark count of the frame for an empty frame, a
+    partitioned append, a multi-file append, an overwrite and a compact."""
+    def added(d):
+        m = T.read_manifest(d)
+        parent = m["parent_version"]
+        base = (T.read_manifest(d, parent)["row_count"]
+                if m["operation"] == "append" and parent else 0)
+        return m["row_count"] - base
+
+    d = str(tmp_path / "tbl")
+    empty = spark.createDataFrame([], "k bigint, v bigint")
+    T.append(empty, d)
+    assert added(d) == empty.count() == 0
+
+    many = _df(spark, range(100)).repartition(5)
+    T.append(many, d)
+    assert T.read_manifest(d)["file_count"] >= 5
+    assert added(d) == many.count() == 100
+    assert T.read_manifest(d)["row_count"] == T.read(spark, d).count()
+
+    small = _df(spark, range(7)).repartition(3)
+    T.overwrite(small, d)
+    assert added(d) == small.count() == 7
+
+    T.append(many, d)
+    T.compact(spark, d, target_files=2)
+    assert added(d) == T.read(spark, d).count() == 107
+
+    p = str(tmp_path / "part")
+    parted = spark.createDataFrame(pd.DataFrame(
+        {"p": ["a", "b", "a", None, "c"], "k": [1, 2, 3, 4, 5]}))
+    T.append(parted, p, partition_by=["p"])
+    assert T.read_manifest(p)["file_count"] >= 4
+    assert added(p) == parted.count() == 5
+    T.compact(spark, p, target_files=2)
+    assert added(p) == T.read(spark, p).count() == 5
