@@ -67,12 +67,12 @@ def sync_decontam_index(
     if not new_files:
         if T.current_version(index_dir) is None:
             return DecontamSyncReport(done, cur, 0, None)
-        iv = T.append(T.read(spark, index_dir).limit(0), index_dir,
-                      properties={"docs_version": cur})
+        iv = T.commit_properties(index_dir, {"docs_version": cur})
         return DecontamSyncReport(done, cur, 0, iv)
 
     _check_index_params(index_dir, k)
-    delta = spark.read.parquet(*new_files).select(id_col, text_col)
+    delta = T.read_files(spark, docs_table_dir, new_files, cur).select(
+        id_col, text_col)
     n_docs = delta.count()
     sh = _ckpt(shingles(delta, id_col, text_col, k=k)
                .select("doc_id", F.xxhash64("shingle").alias("h")))

@@ -314,16 +314,17 @@ def sync_training_export(
     if seg_mark is not None and (dig_mark is None or dig_mark < seg_mark):
         gap = TBL.incremental_files(documents_table_dir, dig_mark, seg_mark)
         if gap:
-            _, digs = _delta_quality_digests(
-                _norm(spark.read.parquet(*gap)), gopher_kwargs, line_filter)
+            gap_docs = TBL.read_files(spark, documents_table_dir, gap,
+                                      seg_mark)
+            _, digs = _delta_quality_digests(_norm(gap_docs), gopher_kwargs,
+                                             line_filter)
             if TBL.current_version(dig_dir) is not None:
                 digs = digs.join(TBL.read(spark, dig_dir),
                                  on="norm_hash", how="left_anti")
             TBL.append(digs, dig_dir, properties={"source_version": seg_mark})
             healed = True
         elif TBL.current_version(dig_dir) is not None:
-            TBL.append(TBL.read(spark, dig_dir).limit(0), dig_dir,
-                       properties={"source_version": seg_mark})
+            TBL.commit_properties(dig_dir, {"source_version": seg_mark})
             healed = True
 
     if seg_mark is not None and seg_mark >= cur:
@@ -334,11 +335,11 @@ def sync_training_export(
     if not new_files:
         if TBL.current_version(seg_dir) is None:
             return ExportSyncReport(seg_mark, cur, 0, 0, None, healed)
-        ev = TBL.append(TBL.read(spark, seg_dir).limit(0), seg_dir,
-                        properties={**props, "source_version": cur})
+        ev = TBL.commit_properties(seg_dir,
+                                   {**props, "source_version": cur})
         return ExportSyncReport(seg_mark, cur, 0, 0, ev, healed)
 
-    delta = _norm(spark.read.parquet(*new_files))
+    delta = _norm(TBL.read_files(spark, documents_table_dir, new_files, cur))
 
     # append-order guard: packing is defined over doc order, so every
     # delta id must exceed everything previously SEEN (not just packed)
@@ -406,8 +407,7 @@ def sync_training_export(
         if TBL.current_version(seg_dir) is None:
             return ExportSyncReport(seg_mark, cur, len(new_files), 0,
                                     None, healed)
-        ev = TBL.append(TBL.read(spark, seg_dir).limit(0), seg_dir,
-                        properties={**props, **marks})
+        ev = TBL.commit_properties(seg_dir, {**props, **marks})
     n_seg = TBL.read_manifest(seg_dir, ev)["row_count"] - prev_rows
     TBL.append(digs, dig_dir, properties={"source_version": cur})
     return ExportSyncReport(seg_mark, cur, len(new_files), n_seg,

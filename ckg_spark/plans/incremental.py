@@ -93,21 +93,18 @@ def sync_mention_edges(
 
     new_files = T.incremental_files(transcripts_table_dir, done, cur)
     if not new_files:
-        # empty append (files unchanged): advance the mark with an empty
-        # commit in the EDGE table's own schema so the next sync doesn't
-        # re-diff the range; if no edge table exists yet there is nothing
-        # to stamp — the next sync re-derives the same empty diff cheaply
+        # empty append (files unchanged): advance the mark with a
+        # metadata-only commit so the next sync doesn't re-diff the range;
+        # if no edge table exists yet there is nothing to stamp — the next
+        # sync re-derives the same empty diff cheaply
         if T.current_version(edges_table_dir) is None:
             return SyncReport(done, cur, 0, 0, None)
-        ev = T.append(T.read(spark, edges_table_dir).limit(0),
-                      edges_table_dir,
-                      properties={"transcripts_version": cur})
+        ev = T.commit_properties(edges_table_dir,
+                                 {"transcripts_version": cur})
         return SyncReport(done, cur, 0, 0, ev)
 
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    # read_files, NOT spark.read.parquet: a raw path read drops the
-    # hive partition columns, which live in the manifest
     delta = T.read_files(spark, transcripts_table_dir, new_files, cur)
     linked = linked_mentions(delta, alias_grams, alias_table,
                              vocab_tables.get("stoplist"), canonical)
@@ -176,12 +173,5 @@ def validate_edges_delta(spark: SparkSession, edges_table_dir: str,
     from ..operators.kg_qa import schema_violations, violation_summary
 
     files = T.incremental_files(edges_table_dir, from_version, to_version)
-    if not files:
-        schema = T.read(spark, edges_table_dir).schema
-        empty = spark.createDataFrame([], schema)
-        return violation_summary(schema_violations(empty, node_types, rules))
-    # read_files, NOT spark.read.parquet: hive-partitioned columns (e.g.
-    # partition_by=["pred"]) live in the manifest and would be silently
-    # dropped by a raw path read, breaking the rules join
     delta = T.read_files(spark, edges_table_dir, files, to_version)
     return violation_summary(schema_violations(delta, node_types, rules))

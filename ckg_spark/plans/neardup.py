@@ -93,11 +93,11 @@ def sync_neardup(
     if not new_files:
         if T.current_version(index_dir) is None:
             return NeardupSyncReport(done, cur, 0, 0, None), empty_pairs
-        iv = T.append(T.read(spark, index_dir).limit(0), index_dir,
-                      properties={"docs_version": cur})
+        iv = T.commit_properties(index_dir, {"docs_version": cur})
         return NeardupSyncReport(done, cur, 0, 0, iv), empty_pairs
 
-    delta = spark.read.parquet(*new_files).select(id_col, text_col)
+    delta = T.read_files(spark, docs_table_dir, new_files, cur).select(
+        id_col, text_col)
     n_docs = delta.count()
     # checkpoint_reset_stats, NOT plain localCheckpoint: the checkpoint
     # keeps Catalyst's inherited sizeInBytes, and a wrong small estimate

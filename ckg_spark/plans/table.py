@@ -20,10 +20,18 @@ behind one small API so the swap is local (same stance as
   overwrite commits only the new files. Both record operation, row count,
   file count and parent id — the snapshot log.
 - **time travel**: ``read(spark, dir, version=N)`` plans the scan from
-  manifest N's file list (``spark.read.parquet(*files)``), so any
-  historical snapshot stays queryable until expired; ``rollback`` commits
-  a new manifest that re-points to an old snapshot's file set (never
-  rewrites data).
+  manifest N's file list, so any historical snapshot stays queryable
+  until expired; ``rollback`` commits a new manifest that re-points to an
+  old snapshot's file set (never rewrites data).
+- **one scan planner, driven by the table schema**: a manifest's
+  ``schema`` is the TABLE schema — the union of its live files' columns,
+  partition columns included — and a scan never infers it from the files
+  (Iceberg: https://iceberg.apache.org/spec/#schemas-and-data-types).
+  ``read`` and ``read_files`` both build their frame in ``_scan``: one
+  parquet scan with that schema (a column a file lacks reads as null),
+  with each file's manifest partition values written over its partition
+  columns. Columns come back in the table schema's order, whichever
+  files a scan selects.
 
 Scale note: a manifest holds file PATHS (one line per data file, not per
 row). At 100 TB with ~256 MB files that is ~400k entries — a driver-side
@@ -37,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -158,9 +167,13 @@ def _write_snapshot_files(df: DataFrame, table_dir: str,
     ptypes = ({f.name: f.dataType.simpleString()
                for f in df.schema.fields if f.name in (partition_by or [])}
               if partition_by else {})
-    schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
     fstats = {f: st for f, (_, st) in zip(files, footers)}
-    return files, rows, sid, fparts, ptypes, schema, fstats
+    return files, rows, sid, fparts, ptypes, fstats
+
+
+def _schema_list(st) -> list:
+    """A StructType as the manifest's ``schema``: [[name, type], ...]."""
+    return [[f.name, f.dataType.simpleString()] for f in st.fields]
 
 
 # Only orderable primitive parquet types participate in min/max skipping.
@@ -275,27 +288,28 @@ def _partition_extra(pm: dict | None, partition_by: list[str] | None,
             "partition_evolved": mixed}
 
 
-def _schema_evolution(parent_manifest: dict | None, schema: list,
-                      keeps_parent_files: bool) -> bool:
-    """Column ADD/DROP across commits is legal schema evolution (Iceberg's
-    safe subset here); a TYPE change for a same-named column is refused —
-    parquet footers would disagree and mergeSchema would throw mid-scan.
-    Returns whether the committed snapshot mixes file schemas."""
-    if parent_manifest is None:
-        return False
-    prev = parent_manifest.get("schema")
-    if prev is None:
-        return bool(keeps_parent_files)
-    prev_t, cur_t = dict(map(tuple, prev)), dict(map(tuple, schema))
-    for name in prev_t.keys() & cur_t.keys():
-        if prev_t[name] != cur_t[name]:
+def _schema_evolution(df: DataFrame, pm: dict | None,
+                      keeps_parent_files: bool) -> tuple[list, bool]:
+    """(table schema, whether the live files mix schemas) for a commit of
+    ``df``. Column ADD/DROP is legal schema evolution (Iceberg's safe
+    subset); a TYPE change of any column the table has ever had is refused:
+    the parent's table schema still lists it, and every scan reads the
+    older files with that schema. An append's table schema is the
+    parent's plus the frame's new columns; an overwrite's is the frame's."""
+    schema = _schema_list(df.schema)
+    if pm is None:
+        return schema, False
+    prev = pm.get("schema") or _schema_list(_table_schema(df.sparkSession, pm))
+    prev_t = dict(map(tuple, prev))
+    for name, typ in schema:
+        if prev_t.get(name, typ) != typ:
             raise ValueError(
                 f"schema evolution rejected: column {name!r} changes type "
-                f"{prev_t[name]} -> {cur_t[name]} (add/drop only)")
-    changed = prev != schema
+                f"{prev_t[name]} -> {typ} (add/drop only)")
     if not keeps_parent_files:
-        return False  # overwrite: only the new files are live
-    return changed or bool(parent_manifest.get("schema_evolved"))
+        return schema, False  # overwrite: only the new files are live
+    union = prev + [c for c in schema if c[0] not in prev_t]
+    return union, prev != schema or bool(pm.get("schema_evolved"))
 
 
 def overwrite(df: DataFrame, table_dir: str,
@@ -304,16 +318,15 @@ def overwrite(df: DataFrame, table_dir: str,
     """Replace the table contents in a new snapshot; returns the version."""
     parent = current_version(table_dir)
     pm = read_manifest(table_dir, parent) if parent is not None else None
-    files, rows, sid, fparts, ptypes, schema, fstats = _write_snapshot_files(
+    schema, _ = _schema_evolution(df, pm, keeps_parent_files=False)
+    files, rows, sid, fparts, ptypes, fstats = _write_snapshot_files(
         df, table_dir, partition_by)
-    _schema_evolution(pm, schema, keeps_parent_files=False)
-    props = dict(properties or {})
     extra = {"schema": schema, "file_stats": fstats}
     extra.update(_partition_extra(pm, partition_by, fparts, ptypes,
                                   keeps_parent_files=False,
                                   all_files=files))
     return _commit(table_dir, files, "overwrite", rows, parent, sid,
-                   props, extra)
+                   properties, extra)
 
 
 def append(df: DataFrame, table_dir: str,
@@ -328,9 +341,10 @@ def append(df: DataFrame, table_dir: str,
     if parent is not None:
         pm = read_manifest(table_dir, parent)
         base_files, base_rows = pm["files"], pm["row_count"]
-    files, rows, sid, fparts, ptypes, schema, fstats = _write_snapshot_files(
+    schema, evolved = _schema_evolution(df, pm,
+                                        keeps_parent_files=bool(base_files))
+    files, rows, sid, fparts, ptypes, fstats = _write_snapshot_files(
         df, table_dir, partition_by)
-    evolved = _schema_evolution(pm, schema, keeps_parent_files=bool(base_files))
     extra = {"schema": schema, "schema_evolved": evolved,
              "file_stats": {**(pm.get("file_stats", {}) if pm else {}),
                             **fstats}}
@@ -341,18 +355,33 @@ def append(df: DataFrame, table_dir: str,
                    base_rows + rows, parent, sid, properties, extra)
 
 
-def rollback(table_dir: str, version: int) -> int:
-    """Commit a NEW snapshot whose file set is that of an old version —
-    history is never rewritten, so the rolled-back state is itself
-    time-travelable."""
-    m = read_manifest(table_dir, version)
+def _recommit(table_dir: str, m: dict, operation: str, parent: int | None,
+              properties: dict | None = None) -> int:
+    """Commit a new snapshot with manifest ``m``'s files and metadata: no
+    data is written."""
     extra = {k: m[k] for k in
              ("partition_by", "file_partitions", "partition_types",
               "partition_evolved", "schema", "schema_evolved", "file_stats")
              if k in m}
-    return _commit(table_dir, m["files"], f"rollback[v{version}]",
-                   m["row_count"], current_version(table_dir),
-                   uuid.uuid4().hex[:12], None, extra)
+    return _commit(table_dir, m["files"], operation, m["row_count"], parent,
+                   uuid.uuid4().hex[:12], properties, extra)
+
+
+def rollback(table_dir: str, version: int) -> int:
+    """Commit a NEW snapshot whose file set is that of an old version —
+    history is never rewritten, so the rolled-back state is itself
+    time-travelable."""
+    return _recommit(table_dir, read_manifest(table_dir, version),
+                     f"rollback[v{version}]", current_version(table_dir))
+
+
+def commit_properties(table_dir: str, properties: dict) -> int:
+    """Commit ``properties`` as an append that adds no files: how an idle
+    incremental sync advances its high-water mark. No Spark job runs, the
+    live file set is unchanged, and ``incremental_files`` across it is
+    empty."""
+    m = read_manifest(table_dir)
+    return _recommit(table_dir, m, "append", m["version"], properties)
 
 
 def read(spark: SparkSession, table_dir: str,
@@ -360,13 +389,13 @@ def read(spark: SparkSession, table_dir: str,
          partition_filter: dict | None = None,
          range_filter: dict | None = None) -> DataFrame:
     """Scan the table at a snapshot (default: latest). The manifest only
-    selects files; the result is a plain parquet scan with full pushdown.
+    selects files; the result is a plain parquet scan with full pushdown,
+    in the manifest's table schema and its column order (see ``_scan``).
 
     For a partitioned table, partition VALUES live in the manifest (hive
     dirs parsed at commit), so ``partition_filter={"pred": "MAPS_TO"}``
     prunes to the matching files before any I/O — manifest-level partition
-    pruning, the Iceberg read path. Partition columns are re-attached as
-    typed literals per file group.
+    pruning, the Iceberg read path.
 
     ``range_filter={"col": (lo, hi)}`` (either bound None for open) skips
     files whose manifest min/max stats cannot intersect the range — the
@@ -378,92 +407,99 @@ def read(spark: SparkSession, table_dir: str,
     m = read_manifest(table_dir, version)
     if not m["files"]:
         raise FileNotFoundError(f"snapshot v{m['version']} has no data files")
-    evolved = bool(m.get("schema_evolved"))
-    reader = _reader(spark, m)
-    live = _skip_by_stats(m, range_filter)
     fparts = m.get("file_partitions", {})
-    ptypes = m.get("partition_types", {})
-    # Spec evolution: each file carries ITS OWN spec's partition values.
-    # A file's partition columns are attached from the manifest; any other
-    # partition-era column is physically present in that file's data.
-    if not any(fparts.get(f) for f in m["files"]):
-        if partition_filter:
-            raise ValueError("partition_filter on an unpartitioned table")
-        if not live:
-            return reader.parquet(m["files"][0]).where(F.lit(False))
-        return reader.parquet(*live)
-
-    known = set(m.get("partition_by") or [])
-    for v in fparts.values():
-        known.update(v)
-    for c in (partition_filter or {}):
+    pf = partition_filter or {}
+    known = _partition_columns(m)
+    if pf and not known:
+        raise ValueError("partition_filter on an unpartitioned table")
+    for c in pf:
         if c not in known:
             raise ValueError(
                 f"partition_filter column {c!r} was never a partition "
                 f"column of this table (known: {sorted(known)})")
 
     def file_ok(vals: dict) -> bool:
-        # prune only on columns THIS file's spec recorded; files from a
-        # spec without the column are kept and row-filtered exactly below
+        # Spec evolution: each file carries ITS OWN spec's partition
+        # values. Prune only on columns THIS file's spec recorded; files
+        # from a spec without the column are kept and row-filtered below
         return all(vals[c] == (None if v is None else str(v))
-                   for c, v in (partition_filter or {}).items()
-                   if c in vals)
+                   for c, v in pf.items() if c in vals)
 
-    groups: dict[tuple, list[str]] = {}
-    for f in live:
-        vals = fparts.get(f, {})
-        if not file_ok(vals):
-            continue
-        groups.setdefault(tuple(sorted(vals.items())), []).append(f)
-
-    def attach(df, items):
-        for c, v in items:
-            df = df.withColumn(c, F.lit(v).cast(ptypes.get(c, "string")))
-        return df
-
-    if not groups:
-        # empty result with the full column set of some live file's era
-        f0 = m["files"][0]
-        base = attach(reader.parquet(f0), sorted(fparts.get(f0, {}).items()))
-        for c in known - set(base.columns):
-            base = base.withColumn(c, F.lit(None).cast(ptypes.get(c, "string")))
-        return base.where(F.lit(False))
-    out = None
-    for key, fs in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        df = attach(reader.parquet(*fs), key)
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=evolved)
-    if partition_filter:
-        # exact row semantics across mixed specs: kept-but-unpruned files
-        # (column lives in their data) are filtered here; literal-attached
-        # groups pass trivially, so homogeneous tables see pure pruning
-        for c, v in partition_filter.items():
-            out = out.where(
-                F.col(c).isNull() if v is None
-                else F.col(c) == F.lit(str(v)).cast(ptypes.get(c, "string")))
+    out = _scan(spark, m, [f for f in _skip_by_stats(m, range_filter)
+                           if file_ok(fparts.get(f, {}))])
+    # exact row semantics across mixed specs: kept-but-unpruned files
+    # (column lives in their data) are filtered here; files with the value
+    # in the manifest pass trivially, so homogeneous tables see pure pruning
+    for c, v in pf.items():
+        out = out.where(
+            F.col(c).isNull() if v is None
+            else F.col(c) == F.lit(str(v)).cast(out.schema[c].dataType))
     return out
 
 
-def _reader(spark: SparkSession, m: dict):
-    """Parquet reader for a snapshot's files: file schemas merged when
-    evolved; else, when every file holds exactly the manifest ``schema``
-    (no partition columns), that schema, which skips the inference job.
-    No ``schema``, or type strings that do not parse back to themselves
-    (a nested name needing quotes), fall back to inference."""
+def _table_schema(spark: SparkSession, m: dict):
+    """Manifest ``m``'s table schema as a StructType. A manifest without a
+    usable ``schema`` (written before schemas were recorded, or holding a
+    type string that does not parse back to itself: a nested field name
+    needing quotes) infers it from all its files with mergeSchema, and
+    adds the partition columns, which live in the manifest."""
     from pyspark.sql.types import _parse_datatype_string
 
-    if m.get("schema_evolved"):
-        return spark.read.option("mergeSchema", "true")
-    if (not m.get("schema") or m.get("partition_by")
-            or m.get("file_partitions")):
-        return spark.read
-    try:
-        st = _parse_datatype_string(", ".join(
-            "`{}` {}".format(n.replace("`", "``"), t) for n, t in m["schema"]))
-    except Exception:
-        return spark.read
-    same = [[f.name, f.dataType.simpleString()] for f in st.fields]
-    return spark.read.schema(st) if same == m["schema"] else spark.read
+    cols = m.get("schema")
+    if cols:
+        try:
+            st = _parse_datatype_string(", ".join(
+                "`{}` {}".format(n.replace("`", "``"), t) for n, t in cols))
+            if _schema_list(st) == cols:
+                return st
+        except Exception:
+            pass
+    st = spark.read.option("mergeSchema", "true").parquet(*m["files"]).schema
+    ptypes = m.get("partition_types", {})
+    for c in sorted(_partition_columns(m) - set(st.names)):
+        st = st.add(c, ptypes.get(c, "string"))
+    return st
+
+
+def _partition_columns(m: dict) -> set:
+    """Every partition column of manifest ``m``'s current or older specs."""
+    return set(m.get("partition_by") or []).union(
+        *m.get("file_partitions", {}).values())
+
+
+def _scan(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
+    """The one DataFrame over data files of snapshot ``m``: one parquet
+    scan of ``files`` with the table schema (Spark null-fills the columns
+    a file lacks). A file's manifest partition values overwrite its
+    partition columns as typed literals, looked up by the scan's own file
+    path; a file whose spec lacks a partition column keeps the column's
+    data. An empty selection opens no file."""
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+
+    schema = _table_schema(spark, m)
+    if not files:
+        return spark.createDataFrame([], schema)
+    df = spark.read.schema(schema).parquet(*files)
+    fparts = m.get("file_partitions", {})
+    parts = {os.path.abspath(f): fparts[f] for f in files if fparts.get(f)}
+    if not parts:
+        return df
+    # _metadata says "file:/x", inputFiles() "file:///x": key on the path,
+    # decoding Spark's URIs to match the manifest's (never re-encode ours)
+    strip = "^file:/*"
+    key = F.regexp_replace("_metadata.file_path", strip, "/")
+    enc = {unquote(u): u
+           for u in (re.sub(strip, "/", u) for u in df.inputFiles())}
+    cols = {}
+    for c in sorted(set().union(*parts.values())):
+        vals = F.create_map(*[F.lit(x) for f, p in parts.items() if c in p
+                              for x in (enc[f], p[c])])
+        cols[c] = F.when(F.map_contains_key(vals, key),
+                         vals[key].cast(schema[c].dataType)
+                         ).otherwise(F.col(c))
+    return df.withColumns(cols)
 
 
 def _skip_by_stats(manifest: dict, range_filter: dict | None) -> list[str]:
@@ -507,11 +543,11 @@ def compact(spark: SparkSession, table_dir: str,
     n = target_files or int(spark.conf.get("spark.sql.shuffle.partitions"))
     part_by = m.get("partition_by")
     df = df.repartition(n, *part_by) if part_by else df.repartition(n)
-    files, rows, sid, fparts, ptypes, schema, fstats = _write_snapshot_files(
+    files, rows, sid, fparts, ptypes, fstats = _write_snapshot_files(
         df, table_dir, part_by)
     # a compact rewrite unifies file schemas AND partition specs: both
     # evolved flags reset (every rewritten file follows the current spec)
-    extra = {"schema": schema, "file_stats": fstats}
+    extra = {"schema": _schema_list(df.schema), "file_stats": fstats}
     extra.update(_partition_extra(None, part_by, fparts, ptypes,
                                   keeps_parent_files=False,
                                   all_files=files))
@@ -624,53 +660,16 @@ def last_stamped_version(table_dir: str, prop: str) -> int | None:
 
 def read_files(spark: SparkSession, table_dir: str, files: list[str],
                version: int | None = None) -> DataFrame:
-    """Scan a specific SUBSET of a snapshot's data files with partition
-    columns re-attached — the read path for incremental consumers that
-    select files via ``incremental_files`` (a raw ``spark.read.parquet``
-    on those paths would silently DROP hive-partitioned columns, which
-    live in the manifest, not the files). ``files`` must belong to the
-    snapshot's manifest; schema-evolution handling matches ``read``."""
-    from pyspark.sql import functions as F
-
+    """Scan a SUBSET of a snapshot's data files — the read path for
+    incremental consumers that select files via ``incremental_files``.
+    ``files`` must belong to the snapshot's manifest. The scan is
+    ``read``'s (``_scan``): the table schema in its column order, partition
+    columns from the manifest (a raw ``spark.read.parquet`` on those paths
+    would drop them), the same columns for any selection, empty included."""
     m = read_manifest(table_dir, version)
-    manifest_files = set(m["files"])
-    missing = [f for f in files if f not in manifest_files]
+    live = set(m["files"])
+    missing = [f for f in files if f not in live]
     if missing:
         raise ValueError(
             f"files not in snapshot v{m['version']}'s manifest: {missing[:3]}")
-    evolved = bool(m.get("schema_evolved"))
-    reader = _reader(spark, m)
-    fparts = m.get("file_partitions", {})
-    ptypes = m.get("partition_types", {})
-    # every partition column the table has ever had: groups from a spec era
-    # that never recorded a column still need it (as typed nulls) so the
-    # cross-group union lines up even when the column is in neither the
-    # file's data nor its manifest entry
-    pcols = set(m.get("partition_by") or [])
-    for v in fparts.values():
-        pcols.update(v)
-
-    def attach(df, items):
-        for c, v in items:
-            df = df.withColumn(c, F.lit(v).cast(ptypes.get(c, "string")))
-        for c in sorted(pcols - set(df.columns)):
-            df = df.withColumn(c, F.lit(None).cast(ptypes.get(c, "string")))
-        return df
-
-    # empty selection (e.g. an idle incremental sync): an empty frame with
-    # the snapshot's schema, never None; an evolved table's schema spans
-    # every era, so it comes from all files, otherwise the first suffices
-    scan = files or (m["files"] if evolved else m["files"][:1])
-    if not scan:
-        raise ValueError(
-            f"snapshot v{m['version']} has no data files to derive a "
-            "schema from")
-    groups: dict[tuple, list[str]] = {}
-    for f in scan:
-        groups.setdefault(tuple(sorted(fparts.get(f, {}).items())), []).append(f)
-    out = None
-    for key, fs in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        df = attach(reader.parquet(*fs), key)
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=evolved)
-    return out if files else out.where(F.lit(False))
+    return _scan(spark, m, files)

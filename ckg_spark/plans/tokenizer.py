@@ -50,10 +50,9 @@ def sync_word_frequencies(
     if not new_files:
         if T.current_version(wf_dir) is None:
             return TokenizerSyncReport(done, cur, 0, None)
-        v = T.append(T.read(spark, wf_dir).limit(0), wf_dir,
-                     properties={"docs_version": cur})
+        v = T.commit_properties(wf_dir, {"docs_version": cur})
         return TokenizerSyncReport(done, cur, 0, v)
-    delta = spark.read.parquet(*new_files)
+    delta = T.read_files(spark, docs_table_dir, new_files, cur)
     n_docs = delta.count()
     partial = _ckpt(word_frequencies(delta, text_col))
     v = T.append(partial, wf_dir, properties={"docs_version": cur})

@@ -118,6 +118,30 @@ def test_empty_append_advances_mark(spark, tmp_path, vocab_tables):
     assert I.last_synced_version(edir) == 2
 
 
+def test_idle_tick_commits_metadata_only(spark, tmp_path, vocab_tables):
+    """A source commit that adds no files makes an idle tick: the mark
+    advances in a metadata-only commit that runs no Spark job and adds no
+    file, so a consumer diffing the edge table sees no delta across it."""
+    from test_graph_queries import _spark_jobs
+
+    tdir = str(tmp_path / "transcripts")
+    edir = str(tmp_path / "edges")
+    T.append(_chunk(spark, 60, seed=23), tdir)
+    I.sync_mention_edges(spark, tdir, vocab_tables, edir)
+    before = T.read_manifest(edir)
+    T.commit_properties(tdir, {"producer": "idle"})
+    r, jobs = _spark_jobs(spark, lambda: I.sync_mention_edges(
+        spark, tdir, vocab_tables, edir))
+    after = T.read_manifest(edir)
+    assert jobs == 0
+    assert (r.n_files, r.n_edges, r.edge_table_version) == (
+        0, 0, after["version"])
+    assert I.last_synced_version(edir) == 2
+    assert after["file_count"] == before["file_count"]
+    assert after["row_count"] == before["row_count"]
+    assert T.incremental_files(edir, before["version"], after["version"]) == []
+
+
 def test_comention_partials_merge_to_exact_totals(spark, tmp_path,
                                                   vocab_tables):
     """Co-mention scores are sums of per-turn indicators — additive over

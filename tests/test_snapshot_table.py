@@ -211,6 +211,15 @@ def test_schema_evolution_add_drop_columns(spark, tmp_path):
     bad = spark.createDataFrame(pd.DataFrame({"k": ["oops"], "v": [1]}))
     with pytest.raises(ValueError, match="changes type"):
         T.append(bad, d)
+    # ... also against a column only older files still hold: the table
+    # schema keeps every column of the live files
+    d2 = str(tmp_path / "etbl2")
+    T.append(spark.createDataFrame([(1, 2)], "k bigint, c int"), d2)
+    T.append(spark.createDataFrame([(2,)], "k bigint"), d2)
+    with pytest.raises(ValueError, match="changes type"):
+        T.append(spark.createDataFrame([(3, "x")], "k bigint, c string"), d2)
+    assert sorted(map(tuple, T.read(spark, d2).collect())) == [
+        (1, 2), (2, None)]
 
 
 def test_schema_evolution_partitioned(spark, tmp_path):
@@ -648,6 +657,53 @@ def test_read_schema_from_manifest_equals_inferred(spark, tmp_path):
     T.append(odd, d2)
     assert T.read(spark, d2).schema == spark.read.parquet(
         *T.read_manifest(d2)["files"]).schema
+
+
+def test_scan_schema_independent_of_selection(spark, tmp_path):
+    """A scan's columns come from the manifest's table schema, not from the
+    files it selects: on an evolved table and on a spec-evolved table
+    ([pred] -> [src]), a full read, a read pruned to one era, a read of
+    one era's files and an empty selection have identical dtypes. A read
+    of a partitioned or evolved table plans without a Spark job."""
+    from test_graph_queries import _spark_jobs
+
+    evolved = str(tmp_path / "evolved")
+    T.append(_df(spark, [1, 2]), evolved)                             # k, v
+    T.append(spark.createDataFrame(
+        pd.DataFrame({"k": [10], "v": [100], "w": ["x"]})), evolved)  # + w
+    spec = str(tmp_path / "spec")
+    T.append(spark.createDataFrame(pd.DataFrame(
+        {"pred": ["A", "B"], "src": ["x", "x"], "n": [1, 2]})), spec,
+        partition_by=["pred"])
+    T.append(spark.createDataFrame(pd.DataFrame(
+        {"pred": ["A", "B"], "src": ["y", "y"], "n": [10, 11]})), spec,
+        partition_by=["src"])
+    for d, col, cols in ((evolved, "k", ["k", "v", "w"]),
+                         (spec, "n", ["pred", "src", "n"])):
+        m = T.read_manifest(d)
+        era1 = T.read_manifest(d, 1)["files"]
+        full, jobs = _spark_jobs(spark, lambda: T.read(spark, d))
+        assert jobs == 0 and full.columns == cols
+        pruned = T.read(spark, d, range_filter={col: (None, 5)})
+        assert {f.replace("file://", "") for f in pruned.inputFiles()} == set(
+            era1)
+        scans = [pruned, T.read_files(spark, d, era1),
+                 T.read_files(spark, d, [])]
+        assert [s.dtypes for s in scans] == [full.dtypes] * 3
+        assert len(m["files"]) > len(era1)
+    assert sorted(map(tuple, T.read_files(spark, evolved, T.read_manifest(
+        evolved, 1)["files"]).collect())) == [(1, 10, None), (2, 20, None)]
+
+    # partition values that the scan's file URIs percent-encode, and null
+    parted = str(tmp_path / "parted")
+    T.append(spark.createDataFrame(_pdf(["a b%", "x+y", None], [1, 2, 3])),
+             parted, partition_by=["pred"])
+    got, jobs = _spark_jobs(spark, lambda: T.read(spark, parted))
+    assert jobs == 0 and got.columns == ["pred", "n"]
+    assert sorted(map(tuple, got.collect()), key=str) == [
+        ("a b%", 1), ("x+y", 2), (None, 3)]
+    b = T.read(spark, parted, partition_filter={"pred": "a b%"})
+    assert [tuple(r) for r in b.collect()] == [("a b%", 1)]
 
 
 def test_manifest_row_count_from_footers(spark, tmp_path):

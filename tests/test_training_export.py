@@ -190,6 +190,24 @@ def test_sync_export_two_deltas_equal_batch(spark, tmp_path):
                       read_export_segments(spark, out).collect())) == exp
 
 
+def test_sync_export_partitioned_docs_table(spark, tmp_path):
+    """Documents appended under partition_by=["source"] keep ``source`` in
+    the manifest, not in the data files. The sync reads each delta
+    through the table's scan and packs the same segments as over an
+    unpartitioned table."""
+    tdir = str(tmp_path / "docs_tbl")
+    out = str(tmp_path / "sync_out")
+    d1, d2, _ = _split_deltas(spark)
+    for d in (d1, d2):
+        TBL.append(d, tdir, partition_by=["source"])
+        r = sync_training_export(spark, tdir, out, fixed_rates=RATES,
+                                 seq_len=64, gopher_kwargs=GOPHER)
+        assert r.n_segments > 0
+    assert TBL.read_manifest(tdir)["partition_by"] == ["source"]
+    got = sorted(map(tuple, read_export_segments(spark, out).collect()))
+    assert got == _expected_segments(d1.unionByName(d2), 64)
+
+
 def test_sync_crash_between_commits_heals(spark, tmp_path, monkeypatch):
     tdir = str(tmp_path / "docs_tbl")
     out = str(tmp_path / "sync_out")
