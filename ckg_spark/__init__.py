@@ -8,9 +8,9 @@ stages over transcript tables ``(conv_id, turn_idx, role, text, tool, ts)``.
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL everywhere; no RDDs; no per-row Python UDFs on the hot path.
-- Mention detection is either pure-JVM (tokenize -> n-gram -> broadcast join)
-  or an Arrow-batched ``mapInPandas`` regex matcher; both are provided and
-  tested for agreement.
+- Mention detection is pure-JVM: tokenize -> n-gram -> one broadcast join
+  against the alias table (``operators/extract.py``, one matcher with a
+  batch and a streaming form).
 - Canonicalization is an iterative hash-join label propagation with pointer
   jumping (O(log d) rounds); min() aggregation is algebraic so map-side
   combine absorbs degree skew.

@@ -14,8 +14,8 @@ Scale shape — the insight that makes BPE tractable on 100 TB of text:
    frequency table (tens of millions of rows, Zipf-distributed).
 2. Merge learning then operates on that WORD TABLE, never the corpus.
    ``learn_bpe`` prunes it (``min_freq``, ``max_words`` by frequency) and,
-   when the pruned table passes a truncated-count gate, collects it and
-   runs the classic incremental-pair-statistics loop on the driver —
+   when one truncated fetch of the pruned table fits the cap, runs the
+   classic incremental-pair-statistics loop on the driver —
    30k merges of driver arithmetic instead of 30k Spark jobs. Above the
    gate it falls back to per-round distributed counting
    (``_distributed_merge_rounds``): pair explode -> sum(freq) -> top-1 ->
@@ -41,6 +41,8 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from .ckpt import checkpoint_reset_stats, collect_if_small
 
 # Same pre-token classes as textstats.bpe_ish_token_count: word runs, digit
 # runs, single punctuation. No whitespace can appear inside a pre-token,
@@ -142,8 +144,6 @@ def _distributed_merge_rounds(wf: DataFrame, n_merges: int,
     word table. One shuffle per round over the WORD table (never the
     corpus); ``checkpoint_reset_stats`` per round keeps the iterative plan
     and its Catalyst stats flat."""
-    from .ckpt import checkpoint_reset_stats
-
     def to_syms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Python-side char split so both learning paths share symbol
         # semantics exactly (code points, not JVM UTF-16 units)
@@ -194,29 +194,27 @@ def _distributed_merge_rounds(wf: DataFrame, n_merges: int,
 
 def learn_bpe(docs: DataFrame, n_merges: int = 1000, text_col: str = "text",
               min_freq: int = 1, min_pair_freq: int = 2,
-              max_words: int | None = None,
-              driver_threshold: int | None = LEARN_BPE_MAX_COLLECT) -> list:
+              max_words: int | None = None) -> list:
     """Learn a BPE merge table from a corpus. Returns an ordered list of
     (left, right) merge pairs.
 
-    ``driver_threshold`` gates the fast path: the pruned word table is
-    probed with a TRUNCATED count (limit threshold+1, never a full count of
-    an over-large table) and collected only when it fits; otherwise the
-    per-round distributed loop runs. Pass ``driver_threshold=0`` to force
-    the distributed path (tests assert both paths produce identical merge
-    lists). ``max_words`` caps the vocabulary at the most frequent words —
-    the standard practice that bounds merge-learning cost independently of
-    corpus size."""
+    The tier follows the pruned word table's size: up to
+    ``LEARN_BPE_MAX_COLLECT`` rows (read per call) it is fetched once —
+    one truncated fetch, never a full count of an over-large table — and
+    merged on the driver; otherwise the per-round distributed loop runs.
+    Setting the constant to 0 forces the distributed path (tests assert
+    both paths produce identical merge lists). ``max_words`` caps the
+    vocabulary at the most frequent words — the standard practice that
+    bounds merge-learning cost independently of corpus size."""
     return learn_bpe_from_word_table(
         word_frequencies(docs, text_col), n_merges=n_merges,
         min_freq=min_freq, min_pair_freq=min_pair_freq,
-        max_words=max_words, driver_threshold=driver_threshold)
+        max_words=max_words)
 
 
 def learn_bpe_from_word_table(wf: DataFrame, n_merges: int = 1000,
                               min_freq: int = 1, min_pair_freq: int = 2,
-                              max_words: int | None = None,
-                              driver_threshold: int | None = LEARN_BPE_MAX_COLLECT) -> list:
+                              max_words: int | None = None) -> list:
     """Learn merges from a precomputed (word, freq) table — the entry
     point an INCREMENTALLY-maintained word table uses (plans/tokenizer.py
     folds per-delta partial counts; learning is a pure function of the
@@ -226,13 +224,10 @@ def learn_bpe_from_word_table(wf: DataFrame, n_merges: int = 1000,
     if max_words is not None:
         wf = wf.orderBy(F.desc("freq"), F.asc("word")).limit(max_words)
 
-    threshold = driver_threshold if driver_threshold is not None else 0
-    if threshold > 0:
-        probe = wf.limit(threshold + 1).count()
-        if probe <= threshold:
-            rows = wf.collect()
-            pairs = sorted((r["word"], r["freq"]) for r in rows)
-            return _driver_learn(pairs, n_merges, min_pair_freq)
+    rows = collect_if_small(wf, LEARN_BPE_MAX_COLLECT)
+    if rows is not None:
+        pairs = sorted(zip(rows["word"].tolist(), rows["freq"].tolist()))
+        return _driver_learn(pairs, n_merges, min_pair_freq)
     return _distributed_merge_rounds(wf, n_merges, min_pair_freq)
 
 

@@ -73,48 +73,37 @@ def connected_components(
     src: str = "ident_a",
     dst: str = "ident_b",
     max_iter: int = 25,
-    checkpoint: bool = True,
-    driver_threshold: int | None = DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
     """Return (ident string, component string) for every vertex in ``edges``.
 
     ``component`` is the lexicographic min id of the vertex's component.
-    Deterministic; converges in O(log diameter) passes. Edge sets at or
-    below ``driver_threshold`` (count probed with one cheap job) short-cut
-    to driver-side union-find — identical output, no iterative jobs; pass
-    ``driver_threshold=None``/0 to force the distributed path (tests assert
-    both paths agree).
+    Deterministic; converges in O(log diameter) passes. Edge sets of at
+    most ``DRIVER_CC_MAX_EDGES`` distinct non-self edges (read per call;
+    0 forces the distributed path) short-cut to driver-side union-find —
+    identical output, no iterative jobs (tests assert both paths agree).
     """
-    if driver_threshold:
-        # ONE probe job doubling as the collect: distinct non-self edges,
-        # truncated at threshold+1 rows so a big edge set can never flood
-        # the driver. When the result fits, it IS the edge list (the old
-        # two-job probe-then-collect paid a second full pass); when it
-        # overflows, the distributed path below re-derives its own distinct
-        # (which it needed anyway).
-        rows = (
-            edges.select(src, dst)
-            .where(F.col(src) != F.col(dst))
-            .distinct()
-            .limit(driver_threshold + 1)
-            .collect()
-        )
-        if len(rows) <= driver_threshold:
-            pairs = [(r[0], r[1]) for r in rows]
-            mapping = _driver_union_find(pairs)
-            spark = edges.sparkSession
-            if not mapping:
-                return spark.createDataFrame([], "ident string, component string")
-            # broadcast hint: a Python createDataFrame plans as an
-            # ExistingRDD scan with UNKNOWN stats (defaultSizeInBytes), so
-            # a downstream join picks SortMergeJoin + two exchanges for a
-            # relation this function GUARANTEES is <= driver_threshold
-            # rows (it was just collected). The hint turns e.g.
-            # canonical_mapping's left join into a BroadcastHashJoin
-            # (measured: 2.45s -> sub-second fixed cost in the kg bench).
-            return F.broadcast(spark.createDataFrame(
-                sorted(mapping.items()), "ident string, component string"))
-    sym = (
+    # ONE truncated fetch is both the size probe and the edge list; when
+    # it overflows, the distributed path below re-derives its own distinct
+    # (which it needed anyway)
+    rows = collect_if_small(
+        edges.select(src, dst).where(F.col(src) != F.col(dst)).distinct(),
+        DRIVER_CC_MAX_EDGES)
+    if rows is not None:
+        mapping = _driver_union_find(
+            list(rows.itertuples(index=False, name=None)))
+        spark = edges.sparkSession
+        if not mapping:
+            return spark.createDataFrame([], "ident string, component string")
+        # broadcast hint: a Python createDataFrame plans as an
+        # ExistingRDD scan with UNKNOWN stats (defaultSizeInBytes), so
+        # a downstream join picks SortMergeJoin + two exchanges for a
+        # relation this function GUARANTEES is <= DRIVER_CC_MAX_EDGES
+        # rows (it was just collected). The hint turns e.g.
+        # canonical_mapping's left join into a BroadcastHashJoin
+        # (measured: 2.45s -> sub-second fixed cost in the kg bench).
+        return F.broadcast(spark.createDataFrame(
+            sorted(mapping.items()), "ident string, component string"))
+    sym = _ckpt(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col("a") != F.col("b"))
         .unionByName(
@@ -123,16 +112,12 @@ def connected_components(
         )
         .distinct()
     )
-    if checkpoint:
-        sym = _ckpt(sym)
 
-    labels = (
+    labels = _ckpt(
         sym.select(F.col("a").alias("ident"))
         .distinct()
         .withColumn("label", F.col("ident"))
     )
-    if checkpoint:
-        labels = _ckpt(labels)
 
     for _ in range(max_iter):
         # min label over neighbors (map-side combine handles degree skew)
@@ -160,8 +145,7 @@ def connected_components(
                 F.least(F.col("label"), F.coalesce("jlabel", "label")).alias("label"),
             )
         )
-        if checkpoint:
-            new_labels = _ckpt(new_labels)
+        new_labels = _ckpt(new_labels)
 
         changed = (
             new_labels.alias("n")
@@ -202,7 +186,6 @@ def incremental_canonical_mapping(
     new_idents: DataFrame | None = None,
     src: str = "ident_a",
     dst: str = "ident_b",
-    driver_threshold: int | None = DRIVER_CC_MAX_EDGES,
 ) -> tuple[DataFrame, DataFrame]:
     """Delta canonicalization: fold a batch of NEW identity edges into an
     existing (ident, canonical_id) mapping WITHOUT re-running connected
@@ -232,8 +215,7 @@ def incremental_canonical_mapping(
     hot canon before any shuffle.
     """
     parts = incremental_canonical_parts(
-        prev_mapping, new_edges, new_idents=new_idents, src=src, dst=dst,
-        driver_threshold=driver_threshold)
+        prev_mapping, new_edges, new_idents=new_idents, src=src, dst=dst)
     return post_sync_mapping(parts), parts["remaps"]
 
 
@@ -250,7 +232,6 @@ def incremental_canonical_parts(
     new_idents: DataFrame | None = None,
     src: str = "ident_a",
     dst: str = "ident_b",
-    driver_threshold: int | None = DRIVER_CC_MAX_EDGES,
 ) -> dict:
     """The pieces of ``incremental_canonical_mapping`` before the final
     union (``post_sync_mapping``), for callers that must avoid touching
@@ -275,7 +256,7 @@ def incremental_canonical_parts(
     checkpoint each. Tests assert both tiers agree.
     """
     spark = new_edges.sparkSession
-    cap = min(driver_threshold or 0, DRIVER_PARTS_MAX_ROWS)
+    cap = DRIVER_PARTS_MAX_ROWS
     prev_rows = ([] if prev_mapping is None else
                  _rows_if_small(prev_mapping.select("ident", "canonical_id"),
                                 cap))
@@ -314,7 +295,7 @@ def incremental_canonical_parts(
         # empty literals instead of running ~5 provably-empty join/ckpt
         # jobs (driver-contract q93 pays this fold's fixed cost per bench)
         empty = spark.createDataFrame([], _MAPPING_SCHEMA)
-        comps = connected_components(e, driver_threshold=driver_threshold)
+        comps = connected_components(e)
         changed = _ckpt(
             comps.select("ident", F.col("component").alias("canonical_id")))
         iso = (
@@ -345,8 +326,7 @@ def incremental_canonical_parts(
         .select(F.col("ident").alias("ident_a"),
                 F.col("canonical_id").alias("ident_b"))
     )
-    comps = connected_components(
-        e.unionByName(star), driver_threshold=driver_threshold)
+    comps = connected_components(e.unionByName(star))
     changed = _ckpt(
         comps.select("ident", F.col("component").alias("canonical_id")))
 
@@ -399,8 +379,8 @@ _REMAP_SCHEMA = "old_canonical_id string, new_canonical_id string"
 
 def _rows_if_small(df: DataFrame, cap: int) -> list[tuple] | None:
     """``df``'s rows as tuples when it has at most ``cap`` rows (one
-    truncated fetch), else None; a zero cap fetches nothing."""
-    pdf = collect_if_small(df, cap) if cap else None
+    truncated fetch), else None."""
+    pdf = collect_if_small(df, cap)
     return None if pdf is None else list(pdf.itertuples(index=False,
                                                         name=None))
 
@@ -418,7 +398,7 @@ def _driver_incremental_parts(spark, prev_rows: list, edge_rows: list,
         if not rows:
             return spark.createDataFrame([], schema)
         # broadcast hint: ExistingRDD scans carry no stats (see
-        # connected_components); every list here is <= driver_threshold
+        # connected_components); every list here is <= DRIVER_PARTS_MAX_ROWS
         return F.broadcast(spark.createDataFrame(rows, schema))
 
     # the distributed path's filters: a NULL endpoint joins no pair and

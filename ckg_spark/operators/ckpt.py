@@ -55,6 +55,9 @@ def collect_if_small(df: DataFrame, cap: int):
     collect: a big input can never flood the driver, and a small one costs
     one Spark job instead of a count followed by a collect. The fetch goes
     through Arrow (``toPandas``), ~5x cheaper than Row objects at 500k rows,
-    which is also the price an input just over a cap pays for the probe."""
+    which is also the price an input just over a cap pays for the probe.
+    A cap of 0 fetches nothing: it turns the driver tier off."""
+    if not cap:
+        return None
     rows = df.limit(cap + 1).toPandas()
     return rows if len(rows) <= cap else None

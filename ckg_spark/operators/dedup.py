@@ -428,8 +428,7 @@ DECONTAM_BROADCAST_MAX_HASHES = 20_000_000  # ~160 MB of 8-byte hashes
 
 def contamination_report(docs: DataFrame, benchmark: DataFrame,
                          id_col: str = "doc_id", text_col: str = "text",
-                         k: int = 13,
-                         broadcast_max_hashes: int = DECONTAM_BROADCAST_MAX_HASHES) -> DataFrame:
+                         k: int = 13) -> DataFrame:
     """Benchmark-overlap report: for every training document, how many of
     its k-token shingles appear anywhere in the benchmark set (the GPT-3 /
     PaLM-style n-gram decontamination check, typically k = 13).
@@ -438,12 +437,12 @@ def contamination_report(docs: DataFrame, benchmark: DataFrame,
     benchmark SUITE of millions of examples hashes to a broadcastable set —
     so the corpus-side scan is one broadcast semi-join + algebraic count
     and the 100-TB corpus is never shuffled. The broadcast is SIZE-GATED
-    with a truncated count (same probe pattern as connected_components /
-    louvain): a caller passing a large held-out corpus as ``benchmark``
-    gets a plain shuffle left-semi join instead of a driver OOM. Output:
+    at ``DECONTAM_BROADCAST_MAX_HASHES`` (a truncated count, the constant
+    read per call): a caller passing a large held-out corpus as
+    ``benchmark`` gets a plain shuffle left-semi join instead of a driver
+    OOM. Output:
     (doc_id, n_contaminated, n_shingles, frac_contaminated)."""
-    bench_side = bench_hash_side(benchmark, id_col, text_col, k,
-                                 broadcast_max_hashes)
+    bench_side = bench_hash_side(benchmark, id_col, text_col, k)
     doc_sh = shingles(docs, id_col, text_col, k=k).withColumn(
         "_h", F.xxhash64("shingle"))
     per_doc = doc_sh.groupBy("doc_id").agg(
@@ -457,7 +456,7 @@ def contamination_report(docs: DataFrame, benchmark: DataFrame,
 
 
 def bench_hash_side(benchmark: DataFrame, id_col: str, text_col: str,
-                    k: int, broadcast_max_hashes: int) -> DataFrame:
+                    k: int) -> DataFrame:
     """Distinct benchmark gram hashes with the size-gated broadcast hint —
     shared by the batch report above and the incremental index probe
     (plans/decontam.py) so the gate can never drift between them."""
@@ -466,8 +465,8 @@ def bench_hash_side(benchmark: DataFrame, id_col: str, text_col: str,
         .select(F.xxhash64("shingle").alias("_bh")).distinct()
         .localCheckpoint(eager=True)
     )
-    small = bench_h.limit(broadcast_max_hashes + 1).count() \
-        <= broadcast_max_hashes
+    cap = DECONTAM_BROADCAST_MAX_HASHES
+    small = bench_h.limit(cap + 1).count() <= cap
     return F.broadcast(bench_h) if small else bench_h
 
 

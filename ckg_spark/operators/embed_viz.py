@@ -48,9 +48,9 @@ DRIVER_VIZ_MAX_SAMPLES = 4_000
 
 
 def _collect_wide(df: DataFrame, index: str = "subject"):
-    """Wide numeric matrix for the samples cohort, guarded: probe the
-    sample count with a truncated count before collecting (house probe
-    pattern: canonicalize.py:83)."""
+    """Wide numeric matrix for the samples cohort, guarded: a truncated
+    count of the distinct samples refuses more than
+    ``DRIVER_VIZ_MAX_SAMPLES`` before the pivot is collected."""
     cap = DRIVER_VIZ_MAX_SAMPLES
     if df.select(index).distinct().limit(cap + 1).count() > cap:
         raise ValueError(

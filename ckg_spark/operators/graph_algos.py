@@ -11,10 +11,10 @@ personalized) is power iteration with the dangling-mass correction, in two
 tiers: an edge set of at most ``DRIVER_PAGERANK_MAX_EDGES`` (500k) is
 collected once and iterated in numpy on the driver, a larger one runs the
 distributed join loop (setting the constant to 0 forces it). The community
-algorithms split the same way (driver below their caps, contraction or a
-refusal above; their ``driver_threshold=0`` forces the distributed path
-where there is one). An input's first size probe is one truncated Arrow
-fetch (``ckpt.collect_if_small``). Results are deterministic under any
+algorithms split the same way (driver below their module caps, contraction
+or a refusal above; a cap of 0 forces the distributed path where there is
+one). An input's first size probe is one truncated Arrow fetch
+(``ckpt.collect_if_small``). Results are deterministic under any
 parallelism.
 """
 
@@ -118,30 +118,29 @@ def _power_iteration(edges: DataFrame, seeds: DataFrame | None, iters: int,
              .unionByName(pairs.select(F.col("obj").alias("id")))
              .distinct())
     cap = DRIVER_PAGERANK_MAX_EDGES
-    if cap:
-        rows = collect_if_small(pairs, cap)
-        # a null endpoint never joins in the distributed loop; keep its
-        # semantics by sending such graphs there
-        if rows is not None and rows.isna().any(axis=None):
+    rows = collect_if_small(pairs, cap)
+    # a null endpoint never joins in the distributed loop; keep its
+    # semantics by sending such graphs there
+    if rows is not None and rows.isna().any(axis=None):
+        rows = None
+    seed_ids = None
+    if rows is not None and seeds is not None:
+        # a null seed never joins either
+        seed_rows = collect_if_small(
+            seeds.select("id").where(F.col("id").isNotNull()), cap)
+        if seed_rows is None:
             rows = None
-        seed_ids = None
-        if rows is not None and seeds is not None:
-            # a null seed never joins either
-            seed_rows = collect_if_small(
-                seeds.select("id").where(F.col("id").isNotNull()), cap)
-            if seed_rows is None:
-                rows = None
-            else:
-                seed_ids = seed_rows["id"].tolist()
-        if rows is not None:
-            ids, ranks = _driver_pagerank(rows, seed_ids, iters, damping)
-            schema = StructType([
-                StructField("id", verts.schema["id"].dataType),
-                StructField("rank", DoubleType(), False)])
-            spark = edges.sparkSession
-            return F.broadcast(spark.createDataFrame(
-                spark.sparkContext.parallelize(list(zip(ids, ranks)), 1),
-                schema))
+        else:
+            seed_ids = seed_rows["id"].tolist()
+    if rows is not None:
+        ids, ranks = _driver_pagerank(rows, seed_ids, iters, damping)
+        schema = StructType([
+            StructField("id", verts.schema["id"].dataType),
+            StructField("rank", DoubleType(), False)])
+        spark = edges.sparkSession
+        return F.broadcast(spark.createDataFrame(
+            spark.sparkContext.parallelize(list(zip(ids, ranks)), 1),
+            schema))
 
     verts = _ckpt(verts)
     if seeds is None:
@@ -302,14 +301,14 @@ def label_propagation(edges: DataFrame, iters: int = 5) -> DataFrame:
 #
 # Scale shape (same split as canonicalize.connected_components): knowledge
 # graphs the reference runs communities on are dictionary-scale (the
-# report-level similarity networks), so edge sets <= driver_threshold run
-# classic sequential Louvain on the driver. Bigger graphs take the
-# distributed path: parity-damped best-community moves (each round, half the
-# nodes — chosen by hash parity — may move to the neighbor community with
-# max modularity gain), then the graph is CONTRACTED by community and the
-# dictionary-scale contracted graph is refined on the driver. Both paths
-# label a community by the minimum member id — deterministic at any
-# parallelism.
+# report-level similarity networks), so edge sets of at most
+# DRIVER_LOUVAIN_MAX_EDGES run classic sequential Louvain on the driver.
+# Bigger graphs take the distributed path: parity-damped best-community
+# moves (each round, half the nodes — chosen by hash parity — may move to
+# the neighbor community with max modularity gain), then the graph is
+# CONTRACTED by community and the dictionary-scale contracted graph is
+# refined on the driver. Both paths label a community by the minimum member
+# id — deterministic at any parallelism.
 
 
 def _driver_louvain(edge_list: list, max_passes: int = 10) -> dict:
@@ -449,32 +448,33 @@ DRIVER_LOUVAIN_MAX_EDGES = 500_000
 
 
 def louvain(edges: DataFrame, weight_col: str | None = None,
-            driver_threshold: int | None = DRIVER_LOUVAIN_MAX_EDGES,
             move_rounds: int = 4) -> DataFrame:
     """(id, community) modularity communities; community = min member id.
 
-    Edge sets <= driver_threshold (probed with a truncated collect, like
-    connected_components) collect the aggregated (a, b, w) list and run
-    sequential Louvain. Larger graphs run ``move_rounds`` of distributed
-    parity-damped modularity-gain moves (all DataFrame joins/aggs; parity =
+    Edge sets of at most ``DRIVER_LOUVAIN_MAX_EDGES`` (one truncated
+    fetch, the constant read per call) run sequential Louvain on the
+    driver. Larger graphs run ``move_rounds`` of distributed parity-damped
+    modularity-gain moves (all DataFrame joins/aggs; parity =
     xxhash64(id) % 2 alternates which half of the nodes may move each round,
     the standard synchronous-oscillation damper), CONTRACT the graph by the
     resulting communities — typically orders of magnitude smaller — and
     finish on the driver, composing the two mappings with one broadcast-free
-    equi-join. Pass ``driver_threshold=None``/0 to force the distributed
-    path (tests assert both paths agree on fixtures)."""
+    equi-join. The same constant caps the contracted graph the driver
+    refines, so setting it to 0 forces the distributed path with no
+    refinement (tests assert both paths agree on fixtures)."""
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
-    spark = edges.sparkSession
-    if driver_threshold:
-        rows = collect_if_small(e, driver_threshold)
-        if rows is not None:
-            pairs = list(rows.itertuples(index=False, name=None))
-            mapping = _driver_louvain(pairs)
-            if not mapping:
-                return spark.createDataFrame([], "id string, community string")
-            return spark.createDataFrame(
-                sorted(mapping.items()), "id string, community string")
+    rows = collect_if_small(e, DRIVER_LOUVAIN_MAX_EDGES)
+    if rows is not None:
+        mapping = _driver_louvain(list(rows.itertuples(index=False, name=None)))
+        return edges.sparkSession.createDataFrame(
+            sorted(mapping.items()), "id string, community string")
+    return _distributed_louvain(e, move_rounds)
 
+
+def _distributed_louvain(e: DataFrame, move_rounds: int = 4) -> DataFrame:
+    """The distributed tier of ``louvain`` over its aggregated non-self
+    (a, b, w) edge frame ``e``; ``greedy_modularity`` contracts with it."""
+    spark = e.sparkSession
     # ---- distributed first pass -------------------------------------------
     m_row = e.agg(F.sum("w")).collect()[0][0]
     if m_row is None:  # empty edge set on the forced-distributed path
@@ -561,7 +561,7 @@ def louvain(edges: DataFrame, weight_col: str | None = None,
     # run another LEVEL of distributed move rounds on the contracted graph
     # (supernodes as nodes with self-loop-inclusive degrees — the standard
     # Louvain aggregation step) instead of collecting it.
-    cap = int(driver_threshold or DRIVER_LOUVAIN_MAX_EDGES)
+    cap = DRIVER_LOUVAIN_MAX_EDGES
     fits = False
     for _level in range(3):
         la = labels.withColumnRenamed("id", "a").withColumnRenamed("com", "ca")
@@ -672,12 +672,12 @@ def _driver_cnm(edge_list: list) -> dict:
     return out
 
 
-def greedy_modularity(edges: DataFrame, weight_col: str | None = None,
-                      driver_threshold: int | None = DRIVER_LOUVAIN_MAX_EDGES) -> DataFrame:
+def greedy_modularity(edges: DataFrame,
+                      weight_col: str | None = None) -> DataFrame:
     """Reference 'greedy_modularity' (nx greedy_modularity_communities,
     analytics.py:2825-2827): CNM greedy merging. Edge sets within
-    ``driver_threshold`` (one truncated collect) run sequential CNM on the
-    driver — the reference's graphs are dictionary-scale report networks.
+    ``DRIVER_LOUVAIN_MAX_EDGES`` (one truncated fetch) run sequential CNM on
+    the driver — the reference's graphs are dictionary-scale report networks.
     Larger graphs first contract by a distributed louvain partition (the
     same guarded path louvain uses), then CNM-merge the contracted
     supernode graph and compose the two mappings — greedy merging needs a
@@ -685,19 +685,15 @@ def greedy_modularity(edges: DataFrame, weight_col: str | None = None,
     not a distributed CNM. Returns (id, community), community = min member."""
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
-    cap = int(driver_threshold or DRIVER_LOUVAIN_MAX_EDGES)
+    cap = DRIVER_LOUVAIN_MAX_EDGES
     rows = collect_if_small(e, cap)
     if rows is not None:
-        pairs = list(rows.itertuples(index=False, name=None))
-        mapping = _driver_cnm(pairs)
-        if not mapping:
-            return spark.createDataFrame([], "id string, community string")
+        mapping = _driver_cnm(list(rows.itertuples(index=False, name=None)))
         return spark.createDataFrame(
             sorted(mapping.items()), "id string, community string")
 
     # large path: louvain-contract first (guarded), then CNM on supernodes
-    labels = louvain(edges, weight_col=weight_col,
-                     driver_threshold=driver_threshold)
+    labels = _distributed_louvain(e)
     la = labels.select(F.col("id").alias("a"), F.col("community").alias("ca"))
     lb = labels.select(F.col("id").alias("b"), F.col("community").alias("cb"))
     contracted = (
@@ -762,16 +758,16 @@ DRIVER_AP_MAX_NODES = 2_000
 
 
 def girvan_newman(edges: DataFrame, n_communities: int = 2,
-                  weight_col: str | None = None,
-                  driver_threshold: int | None = DRIVER_GN_MAX_EDGES) -> DataFrame:
+                  weight_col: str | None = None) -> DataFrame:
     """Reference 'girvan_newman' branch (analytics.py:2831-2833). The
     textbook algorithm: repeatedly remove the highest-edge-betweenness edge
     (Brandes BFS accumulation) until the graph splits into
     ``n_communities`` components. Driver-bound BY NATURE — each removal
     needs a fresh global betweenness pass (O(V*E) serial), so this runs on
-    collected dictionary-scale graphs only, guarded by the same
-    truncated collect as louvain; at corpus scale, contract with
-    louvain first and refine the supernode graph.
+    collected dictionary-scale graphs only: at most
+    ``DRIVER_GN_MAX_EDGES``, fetched once, larger graphs are refused; at
+    corpus scale, contract with louvain first and refine the supernode
+    graph.
 
     Parity note: the reference wires ``most_central_edge`` as the
     most_valuable_edge callback, but that function returns the max
@@ -783,7 +779,7 @@ def girvan_newman(edges: DataFrame, n_communities: int = 2,
     edge. Returns (id, community), community = min member id."""
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
-    cap = int(driver_threshold or DRIVER_GN_MAX_EDGES)
+    cap = DRIVER_GN_MAX_EDGES
     rows = collect_if_small(e, cap)
     if rows is None:
         raise ValueError(
@@ -839,8 +835,7 @@ def girvan_newman(edges: DataFrame, n_communities: int = 2,
 def affinity_propagation(edges: DataFrame, weight_col: str | None = None,
                          damping: float = 0.5, max_iter: int = 200,
                          convergence_iter: int = 15,
-                         preference: float | None = None,
-                         driver_threshold: int | None = DRIVER_AP_MAX_EDGES) -> DataFrame:
+                         preference: float | None = None) -> DataFrame:
     """Reference 'affinity_propagation' branch (analytics.py:2835-2839):
     the reference densifies the graph (nx.to_pandas_adjacency) and runs
     sklearn AffinityPropagation on the adjacency as the similarity matrix.
@@ -850,14 +845,15 @@ def affinity_propagation(edges: DataFrame, weight_col: str | None = None,
     sparse-adjacency similarity the median is usually 0, which tends to a
     single cluster, so callers wanting the classic behavior should pass an
     explicit ``preference``) in pure numpy on the collected
-    dictionary-scale graph; dense NxN is inherent to the algorithm, so it
-    is guarded like the other driver-bound tails. Returns (id, community),
+    dictionary-scale graph; dense NxN is inherent to the algorithm, so
+    graphs above ``DRIVER_AP_MAX_EDGES`` edges or ``DRIVER_AP_MAX_NODES``
+    nodes are refused. Returns (id, community),
     community = min member id of each exemplar's cluster."""
     import numpy as np
 
     e = _sym_weighted(edges, weight_col).where(F.col("a") != F.col("b"))
     spark = edges.sparkSession
-    cap = int(driver_threshold or DRIVER_AP_MAX_EDGES)
+    cap = DRIVER_AP_MAX_EDGES
     rows = collect_if_small(e, cap)
     if rows is None:
         raise ValueError(
@@ -981,7 +977,7 @@ def get_network_communities(edges: DataFrame, algorithm: str = "louvain",
     reference's broken most_valuable_edge callback) and
     'affinity_propagation' (Frey-Dueck message passing). The last two are
     driver-bound by nature (global recomputation per edge removal / dense
-    NxN) and guard their collect with the truncated-count probe; for
+    NxN) and refuse graphs above their caps (``collect_if_small``); for
     graphs above their caps use ``refine_communities`` (louvain-contract
     -> refine -> project back), the corpus-scale composition.
     Returns (id, community)."""

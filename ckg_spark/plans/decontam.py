@@ -28,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.ckpt import checkpoint_reset_stats as _ckpt
-from ..operators.dedup import DECONTAM_BROADCAST_MAX_HASHES, shingles
+from ..operators.dedup import shingles
 from . import table as T
 
 
@@ -105,7 +105,6 @@ def probe_benchmark(
     k: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_max_hashes: int = DECONTAM_BROADCAST_MAX_HASHES,
 ) -> DataFrame:
     """Contamination report for ANY benchmark against the indexed corpus
     — row-identical to `dedup.contamination_report(full_docs, benchmark)`
@@ -114,8 +113,7 @@ def probe_benchmark(
     from ..operators.dedup import bench_hash_side, contamination_select
 
     _check_index_params(index_dir, k)
-    bench_side = bench_hash_side(benchmark, id_col, text_col, k,
-                                 broadcast_max_hashes)
+    bench_side = bench_hash_side(benchmark, id_col, text_col, k)
     idx = T.read(spark, index_dir)
     hits = (idx.join(bench_side, on=idx["h"] == bench_side["_bh"],
                      how="left_semi")

@@ -10,6 +10,20 @@ from ckg_spark.vocab import build_vocab, vocab_to_spark  # noqa: E402
 from ckg_spark.datagen import gen_transcripts  # noqa: E402
 
 
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("ckg_spark_tests", cpus=int(os.environ.get("TEST_CPUS", "8")),

@@ -4,7 +4,9 @@ reference recompute, distributed-rounds path equality, apply properties."""
 import pandas as pd
 import pytest
 
+from conftest import _spark_jobs
 from ckg_spark.operators import bpe as B
+from ckg_spark.operators.ckpt import collect_if_small
 
 
 DOCS = [
@@ -66,14 +68,26 @@ def test_learn_bpe_matches_naive_reference(spark):
     assert "low</w>" in merged_tokens or "low" in merged_tokens
 
 
-def test_distributed_rounds_equal_driver_path(spark):
+def test_distributed_rounds_equal_driver_path(spark, monkeypatch):
     df = _docs_df(spark)
     fast = B.learn_bpe(df, n_merges=10)
-    slow = B.learn_bpe(df, n_merges=10, driver_threshold=0)
+    monkeypatch.setattr(B, "LEARN_BPE_MAX_COLLECT", 0)
+    slow = B.learn_bpe(df, n_merges=10)
     assert fast == slow
     # determinism across parallelism for the distributed path
-    slow7 = B.learn_bpe(df.repartition(7), n_merges=10, driver_threshold=0)
+    slow7 = B.learn_bpe(df.repartition(7), n_merges=10)
     assert slow7 == slow
+
+
+def test_driver_path_fetches_word_table_once(spark):
+    """The driver tier's one truncated fetch is its size probe and its
+    collect: learn_bpe runs no more Spark jobs than that fetch alone."""
+    df = _docs_df(spark)
+    want, learn_jobs = _spark_jobs(spark, lambda: B.learn_bpe(df, n_merges=10))
+    _, fetch_jobs = _spark_jobs(spark, lambda: collect_if_small(
+        B.word_frequencies(df), B.LEARN_BPE_MAX_COLLECT))
+    assert want == _naive_learn(DOCS, 10)
+    assert learn_jobs <= fetch_jobs, (learn_jobs, fetch_jobs)
 
 
 def test_apply_bpe_matches_inorder_reference_and_reconstructs(spark):

@@ -6,6 +6,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import _spark_jobs
+from ckg_spark.operators import canonicalize as CN
 from ckg_spark.operators.canonicalize import (
     apply_remaps,
     canonical_mapping,
@@ -31,6 +33,13 @@ def _as_map(df):
     return {r["ident"]: r["canonical_id"] for r in df.collect()}
 
 
+def _all_distributed(monkeypatch):
+    """Send an incremental fold down its distributed plan, connected
+    components included."""
+    monkeypatch.setattr(CN, "DRIVER_PARTS_MAX_ROWS", 0)
+    monkeypatch.setattr(CN, "DRIVER_CC_MAX_EDGES", 0)
+
+
 def test_incremental_equals_batch_random_deltas(spark):
     pairs = _random_graph(11)
     cut1, cut2 = len(pairs) // 3, 2 * len(pairs) // 3
@@ -48,19 +57,19 @@ def test_incremental_equals_batch_random_deltas(spark):
     assert _as_map(mapping) == _as_map(batch)
 
 
-def test_incremental_distributed_cc_path_agrees(spark):
+def test_incremental_distributed_cc_path_agrees(spark, monkeypatch):
     pairs = _random_graph(23, n=40, m=50)
     d1, d2 = pairs[:25], pairs[25:]
-    m1, _ = incremental_canonical_mapping(None, _edges(spark, d1),
-                                          driver_threshold=0)
+    _all_distributed(monkeypatch)
+    m1, _ = incremental_canonical_mapping(None, _edges(spark, d1))
     m1 = m1.cache()
-    m2, _ = incremental_canonical_mapping(m1, _edges(spark, d2),
-                                          driver_threshold=0)
+    m2, _ = incremental_canonical_mapping(m1, _edges(spark, d2))
+    monkeypatch.undo()
     m2d, _ = incremental_canonical_mapping(m1, _edges(spark, d2))
     assert _as_map(m2) == _as_map(m2d)
 
 
-def test_driver_parts_fast_path_equals_distributed(spark):
+def test_driver_parts_fast_path_equals_distributed(spark, monkeypatch):
     """The r6 driver-scale fast path of incremental_canonical_parts must
     reproduce every piece of the distributed computation — including the
     remap log and self-mapped new idents — on a merge-heavy delta."""
@@ -75,8 +84,8 @@ def test_driver_parts_fast_path_equals_distributed(spark):
     m1, _ = incremental_canonical_mapping(None, _edges(spark, d1))
     m1 = m1.cache()
     fast = incremental_canonical_parts(m1, _edges(spark, d2), new_idents=ni)
-    slow = incremental_canonical_parts(m1, _edges(spark, d2), new_idents=ni,
-                                       driver_threshold=0)
+    _all_distributed(monkeypatch)
+    slow = incremental_canonical_parts(m1, _edges(spark, d2), new_idents=ni)
     for key in ("untouched", "changed", "isolated", "delta", "remaps"):
         assert sorted(map(tuple, fast[key].collect())) == \
             sorted(map(tuple, slow[key].collect())), key
@@ -206,16 +215,16 @@ def test_remap_log_resolves_chains(spark, tmp_path):
     assert late == {("c", "a")}
 
 
-def test_sync_handles_mega_star_component(spark, tmp_path):
+def test_sync_handles_mega_star_component(spark, tmp_path, monkeypatch):
     # one hot canon with 300 members, then a merge touches it: the star
     # rebuild stays distributed-safe (exercise the distributed CC path)
     d = str(tmp_path / "canon4")
     star = [("a000", f"m{i:03d}") for i in range(300)]
     C.sync_canonical_mapping(spark, d, _edges(spark, star))
+    _all_distributed(monkeypatch)
     m2, remaps = incremental_canonical_mapping(
         C.read_canonical_mapping(spark, d),
-        _edges(spark, [("m000", "zz")]),
-        driver_threshold=0)
+        _edges(spark, [("m000", "zz")]))
     got = _as_map(m2)
     assert got["zz"] == "a000" and len(got) == 302
     assert remaps.count() == 0
@@ -523,7 +532,6 @@ def test_sync_graph_tick_job_budget(spark, tmp_path, vocab_tables):
     re-reading the table. The first tick is the warm-up."""
     from ckg_spark.datagen import gen_transcripts
     from ckg_spark.vocab import build_vocab
-    from test_graph_queries import _spark_jobs
 
     vb = build_vocab(n_entities=120, seed=7)  # matches conftest vocab_tables
     tdir, edir, mdir = (str(tmp_path / n) for n in ("t", "e", "m"))

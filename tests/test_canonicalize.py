@@ -60,8 +60,9 @@ def test_cc_medium_scale_with_mega_component(spark):
         assert c == exp[v]
 
 
-def test_driver_and_distributed_cc_agree(spark):
+def test_driver_and_distributed_cc_agree(spark, monkeypatch):
     import random
+    from ckg_spark.operators import canonicalize as CN
     from ckg_spark.operators.canonicalize import connected_components
     rng = random.Random(5)
     # random graph with several components incl. a chain (tests jumping)
@@ -70,6 +71,7 @@ def test_driver_and_distributed_cc_agree(spark):
     df = spark.createDataFrame(edges, "ident_a string, ident_b string")
     fast = {(r["ident"], r["component"])
             for r in connected_components(df).collect()}
+    monkeypatch.setattr(CN, "DRIVER_CC_MAX_EDGES", 0)
     dist = {(r["ident"], r["component"])
-            for r in connected_components(df, driver_threshold=None).collect()}
+            for r in connected_components(df).collect()}
     assert fast == dist and len(fast) > 0

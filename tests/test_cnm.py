@@ -68,13 +68,25 @@ def test_cnm_weighted_overrides_topology(spark):
     assert part["a"] != part["c"]
 
 
-def test_cnm_contracted_path_matches_driver(spark, two_cliques):
-    """Above-threshold graphs louvain-contract then CNM-merge supernodes;
-    on the fixture both paths give the cliques."""
+def test_cnm_contracted_path_matches_driver(spark, two_cliques, monkeypatch):
+    """Above-cap graphs louvain-contract then CNM-merge supernodes; on the
+    fixture (21 edges, contracted to 3 rows, cap 4) both paths give the
+    cliques. The input is probed once: the contraction reuses the probed
+    edge frame instead of re-running louvain's own probe."""
     edges, na, nb = two_cliques
     base = {r["id"]: r["community"] for r in G.greedy_modularity(edges).collect()}
+    caps = []
+    probe = G.collect_if_small
+
+    def spy(df, cap):
+        caps.append(cap)
+        return probe(df, cap)
+
+    monkeypatch.setattr(G, "collect_if_small", spy)
+    monkeypatch.setattr(G, "DRIVER_LOUVAIN_MAX_EDGES", 4)
     big = {r["id"]: r["community"]
-           for r in G.greedy_modularity(edges, driver_threshold=4).collect()}
+           for r in G.greedy_modularity(edges).collect()}
+    assert caps == [4]
     assert base == big
 
 
@@ -153,12 +165,15 @@ def test_affinity_propagation_two_blocks(spark):
     assert part["a0"] != part["b0"]
 
 
-def test_driver_bound_algos_guard_large_graphs(spark, two_cliques):
+def test_driver_bound_algos_guard_large_graphs(spark, two_cliques,
+                                               monkeypatch):
     edges, _, _ = two_cliques
+    monkeypatch.setattr(G, "DRIVER_GN_MAX_EDGES", 2)
+    monkeypatch.setattr(G, "DRIVER_AP_MAX_EDGES", 2)
     with pytest.raises(ValueError):
-        G.girvan_newman(edges, driver_threshold=2)
+        G.girvan_newman(edges)
     with pytest.raises(ValueError):
-        G.affinity_propagation(edges, driver_threshold=2)
+        G.affinity_propagation(edges)
 
 
 def test_ap_node_cap_guard(spark):

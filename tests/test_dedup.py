@@ -180,7 +180,7 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_contamination_large_benchmark_takes_shuffle_path(spark):
+def test_contamination_large_benchmark_takes_shuffle_path(spark, monkeypatch):
     """The benchmark broadcast is size-gated (round-3 verdict item 3): a
     caller passing a large held-out corpus as ``benchmark`` must get a plan
     change (plain shuffle left-semi), not a forced-broadcast driver OOM —
@@ -194,9 +194,9 @@ def test_contamination_large_benchmark_takes_shuffle_path(spark):
     bench = docs.where(F.col("doc_id") % 5 == 0)
     wide = {r["doc_id"]: (r["n_contaminated"], r["n_shingles"])
             for r in D.contamination_report(docs, bench, k=3).collect()}
+    monkeypatch.setattr(D, "DECONTAM_BROADCAST_MAX_HASHES", 1)
     gated = {r["doc_id"]: (r["n_contaminated"], r["n_shingles"])
-             for r in D.contamination_report(
-                 docs, bench, k=3, broadcast_max_hashes=1).collect()}
+             for r in D.contamination_report(docs, bench, k=3).collect()}
     assert wide == gated
     # doc 0 is itself in the benchmark: fully contaminated; doc 1 only
     # shares the shingles not containing its unique number token

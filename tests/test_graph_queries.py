@@ -5,6 +5,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import _spark_jobs
 from ckg_spark.operators import graph_algos as G
 from ckg_spark.queries import catalog as Q
 from ckg_spark.sources.readers import parse_obo
@@ -332,20 +333,6 @@ def test_streaming_snapshot_comention_partials_merge_exact(
 # ---------------------------------------------------------------------------
 # PageRank tiers: numpy on the driver vs the distributed loop
 # ---------------------------------------------------------------------------
-
-def _spark_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    import uuid
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 def _assert_ranks_close(got, exp, tol=1e-12):
     assert set(got) == set(exp)

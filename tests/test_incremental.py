@@ -6,6 +6,7 @@ transcript row + static vocab tables."""
 import pandas as pd
 import pytest
 
+from conftest import _spark_jobs
 from ckg_spark.datagen import gen_transcripts
 from ckg_spark.plans import incremental as I
 from ckg_spark.plans import table as T
@@ -122,8 +123,6 @@ def test_idle_tick_commits_metadata_only(spark, tmp_path, vocab_tables):
     """A source commit that adds no files makes an idle tick: the mark
     advances in a metadata-only commit that runs no Spark job and adds no
     file, so a consumer diffing the edge table sees no delta across it."""
-    from test_graph_queries import _spark_jobs
-
     tdir = str(tmp_path / "transcripts")
     edir = str(tmp_path / "edges")
     T.append(_chunk(spark, 60, seed=23), tdir)

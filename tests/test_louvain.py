@@ -66,15 +66,15 @@ def test_louvain_ring_of_triangles(spark):
     assert len(set(part.values())) == 4
 
 
-def test_distributed_path_matches_driver(spark, two_cliques):
-    """driver_threshold=0 forces the distributed move+contract path; the
-    partition (as a set of communities) must match the driver result."""
+def test_distributed_path_matches_driver(spark, two_cliques, monkeypatch):
+    """A cap of 20, one below the fixture's 21 edges, sends them down the
+    distributed move+contract path and admits the contracted graph
+    (3 rows) to driver refinement; the partition (as a set of communities)
+    must match the driver result."""
     edges, _, _ = two_cliques
     drv = {r["id"]: r["community"] for r in G.louvain(edges).collect()}
-    dist = {
-        r["id"]: r["community"]
-        for r in G.louvain(edges, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(G, "DRIVER_LOUVAIN_MAX_EDGES", 20)
+    dist = {r["id"]: r["community"] for r in G.louvain(edges).collect()}
     def groups(p):
         inv = {}
         for n, c in p.items():
@@ -83,7 +83,7 @@ def test_distributed_path_matches_driver(spark, two_cliques):
     assert groups(drv) == groups(dist)
 
 
-def test_distributed_path_ring(spark):
+def test_distributed_path_ring(spark, monkeypatch):
     pairs = []
     for t in range(6):
         n = [f"t{t}_{i}" for i in range(4)]
@@ -92,9 +92,12 @@ def test_distributed_path_ring(spark):
                 pairs.append((n[i], n[j]))
         pairs.append((n[3], f"t{(t + 1) % 6}_0"))
     edges = _edges_df(spark, pairs)
-    dist = G.louvain(edges, driver_threshold=0)
-    q_dist = G.modularity(edges, dist)
     drv = G.louvain(edges)
+    # 20: below the 42 edges, above the contracted graph (12 rows), so the
+    # distributed path runs and its contraction is refined on the driver
+    monkeypatch.setattr(G, "DRIVER_LOUVAIN_MAX_EDGES", 20)
+    dist = G.louvain(edges)
+    q_dist = G.modularity(edges, dist)
     q_drv = G.modularity(edges, drv)
     # distributed refinement must land within 5% of the sequential optimum
     assert q_dist >= q_drv - 0.05 * abs(q_drv), (q_dist, q_drv)
@@ -140,12 +143,13 @@ def test_get_network_communities_dispatch(spark, two_cliques):
         G.get_network_communities(edges, algorithm="nope")
 
 
-def test_louvain_empty_edges_distributed_path(spark):
+def test_louvain_empty_edges_distributed_path(spark, monkeypatch):
     """Forced-distributed path on an empty edge set returns an empty
     (id, community) frame instead of crashing on float(None) (round-3
     ADVICE item)."""
     e = spark.createDataFrame([], "subj string, obj string")
-    out = G.louvain(e, driver_threshold=None)
+    monkeypatch.setattr(G, "DRIVER_LOUVAIN_MAX_EDGES", 0)
+    out = G.louvain(e)
     assert out.columns == ["id", "community"]
     assert out.count() == 0
 
@@ -164,8 +168,8 @@ def test_louvain_contract_collect_guarded(spark, two_cliques, monkeypatch):
         return orig(pairs, **kw)
 
     monkeypatch.setattr(G, "_driver_louvain", spy)
-    part = {r["id"]: r["community"]
-            for r in G.louvain(edges, driver_threshold=2).collect()}
+    monkeypatch.setattr(G, "DRIVER_LOUVAIN_MAX_EDGES", 2)
+    part = {r["id"]: r["community"] for r in G.louvain(edges).collect()}
     assert all(c <= 2 for c in calls), calls  # nothing collected above cap
     assert len({part[n] for n in na}) == 1
     assert len({part[n] for n in nb}) == 1
@@ -173,12 +177,13 @@ def test_louvain_contract_collect_guarded(spark, two_cliques, monkeypatch):
     assert part[na[0]] == "a0" and part[nb[0]] == "b0"
 
 
-def test_louvain_small_cap_with_refinement_matches_default(spark, two_cliques):
+def test_louvain_small_cap_with_refinement_matches_default(spark, two_cliques,
+                                                          monkeypatch):
     """A cap that forces the distributed path but admits the contracted
     graph (3 rows <= 4) still runs driver refinement; result identical to
     the default path."""
     edges, na, nb = two_cliques
     base = {r["id"]: r["community"] for r in G.louvain(edges).collect()}
-    capped = {r["id"]: r["community"]
-              for r in G.louvain(edges, driver_threshold=4).collect()}
+    monkeypatch.setattr(G, "DRIVER_LOUVAIN_MAX_EDGES", 4)
+    capped = {r["id"]: r["community"] for r in G.louvain(edges).collect()}
     assert base == capped

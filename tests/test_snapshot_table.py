@@ -7,6 +7,7 @@ import os
 import pandas as pd
 import pytest
 
+from conftest import _spark_jobs
 from ckg_spark.plans import table as T
 
 
@@ -625,8 +626,6 @@ def test_read_schema_from_manifest_equals_inferred(spark, tmp_path):
     import datetime as dt
     from decimal import Decimal
 
-    from test_graph_queries import _spark_jobs
-
     rows = [("a", 2 ** 40, 1.5, dt.datetime(2024, 1, 1, 8, 30),
              dt.datetime(2024, 1, 2, 9, 0), dt.date(2024, 1, 3),
              Decimal("1.50"), ["x", "y"], ("s", 3))]
@@ -665,8 +664,6 @@ def test_scan_schema_independent_of_selection(spark, tmp_path):
     ([pred] -> [src]), a full read, a read pruned to one era, a read of
     one era's files and an empty selection have identical dtypes. A read
     of a partitioned or evolved table plans without a Spark job."""
-    from test_graph_queries import _spark_jobs
-
     evolved = str(tmp_path / "evolved")
     T.append(_df(spark, [1, 2]), evolved)                             # k, v
     T.append(spark.createDataFrame(
