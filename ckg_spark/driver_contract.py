@@ -2678,19 +2678,20 @@ def q71_incremental_sync_edges(spark, sf):
     """Incremental KG sync == full batch, driver-attested end-to-end: the
     transcript corpus is committed to a snapshot table in TWO append deltas
     (docs split by parity), `plans.incremental.sync_mention_edges` runs
-    after each commit with comention=True (per-delta PARTIAL co-mention
-    counts), partials are folded by `compact_merged`, and the merge-on-read
-    view must equal the one-shot batch result — Q32's mention edges plus
-    exact full-corpus co-mention counts. Co-mention pairs genuinely span
-    both deltas (score = delta1 partial + delta2 partial), so a hash match
-    attests the manifest-diff incremental scan, the high-water-mark
-    bookkeeping, the additive merge-on-read algebra, AND the
-    property-preserving compaction — not just the per-delta extract."""
+    after each commit (mention edges only), `plans.canon.
+    compact_graph_edges` folds the table, and the merge-on-read view
+    `read_graph_edges(comention=True)` must equal the one-shot batch
+    result — Q32's mention edges plus exact full-corpus co-mention counts
+    derived at read. Co-mention pairs genuinely span both deltas, so a
+    hash match attests the manifest-diff incremental scan, the
+    high-water-mark bookkeeping, the read-time co-mention derivation AND
+    the property-preserving compaction — not just the per-delta extract."""
     import hashlib
     import os
     import shutil
     import tempfile
 
+    from .plans import canon as C
     from .plans import incremental as I
     from .plans import table as T
     from .sources.transcripts import transcripts_from_documents
@@ -2708,11 +2709,11 @@ def q71_incremental_sync_edges(spark, sf):
         "source string")
     vt = {"aliases": aliases}
     T.append(t.where(did % 2 == 0), tdir)
-    I.sync_mention_edges(spark, tdir, vt, edir, comention=True)
+    I.sync_mention_edges(spark, tdir, vt, edir)
     T.append(t.where(did % 2 == 1), tdir)
-    I.sync_mention_edges(spark, tdir, vt, edir, comention=True)
-    I.compact_merged(spark, edir)
-    return I.read_merged_edges(spark, edir)
+    I.sync_mention_edges(spark, tdir, vt, edir)
+    C.compact_graph_edges(spark, edir)
+    return C.read_graph_edges(spark, edir, comention=True)
 
 
 # Oracle: the full-batch result the two-delta sync must reproduce. Mention
@@ -2720,7 +2721,7 @@ def q71_incremental_sync_edges(spark, sf):
 # counts derive from the same rows — the distinct entities of a turn are
 # exactly the mention-edge subjects of that turn, so pairs (a < b) counted
 # over turns give the full-corpus CO_MENTIONED_WITH scores that the
-# per-delta partial sums must add up to.
+# read-time derivation over both deltas must reproduce.
 Q71_SQL = f"""
 WITH mention AS (SELECT * FROM ({Q32_SQL})),
 ment_turn AS (SELECT DISTINCT subj AS e, obj AS turn FROM mention),

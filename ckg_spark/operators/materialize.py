@@ -68,22 +68,28 @@ def comention_edges(linked_canon: DataFrame) -> DataFrame:
     """(e1)-[CO_MENTIONED_WITH]->(e2), e1 < e2, score = #turns co-mentioning.
 
     Implementation: per-turn sorted entity set (collect_set — distinct per
-    turn for free), then pair expansion as a JVM nested-transform over the
-    sorted array (k entities -> C(k,2) pairs, k is mentions-per-turn so
-    tiny), then one pair-count aggregation. This replaces a turn-keyed
-    self-join (two shuffles of the full mention stream + countDistinct)
-    with one groupBy + one count — the sorted array also gives the
-    symmetric-pair (a < b) ordering directly (the Spark form of the
-    reference's stored.add((a,b)); stored.add((b,a)) dedup at
-    stringParser.py:54-57).
+    turn for free), then ``_comention_from_sets``. This replaces a
+    turn-keyed self-join (two shuffles of the full mention stream +
+    countDistinct) with one groupBy + one count.
     """
     sets = (
         linked_canon.select("conv_id", "turn_idx", F.col("canonical_id").alias("e"))
         .groupBy("conv_id", "turn_idx")  # raw cols: upstream (conv,turn)
         .agg(F.sort_array(F.collect_set("e")).alias("es"))  # partitioning reused
-        .where(F.size("es") >= 2)
     )
-    pairs = sets.select(
+    return _comention_from_sets(sets)
+
+
+def _comention_from_sets(sets: DataFrame) -> DataFrame:
+    """CO_MENTIONED_WITH edges from per-turn sorted entity sets (column
+    ``es``, one row per turn). The pair expansion is a JVM nested
+    transform over the sorted array (k entities -> C(k,2) pairs, k is
+    mentions-per-turn so tiny), then one pair-count aggregation. The
+    sorted array gives the symmetric-pair (a < b) ordering directly (the
+    Spark form of the reference's stored.add((a,b)); stored.add((b,a))
+    dedup at stringParser.py:54-57). Shared by the batch edges and the
+    merge-on-read view (``plans.canon.read_graph_edges``)."""
+    pairs = sets.where(F.size("es") >= 2).select(
         F.explode(
             F.expr(
                 "flatten(transform(sequence(1, size(es)-1), "
@@ -229,161 +235,27 @@ def materialize_nodes(terms: DataFrame, canonical: DataFrame,
     return out
 
 
-def _merge_rows(allrows: DataFrame) -> DataFrame:
-    """MERGE resolution: keep the highest-score row per
-    (subj, pred, obj, source) — mention re-extraction refreshes counts."""
-    from pyspark.sql import Window
-
-    key = ["subj", "pred", "obj", "source"]
-    w = Window.partitionBy(*key).orderBy(F.col("score").desc(),
-                                         F.col("evidence_type").asc())
-    return (
-        allrows.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def merge_edges_snapshot(spark, table_dir: str, new_edges: DataFrame) -> DataFrame:
     """Snapshot-committed MERGE of new triples into an edge table backed by
-    ``plans.table`` (the Iceberg MERGE INTO shape the reference's Cypher
-    MERGE maps to at deployment): read the latest snapshot, resolve with
-    the same highest-score-per-key rule as ``merge_edges``, and commit the
-    result as a NEW snapshot — so every merge stays time-travelable and a
-    bad load is a ``table.rollback`` instead of a restore-from-backup."""
+    ``plans.table`` (the reference's Cypher MERGE, cypher.yml:16-34, in its
+    Iceberg MERGE INTO shape): read the latest snapshot, keep the
+    highest-score row per (subj, pred, obj, source) — mention re-extraction
+    refreshes counts — and commit the result as a NEW snapshot, so every
+    merge stays time-travelable and a bad load is a ``table.rollback``
+    instead of a restore-from-backup."""
     from ..plans import table as T
 
     if T.current_version(table_dir) is not None:
         allrows = T.read(spark, table_dir).unionByName(new_edges)
     else:
         allrows = new_edges
-    T.overwrite(_merge_rows(allrows), table_dir)
+    key = ["subj", "pred", "obj", "source"]
+    w = Window.partitionBy(*key).orderBy(F.col("score").desc(),
+                                         F.col("evidence_type").asc())
+    merged = (allrows.withColumn("_rn", F.row_number().over(w))
+              .where(F.col("_rn") == 1).drop("_rn"))
+    T.overwrite(merged, table_dir)
     return T.read(spark, table_dir)
-
-
-def merge_edges(spark, existing_path: str, new_edges: DataFrame) -> DataFrame:
-    """Incremental MERGE of new triples into a materialized edge table
-    (the reference's Cypher MERGE / partial-update mode, cypher.yml:16-34 +
-    the mentions partial update, docs/.../graphdb-builder.rst:245).
-
-    Parquet rendition of Iceberg MERGE INTO: union existing + new, keep the
-    row with the HIGHEST score per (subj, pred, obj, source) — mention
-    re-extraction refreshes counts — and rewrite atomically (tmp dir +
-    rename). On an Iceberg deployment this is a single MERGE INTO commit.
-    """
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    if os.path.exists(os.path.join(existing_path, "_SUCCESS")):
-        existing = spark.read.parquet(existing_path)
-        allrows = existing.unionByName(new_edges)
-    else:
-        allrows = new_edges
-    merged = _merge_rows(allrows)
-    # Crash-safe promotion: the old table is RENAMED to a backup before the
-    # new one takes its place, so no instant ever has zero live copies (a
-    # crash leaves either the original, or original-as-backup + tmp, or the
-    # promoted new table + backup). The backup is only removed after the
-    # promote succeeds. On an Iceberg deployment all of this is one MERGE
-    # INTO snapshot commit; this local-FS rendition is kept behind this
-    # function so that swap is local.
-    tmp = existing_path.rstrip("/") + "__tmp"
-    bak = existing_path.rstrip("/") + "__bak"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(bak, ignore_errors=True)
-    had_existing = os.path.exists(existing_path)
-    if had_existing:
-        os.rename(existing_path, bak)
-    try:
-        os.rename(tmp, existing_path)
-    except OSError:
-        if had_existing:
-            os.rename(bak, existing_path)  # roll back; tmp left for inspection
-        raise
-    shutil.rmtree(bak, ignore_errors=True)
-    return spark.read.parquet(existing_path)
-
-
-def fused_turn_edges(linked_canon: DataFrame) -> DataFrame:
-    """MENTIONED_IN_TURN + CO_MENTIONED_WITH from ONE aggregation pass.
-
-    Output equals mention_edges(l) UNION ALL comention_edges(l) row-for-row
-    (asserted in tests): one groupBy (conv_id, turn_idx) collect_list of
-    (entity, type) structs; per-entity counts = run lengths of the sorted
-    array; the distinct set feeds the pair expansion.
-
-    MEASURED SLOWER than the two-agg path at bench scale (32s-65s vs ~25s at
-    600k turns, local[32], interleaved runs): collect_list's partial
-    aggregation ships EVERY occurrence struct through the shuffle, while the
-    separate count/collect_set aggs shrink map-side (occurrences -> distinct
-    triples / deduped sets) before any bytes move. One shuffle of a bigger
-    stream lost to two shuffles of smaller ones on this memory-bound box —
-    kept as the documented negative result and for workloads where the
-    linked stream cannot be persisted (the fusion needs only one pass, so it
-    skips the persist the two-agg path requires to avoid recomputing
-    extract+link)."""
-    per_turn = (
-        linked_canon.select(
-            "conv_id", "turn_idx",
-            F.struct(
-                F.col("canonical_id").alias("e"), F.col("entity_type").alias("et")
-            ).alias("m"),
-        )
-        .groupBy("conv_id", "turn_idx")
-        .agg(F.sort_array(F.collect_list("m")).alias("ms"))
-        .select(turn_key().alias("tk"), "ms")
-    )
-    runs = per_turn.select(
-        "tk",
-        F.expr(
-            "filter(sequence(0, size(ms)-1), i -> i = 0 OR NOT (ms[i] = ms[i-1]))"
-        ).alias("starts"),
-        "ms",
-    ).select(
-        "tk",
-        F.expr(
-            "zip_with(starts, "
-            " concat(slice(starts, 2, size(starts)), array(size(ms))), "
-            " (s, t) -> struct(ms[s].e AS e, ms[s].et AS et, t - s AS cnt))"
-        ).alias("counts"),
-        F.expr("array_distinct(transform(starts, i -> ms[i].e))").alias("des"),
-    )
-    mention = runs.select("tk", F.explode("counts").alias("c")).select(
-        F.col("c.e").alias("subj"),
-        F.lit("MENTIONED_IN_TURN").alias("pred"),
-        F.col("tk").alias("obj"),
-        F.lit("tagger").alias("source"),
-        F.col("c.cnt").cast("double").alias("score"),
-        F.col("c.et").alias("evidence_type"),
-    )
-    pairs = (
-        runs.where(F.size("des") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(1, size(des)-1), "
-                    "i -> transform(sequence(0, i-1), "
-                    "j -> named_struct('subj', des[j], 'obj', des[i]))))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.subj").alias("subj"), F.col("p.obj").alias("obj"))
-    )
-    comention = (
-        pairs.groupBy("subj", "obj")
-        .agg(F.count(F.lit(1)).cast("double").alias("score"))
-        .select(
-            "subj",
-            F.lit("CO_MENTIONED_WITH").alias("pred"),
-            "obj",
-            F.lit("tagger").alias("source"),
-            "score",
-            F.lit("co_occurrence").alias("evidence_type"),
-        )
-    )
-    return mention.unionByName(comention)
 
 
 def cooccurrence_score_edges(pairs: DataFrame,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators.canonicalize import (incremental_canonical_parts,
                                       post_sync_mapping)
+from ..operators.materialize import _comention_from_sets
 from . import table as T
 
 _MAP_SCHEMA = "ident string, canonical_id string, map_version int"
@@ -139,9 +140,8 @@ def read_remap_log(spark: SparkSession, mapping_table_dir: str,
 def compact_mapping(spark: SparkSession, mapping_table_dir: str) -> int:
     """Fold accumulated deltas to one row per ident in a single overwrite
     commit (read amplification resets; history stays time-travelable
-    until expire_snapshots). Re-stamps nothing: the mapping's high-water
-    semantics live in the caller's properties, mirrored from the source
-    table like plans/incremental.compact_merged."""
+    until expire_snapshots). Carries the head's properties forward: the
+    mapping's high-water semantics live in the caller's properties."""
     cur = T.read_manifest(mapping_table_dir)
     props = {k: v for k, v in cur.get("properties", {}).items()}
     merged = read_canonical_mapping(spark, mapping_table_dir).withColumn(
@@ -189,43 +189,50 @@ def sync_graph(
                                 to_version=to_version)
 
 
+EDGE_KEY = ["subj", "pred", "obj", "source", "evidence_type"]
+
+
 def read_graph_edges(spark: SparkSession, edges_table_dir: str,
-                     mapping_table_dir: str,
+                     mapping_table_dir: str | None = None,
                      comention: bool = False,
                      _through: int | None = None) -> DataFrame:
-    """Merge-on-read view of a `sync_graph` edge table that is EXACT under
-    canonicalization drift: resolved remap log patches subj (one broadcast
-    join — old canons are a dictionary-scale set, turn-key objs never
-    collide with them), then per-edge re-aggregation folds rows merged by
-    the patch. With ``comention=True`` the CO_MENTIONED_WITH family is
-    DERIVED from the patched mention edges (per-turn distinct-subject
-    pairs) rather than read from storage: entity merges can collapse two
-    co-mentioned entities into one, and only re-derivation keeps the
-    turn-count score exact (summing stored partials would double-count a
-    turn whose pair set shrank). Batch equivalence is pinned by
+    """The merge-on-read view of a mention-edge table (written by
+    `plans.incremental.sync_mention_edges`, `sync_graph` or
+    `streaming.ingest.stream_mention_edges`): one row per ``EDGE_KEY``
+    with the summed score.
+
+    With a ``mapping_table_dir`` the view is EXACT under canonicalization
+    drift: the resolved remap log patches subj (one broadcast join — old
+    canons are a dictionary-scale set, turn-key objs never collide with
+    them) before the aggregation folds the rows the patch merged. With
+    ``comention=True`` the CO_MENTIONED_WITH family is DERIVED from the
+    view's mention edges (per-turn distinct-subject pairs), never read
+    from storage: entity merges can collapse two co-mentioned entities
+    into one, and only re-derivation keeps the turn-count score exact.
+    Batch equivalence is pinned by
     tests/test_canon_sync.py::test_sync_graph_matches_batch*.
 
     If the edge table was compacted with ``compact_graph_edges``, only
     remaps committed AFTER the folded-through mapping version are applied
     (the manifest records ``remaps_folded_through``); the patch join
     shrinks with every maintenance pass."""
-    from . import incremental as I
     from ..operators.canonicalize import apply_remaps
 
     # patch the RAW rows first (broadcast join, no exchange), then ONE
-    # EDGE_KEY aggregation folds both the stored partials and the rows the
-    # patch merged — summation is associative, so this equals the naive
-    # read_merged_edges -> patch -> re-agg at half the shuffle cost
+    # EDGE_KEY aggregation folds the rows the patch merged
     raw = T.read(spark, edges_table_dir)
-    # max across SNAPSHOTS, not the current manifest: every sync append
-    # after a compaction commits a manifest without the property, and
-    # reading only the head would silently re-apply the whole log forever
-    folded = T.last_stamped_version(edges_table_dir, "remaps_folded_through")
-    remaps = read_remap_log(spark, mapping_table_dir, since_version=folded,
-                            through_version=_through)
-    raw = apply_remaps(raw, remaps, cols=("subj",))
+    if mapping_table_dir is not None:
+        # max across SNAPSHOTS, not the current manifest: every sync
+        # append after a compaction commits a manifest without the
+        # property, and reading only the head would re-apply the whole log
+        folded = T.last_stamped_version(edges_table_dir,
+                                        "remaps_folded_through")
+        remaps = read_remap_log(spark, mapping_table_dir,
+                                since_version=folded,
+                                through_version=_through)
+        raw = apply_remaps(raw, remaps, cols=("subj",))
     mentions = (
-        raw.groupBy(*I.EDGE_KEY).agg(F.sum("score").alias("score"))
+        raw.groupBy(*EDGE_KEY).agg(F.sum("score").alias("score"))
         .select("subj", "pred", "obj", "source", "score", "evidence_type")
     )
     if not comention:
@@ -234,51 +241,38 @@ def read_graph_edges(spark: SparkSession, edges_table_dir: str,
         mentions.where(F.col("pred") == "MENTIONED_IN_TURN")
         .groupBy("obj")
         .agg(F.sort_array(F.collect_set("subj")).alias("es"))
-        .where(F.size("es") >= 2)
     )
-    pairs = sets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(1, size(es)-1), "
-                "i -> transform(sequence(0, i-1), "
-                "j -> named_struct('subj', es[j], 'obj', es[i]))))"
-            )
-        ).alias("p")
-    ).select(F.col("p.subj").alias("subj"), F.col("p.obj").alias("obj"))
-    com = (
-        pairs.groupBy("subj", "obj")
-        .agg(F.count(F.lit(1)).cast("double").alias("score"))
-        .select("subj", F.lit("CO_MENTIONED_WITH").alias("pred"), "obj",
-                F.lit("tagger").alias("source"), "score",
-                F.lit("co_occurrence").alias("evidence_type"))
-    )
-    return mentions.unionByName(com)
+    return mentions.unionByName(_comention_from_sets(sets))
 
 
 def compact_graph_edges(spark: SparkSession, edges_table_dir: str,
-                        mapping_table_dir: str) -> int:
-    """Maintenance pass for a `sync_graph` edge table: fold the stored
-    partials AND the remap log into storage in one overwrite commit —
-    every row's subj becomes its current canon, merged rows collapse.
-    The commit records ``remaps_folded_through`` (the mapping version
-    whose remaps are now physically applied) and re-stamps the sync
-    high-water mark, so subsequent `read_graph_edges` calls patch with
-    only the remaps committed SINCE, and `sync_graph` keeps consuming
-    source deltas where it left off. History stays time-travelable until
-    expire_snapshots; co-mentions stay derived-at-read (storing them
-    would re-open the drift double-count)."""
-    from . import incremental as I
-
-    mark = I.last_synced_version(edges_table_dir)
-    # capture the mapping version BEFORE folding and bound the fold to it:
-    # a concurrent mapping sync committing mid-fold would otherwise land
-    # remaps recorded as folded but never physically applied
-    mv = T.current_version(mapping_table_dir)
+                        mapping_table_dir: str | None = None) -> int:
+    """Maintenance pass for a mention-edge table: fold its rows to one per
+    ``EDGE_KEY`` in one overwrite commit, and with a ``mapping_table_dir``
+    fold the remap log into storage too — every row's subj becomes its
+    current canon and merged rows collapse; the commit then records
+    ``remaps_folded_through`` (the mapping version whose remaps are now
+    physically applied), so later `read_graph_edges` calls patch with only
+    the remaps committed SINCE. The high-water marks are re-stamped
+    (``transcripts_version`` for `sync_mention_edges`, ``batch_id`` for
+    the streaming sink), so syncs keep consuming source deltas where they
+    left off and a replayed micro-batch is still skipped after the older
+    snapshots expire. History stays time-travelable until
+    expire_snapshots; co-mentions stay derived-at-read."""
+    props = {}
+    for mark in ("transcripts_version", "batch_id"):
+        v = T.last_stamped_version(edges_table_dir, mark)
+        if v is not None:
+            props[mark] = v
+    mv = None
+    if mapping_table_dir is not None:
+        # capture the mapping version BEFORE folding and bound the fold to
+        # it: a concurrent mapping sync committing mid-fold would
+        # otherwise land remaps recorded as folded but never applied
+        mv = T.current_version(mapping_table_dir)
+        props["remaps_folded_through"] = mv
     folded = read_graph_edges(spark, edges_table_dir, mapping_table_dir,
                               _through=mv)
-    props = {"remaps_folded_through": mv}
-    if mark is not None:
-        props["transcripts_version"] = mark
     return T.overwrite(folded, edges_table_dir, properties=props)
 
 

@@ -17,15 +17,12 @@ disjoint union of edges(per snapshot delta). No cross-file state exists
 to lose (a turn is one transcript row; it is never split across files).
 
 Co-mention edges aggregate ACROSS turns (score = number of co-mentioning
-turns), but the aggregation is a SUM of per-turn indicators — additive
-over turn-disjoint deltas. ``comention=True`` therefore appends PARTIAL
-counts per sync, and ``read_merged_edges`` is the merge-on-read view
-(groupBy edge identity, sum score) — Iceberg's merge-on-read move: the
-write path stays append-only and cheap at any scale, the periodic
-``compact_merged`` folds partials into one row per edge (a single
-overwrite commit that preserves the sync high-water mark). Per-turn
-MENTIONED_IN_TURN rows pass through the same view unchanged (each
-(subj, turn) key lives in exactly one delta, so its sum is itself).
+turns), so they are never stored: the edge table holds MENTIONED_IN_TURN
+rows only, and ``plans.canon.read_graph_edges(comention=True)`` derives
+the co-mentions from them at read time — the one merge-on-read view,
+exact also when a canonical mapping merges entities between syncs.
+``plans.canon.compact_graph_edges`` folds the table to one row per edge
+in a single overwrite commit that preserves the sync high-water mark.
 
 Exactly-once: each sync commit stamps ``transcripts_version`` in the edge
 table's snapshot properties. A crash AFTER the edge commit but BEFORE the
@@ -44,8 +41,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-
-from pyspark.sql import functions as F
 
 from ..operators import extract as X
 from ..operators import link as L
@@ -76,7 +71,6 @@ def sync_mention_edges(
     edges_table_dir: str,
     canonical=None,
     to_version: int | None = None,
-    comention: bool = False,
 ) -> SyncReport:
     """Bring the mention-edge snapshot table up to date with the
     transcript snapshot table: read ONLY the files appended since the last
@@ -108,12 +102,7 @@ def sync_mention_edges(
     delta = T.read_files(spark, transcripts_table_dir, new_files, cur)
     linked = linked_mentions(delta, alias_grams, alias_table,
                              vocab_tables.get("stoplist"), canonical)
-    edges = M.mention_edges(linked)
-    if comention:
-        # PARTIAL co-mention counts for this delta; exact totals come
-        # from read_merged_edges (merge-on-read sum over syncs)
-        edges = edges.unionByName(M.comention_edges(linked))
-    ev = T.append(edges, edges_table_dir,
+    ev = T.append(M.mention_edges(linked), edges_table_dir,
                   properties={"transcripts_version": cur},
                   partition_by=None)
     n = T.read_manifest(edges_table_dir, ev)["row_count"] - (
@@ -126,32 +115,6 @@ def _manifest_exists(table_dir: str, version: int) -> bool:
     import os
 
     return os.path.exists(T._manifest_path(table_dir, version))
-
-
-EDGE_KEY = ["subj", "pred", "obj", "source", "evidence_type"]
-
-
-def read_merged_edges(spark: SparkSession, edges_table_dir: str,
-                      version: int | None = None):
-    """Merge-on-read view of an incrementally-synced edge table: one row
-    per edge identity with the summed score. Exact for both edge families
-    (per-turn rows sum to themselves; co-mention partials sum to the
-    full-corpus count). One map-side-combined groupBy over the table."""
-    e = T.read(spark, edges_table_dir, version=version)
-    return e.groupBy(*EDGE_KEY).agg(F.sum("score").alias("score")).select(
-        "subj", "pred", "obj", "source", "score", "evidence_type")
-
-
-def compact_merged(spark: SparkSession, edges_table_dir: str) -> int:
-    """Fold accumulated partials into one row per edge in a single
-    overwrite commit. Preserves the sync high-water mark by re-stamping
-    ``transcripts_version`` on the compacted snapshot (plain
-    ``table.compact`` would drop the properties and reset the mark after
-    expiry). History stays time-travelable until expire_snapshots."""
-    mark = last_synced_version(edges_table_dir)
-    merged = read_merged_edges(spark, edges_table_dir)
-    props = {} if mark is None else {"transcripts_version": mark}
-    return T.overwrite(merged, edges_table_dir, properties=props)
 
 
 def validate_edges_delta(spark: SparkSession, edges_table_dir: str,

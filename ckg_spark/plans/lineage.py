@@ -39,16 +39,12 @@ def stage_done(out_dir: str, stage: str) -> bool:
 
 
 def write_stage(df: DataFrame, out_dir: str, stage: str, run_id: str,
-                partition_by: list[str] | None = None,
-                repartition: int | str | None = None) -> DataFrame:
+                partition_by: list[str] | None = None) -> DataFrame:
     """Materialize a stage to parquet + lineage row; returns the re-read DF."""
     spark = df.sparkSession
     p = stage_path(out_dir, stage)
     t0 = time.time()
-    writer = df
-    if repartition is not None:
-        writer = df.repartition(repartition) if isinstance(repartition, int) else df.repartition(df[repartition])
-    w = writer.write.mode("overwrite")
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(p)

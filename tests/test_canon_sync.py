@@ -292,13 +292,11 @@ def test_sync_graph_matches_batch_under_identity_drift(spark, tmp_path,
 
 
 def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
-    """stream_mention_edges_snapshot(mapping_table_dir=...): a canon merge
+    """stream_mention_edges(mapping_table_dir=...): a canon merge
     synced BETWEEN two ticks applies to the second tick at write time and
     to the first tick at read time (remap log) — the merged view equals
     the one-shot batch under the final mapping, co-mentions included."""
     import os
-
-    import pytest as _pytest
 
     from ckg_spark.datagen import gen_transcripts
     from ckg_spark.operators import extract as X
@@ -306,8 +304,7 @@ def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
     from ckg_spark.operators import materialize as M
     from ckg_spark.operators.canonicalize import canonical_mapping
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from ckg_spark.streaming.ingest import (linked_mentions,
-                                            stream_mention_edges_snapshot)
+    from ckg_spark.streaming.ingest import linked_mentions, stream_mention_edges
     from ckg_spark.vocab import build_vocab
 
     vb = build_vocab(n_entities=120, seed=7)
@@ -324,20 +321,14 @@ def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
     ia, ib = [r["ident"] for r in probe.select("ident").distinct()
               .orderBy("ident").limit(2).collect()]
 
-    # comention partials + drift must be refused
-    with _pytest.raises(ValueError, match="comention"):
-        stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                      vocab_tables, tbl, cp,
-                                      comention=True, mapping_table_dir=mdir)
-
     # register vocab idents (remap-completeness precondition), tick 1
     C.sync_canonical_mapping(
         spark, mdir, _edges(spark, []),
         new_idents=vocab_tables["aliases"].select("ident").distinct())
     pdf1.to_parquet(f"{in_dir}/f1.parquet", index=False)
-    q = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                      vocab_tables, tbl, cp,
-                                      mapping_table_dir=mdir)
+    q = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                             vocab_tables, tbl, cp,
+                             mapping_table_dir=mdir)
     q.awaitTermination(120)
 
     # merge ia~ib AFTER tick 1 committed edges under the old canon
@@ -345,9 +336,9 @@ def test_streaming_sink_under_canonical_drift(spark, tmp_path, vocab_tables):
     assert rep.n_remaps == 1
 
     pdf2.to_parquet(f"{in_dir}/f2.parquet", index=False)
-    q = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                      vocab_tables, tbl, cp,
-                                      mapping_table_dir=mdir)
+    q = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                             vocab_tables, tbl, cp,
+                             mapping_table_dir=mdir)
     q.awaitTermination(120)
 
     got = C.read_graph_edges(spark, tbl, mdir, comention=True)
@@ -369,10 +360,10 @@ def test_streaming_drift_requires_registered_mapping(spark, tmp_path,
     import pytest as _pytest
 
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from ckg_spark.streaming.ingest import stream_mention_edges_snapshot
+    from ckg_spark.streaming.ingest import stream_mention_edges
 
     with _pytest.raises(ValueError, match="register"):
-        stream_mention_edges_snapshot(
+        stream_mention_edges(
             spark, str(tmp_path / "in"), TRANSCRIPT_SCHEMA, vocab_tables,
             str(tmp_path / "tbl"), str(tmp_path / "cp"),
             mapping_table_dir=str(tmp_path / "empty_mapping"))

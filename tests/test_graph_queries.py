@@ -143,6 +143,7 @@ def test_transcripts_from_documents(spark):
 
 
 def test_streaming_ingest(spark, vocab, vocab_tables, transcripts_pdf, tmp_path):
+    from ckg_spark.plans import table as T
     from ckg_spark.streaming.ingest import stream_mention_edges
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
@@ -155,7 +156,7 @@ def test_streaming_ingest(spark, vocab, vocab_tables, transcripts_pdf, tmp_path)
     q = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA, vocab_tables,
                              out_dir, cp)
     q.awaitTermination(120)
-    got = spark.read.parquet(out_dir)
+    got = T.read(spark, out_dir)
     assert got.count() > 0
     assert got.where(F.col("pred") != "MENTIONED_IN_TURN").count() == 0
 
@@ -177,7 +178,12 @@ def test_catalog_recursive_ancestors(spark):
 def test_streaming_restart_exactly_once(spark, vocab_tables, transcripts_pdf,
                                         tmp_path):
     """availableNow stream, stop, land a new file, restart with the same
-    checkpoint: old files are not reprocessed (no duplicate edges)."""
+    checkpoint: old files are not reprocessed (no duplicate edges). Then
+    simulate a crash between the sink commit and the checkpoint commit by
+    deleting the last entry of the checkpoint's commit log: the restart
+    replays that batch, and the sink must skip it (no duplicate edges, no
+    new snapshot)."""
+    from ckg_spark.plans import table as T
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
     from ckg_spark.streaming.ingest import stream_mention_edges
 
@@ -186,21 +192,32 @@ def test_streaming_restart_exactly_once(spark, vocab_tables, transcripts_pdf,
     third = len(transcripts_pdf) // 3
     transcripts_pdf.iloc[:third].to_parquet(f"{in_dir}/f1.parquet", index=False)
 
-    q1 = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA, vocab_tables,
-                              out_dir, cp)
-    q1.awaitTermination(120)
-    n1 = spark.read.parquet(out_dir).count()
+    def run():
+        q = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                                 vocab_tables, out_dir, cp)
+        q.awaitTermination(120)
+        return T.read(spark, out_dir)
+
+    n1 = run().count()
     assert n1 > 0
 
     transcripts_pdf.iloc[third:2 * third].to_parquet(f"{in_dir}/f2.parquet", index=False)
-    q2 = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA, vocab_tables,
-                              out_dir, cp)
-    q2.awaitTermination(120)
-    all_edges = spark.read.parquet(out_dir)
+    all_edges = run()
     n2 = all_edges.count()
     assert n2 > n1
     # exactly-once per file: no (subj, obj) turn-key duplicates
     assert all_edges.groupBy("subj", "obj").count().where("count > 1").count() == 0
+
+    # crash after the sink commit, before the checkpoint commit
+    commits = os.path.join(cp, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, f))
+    v_before = T.current_version(out_dir)
+    replayed = run()
+    assert T.current_version(out_dir) == v_before
+    assert replayed.count() == n2
+    assert replayed.groupBy("subj", "obj").count().where("count > 1").count() == 0
 
 
 def test_knowledge_summary_and_subgraph(spark, vocab_tables, transcripts_df, tmp_path):
@@ -234,29 +251,29 @@ def test_knowledge_summary_and_subgraph(spark, vocab_tables, transcripts_df, tmp
 
 def test_streaming_snapshot_sink_exactly_once(spark, vocab_tables,
                                               transcripts_pdf, tmp_path):
-    """stream_mention_edges_snapshot: each micro-batch is one snapshot
+    """stream_mention_edges: each micro-batch is one snapshot
     commit with its batch id in manifest properties; a replayed batch id is
     skipped (exactly-once batches), every tick is time-travelable, and a
     restart with new files appends new snapshots only."""
     from ckg_spark.plans import table as T
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from ckg_spark.streaming.ingest import stream_mention_edges_snapshot
+    from ckg_spark.streaming.ingest import stream_mention_edges
 
     in_dir, tbl, cp = (str(tmp_path / d) for d in ("in", "tbl", "cp"))
     os.makedirs(in_dir, exist_ok=True)
     third = len(transcripts_pdf) // 3
     transcripts_pdf.iloc[:third].to_parquet(f"{in_dir}/f1.parquet", index=False)
 
-    q1 = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                       vocab_tables, tbl, cp)
+    q1 = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                              vocab_tables, tbl, cp)
     q1.awaitTermination(120)
     v_after_1 = T.current_version(tbl)
     n1 = T.read(spark, tbl).count()
     assert v_after_1 >= 1 and n1 > 0
 
     transcripts_pdf.iloc[third:2 * third].to_parquet(f"{in_dir}/f2.parquet", index=False)
-    q2 = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                       vocab_tables, tbl, cp)
+    q2 = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                              vocab_tables, tbl, cp)
     q2.awaitTermination(120)
     n2 = T.read(spark, tbl).count()
     assert n2 > n1
@@ -268,8 +285,8 @@ def test_streaming_snapshot_sink_exactly_once(spark, vocab_tables,
     # a replayed batch is a no-op: simulate by re-calling process semantics —
     # restart with the SAME checkpoint and no new files commits nothing
     v_before = T.current_version(tbl)
-    q3 = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                       vocab_tables, tbl, cp)
+    q3 = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                              vocab_tables, tbl, cp)
     q3.awaitTermination(120)
     assert T.current_version(tbl) == v_before
     # no duplicate turn-keyed edges across snapshots
@@ -279,38 +296,35 @@ def test_streaming_snapshot_sink_exactly_once(spark, vocab_tables,
 
 def test_streaming_snapshot_comention_partials_merge_exact(
         spark, vocab_tables, transcripts_pdf, tmp_path):
-    """comention=True streams PARTIAL co-mention counts per micro-batch
-    (micro-batches are turn-disjoint, so counts are additive); the
-    merge-on-read view over the streamed table must equal the one-shot
-    batch result for BOTH edge families — the same contract q71 attests
-    for the batch incremental path."""
+    """A streamed mention-edge table written over two ticks, read through
+    ``read_graph_edges(comention=True)``, equals the one-shot batch result
+    for BOTH edge families — co-mentions derived at read from the
+    turn-disjoint micro-batches — before and after ``compact_graph_edges``,
+    and compaction keeps the ``batch_id`` high-water mark."""
     from ckg_spark.operators import materialize as M
+    from ckg_spark.plans import canon as C
     from ckg_spark.plans import table as T
-    from ckg_spark.plans.incremental import compact_merged, read_merged_edges
     from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
     from ckg_spark.streaming.ingest import (linked_mentions,
-                                            stream_mention_edges_snapshot)
+                                            stream_mention_edges)
     from ckg_spark.operators import extract as X
     from ckg_spark.operators import link as L
 
     in_dir, tbl, cp = (str(tmp_path / d) for d in ("in", "tbl", "cp"))
     os.makedirs(in_dir, exist_ok=True)
     half = len(transcripts_pdf) // 2
-    # two separate ticks (run, add a file, run again) so partial counts
-    # genuinely accumulate ACROSS batch commits, not within one
-    transcripts_pdf.iloc[:half].to_parquet(f"{in_dir}/f1.parquet", index=False)
-    q = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                      vocab_tables, tbl, cp, comention=True)
-    q.awaitTermination(120)
-    transcripts_pdf.iloc[half:].to_parquet(f"{in_dir}/f2.parquet", index=False)
-    q = stream_mention_edges_snapshot(spark, in_dir, TRANSCRIPT_SCHEMA,
-                                      vocab_tables, tbl, cp, comention=True)
-    q.awaitTermination(120)
-    from ckg_spark.plans.incremental import EDGE_KEY
-    # at least one co-mention identity spans both commits (a real merge)
+    # two separate ticks (run, add a file, run again) so co-mention pairs
+    # genuinely span batch commits, not one
+    for name, part in (("f1", transcripts_pdf.iloc[:half]),
+                       ("f2", transcripts_pdf.iloc[half:])):
+        part.to_parquet(f"{in_dir}/{name}.parquet", index=False)
+        q = stream_mention_edges(spark, in_dir, TRANSCRIPT_SCHEMA,
+                                 vocab_tables, tbl, cp)
+        q.awaitTermination(120)
+    assert T.current_version(tbl) >= 2
+    # only mention edges are stored
     raw = T.read(spark, tbl)
-    assert (raw.where("pred = 'CO_MENTIONED_WITH'")
-            .groupBy(*EDGE_KEY).count().where("count > 1").count()) > 0
+    assert raw.where("pred != 'MENTIONED_IN_TURN'").count() == 0
 
     linked = linked_mentions(
         spark.createDataFrame(transcripts_pdf),
@@ -319,15 +333,22 @@ def test_streaming_snapshot_comention_partials_merge_exact(
         vocab_tables["stoplist"], None)
     want = sorted(map(tuple, M.mention_edges(linked).unionByName(
         M.comention_edges(linked)).collect()))
-    got = sorted(map(tuple, read_merged_edges(spark, tbl).collect()))
-    assert got == want
     assert [t for t in want if t[1] == "CO_MENTIONED_WITH"]
 
-    # compaction folds partials and the view is unchanged
-    compact_merged(spark, tbl)
-    assert sorted(map(tuple, read_merged_edges(spark, tbl).collect())) == want
-    # raw table has one row per edge identity after compaction
-    assert T.read(spark, tbl).count() == len(want)
+    def view():
+        return sorted(map(tuple, C.read_graph_edges(
+            spark, tbl, comention=True).collect()))
+
+    assert view() == want
+    mark = T.last_stamped_version(tbl, "batch_id")
+    C.compact_graph_edges(spark, tbl)
+    assert view() == want
+    # the compacted snapshot carries the mark, so it survives expiry
+    assert T.read_manifest(tbl)["properties"]["batch_id"] == mark
+    T.expire_snapshots(tbl, keep_last=1)
+    assert T.last_stamped_version(tbl, "batch_id") == mark
+    assert T.read(spark, tbl).count() == len(
+        [t for t in want if t[1] == "MENTIONED_IN_TURN"])
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ import pytest
 
 from conftest import _spark_jobs
 from ckg_spark.datagen import gen_transcripts
+from ckg_spark.plans import canon as C
 from ckg_spark.plans import incremental as I
 from ckg_spark.plans import table as T
 from ckg_spark.streaming.ingest import linked_mentions
@@ -143,43 +144,41 @@ def test_idle_tick_commits_metadata_only(spark, tmp_path, vocab_tables):
 
 def test_comention_partials_merge_to_exact_totals(spark, tmp_path,
                                                   vocab_tables):
-    """Co-mention scores are sums of per-turn indicators — additive over
-    deltas. Appending PARTIAL counts per sync and summing on read must
-    equal a single full-batch run; compact_merged folds partials without
-    changing the view or losing the sync high-water mark."""
+    """Co-mention scores aggregate across turns, so a multi-delta edge
+    table stores mention edges only and ``read_graph_edges(comention=True)``
+    derives the co-mentions at read: the view equals a single full-batch
+    run before and after ``compact_graph_edges``, and compaction keeps the
+    sync high-water mark."""
 
     tdir = str(tmp_path / "transcripts")
     edir = str(tmp_path / "edges")
     for seed in (31, 32, 33):
         T.append(_chunk(spark, 100, seed), tdir)
-        I.sync_mention_edges(spark, tdir, vocab_tables, edir,
-                             comention=True)
+        I.sync_mention_edges(spark, tdir, vocab_tables, edir)
 
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    linked = linked_mentions(T.read(spark, tdir), alias_grams, alias_table,
-                             vocab_tables["stoplist"], None)
-    full = M.mention_edges(linked).unionByName(M.comention_edges(linked))
 
-    merged = I.read_merged_edges(spark, edir)
-    assert _edge_set(merged) == _edge_set(full)
-    # partials really exist pre-compaction (co-mention rows duplicated
-    # across syncs), and compaction folds them without changing the view
-    raw_n = T.read(spark, edir).count()
-    assert raw_n > merged.count()
-    I.compact_merged(spark, edir)
-    assert T.read(spark, edir).count() == merged.count()
-    assert _edge_set(I.read_merged_edges(spark, edir)) == _edge_set(full)
+    def full():
+        linked = linked_mentions(T.read(spark, tdir), alias_grams,
+                                 alias_table, vocab_tables["stoplist"], None)
+        return M.mention_edges(linked).unionByName(M.comention_edges(linked))
+
+    def view():
+        return C.read_graph_edges(spark, edir, comention=True)
+
+    want = _edge_set(full())
+    assert [e for e in want if e[1] == "CO_MENTIONED_WITH"]
+    assert _edge_set(view()) == want
+    C.compact_graph_edges(spark, edir)
+    assert T.read_manifest(edir)["operation"] == "overwrite"
+    assert _edge_set(view()) == want
     assert I.last_synced_version(edir) == 3
     # sync continues normally after compaction
     T.append(_chunk(spark, 100, seed=34), tdir)
-    r = I.sync_mention_edges(spark, tdir, vocab_tables, edir,
-                             comention=True)
+    r = I.sync_mention_edges(spark, tdir, vocab_tables, edir)
     assert r.from_version == 3 and r.n_edges > 0
-    linked4 = linked_mentions(T.read(spark, tdir), alias_grams, alias_table,
-                              vocab_tables["stoplist"], None)
-    full4 = M.mention_edges(linked4).unionByName(M.comention_edges(linked4))
-    assert _edge_set(I.read_merged_edges(spark, edir)) == _edge_set(full4)
+    assert _edge_set(view()) == _edge_set(full())
 
 
 def test_sync_partitioned_transcript_table(spark, tmp_path, vocab_tables):
@@ -194,9 +193,9 @@ def test_sync_partitioned_transcript_table(spark, tmp_path, vocab_tables):
         edir = str(tmp_path / f"e{bool(part)}")
         for ch in chunks:
             T.append(ch, tdir, partition_by=part)
-            I.sync_mention_edges(spark, tdir, vocab_tables, edir,
-                                 comention=True)
-        got[part is not None] = _edge_set(I.read_merged_edges(spark, edir))
+            I.sync_mention_edges(spark, tdir, vocab_tables, edir)
+        got[part is not None] = _edge_set(
+            C.read_graph_edges(spark, edir, comention=True))
     assert T.read_manifest(str(tmp_path / "tTrue"))["partition_by"] == [
         "conv_id"]
     assert got[True] == got[False] and got[False]

@@ -119,29 +119,6 @@ def test_pipeline_correctness_tier(spark, tmp_path):
     assert prf["f1"] == 1.0, prf
 
 
-def test_fused_turn_edges_equals_legacy(spark, transcripts_df, vocab_tables):
-    from ckg_spark.operators import extract as X
-    from ckg_spark.operators import link as L
-    from ckg_spark.operators import materialize as M
-    from ckg_spark.operators.canonicalize import canonical_mapping
-
-    grams = X.prepare_alias_grams(vocab_tables["aliases"])
-    alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    mentions = X.extract_mentions(transcripts_df, grams)
-    linked = L.link_mentions(mentions, alias_table, vocab_tables["stoplist"],
-                             keep="best")
-    canonical = canonical_mapping(
-        vocab_tables["identity_edges"],
-        vocab_tables["aliases"].select("ident").distinct())
-    lc = M.canonicalize_linked(linked, canonical).persist()
-    legacy = M.mention_edges(lc).unionByName(M.comention_edges(lc))
-    fused = M.fused_turn_edges(lc)
-    l_rows = sorted(map(tuple, legacy.collect()))
-    f_rows = sorted(map(tuple, fused.collect()))
-    lc.unpersist()
-    assert len(l_rows) == len(f_rows) and l_rows == f_rows
-
-
 def test_edge_agg_exchange_elision(spark):
     """Regression guard for the round-2 plan change: when the slim linked
     stream is hash-partitioned on (conv_id, turn_idx), neither edge

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis): the JVM extractor agrees with the
-single-process pandas oracle on arbitrary text, and merge_edges upserts."""
+single-process pandas oracle on arbitrary text."""
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
@@ -69,31 +69,6 @@ def test_extractor_agrees_with_oracle_on_generated_text(spark, texts):
         got[["conv_id", "turn_idx", "pos", "n_words", "alias_lc"]],
         exp, check_dtype=False,
     )
-
-
-def test_merge_edges_upsert(spark, tmp_path):
-    from ckg_spark.operators.materialize import merge_edges
-
-    p = str(tmp_path / "edges")
-    base = spark.createDataFrame(
-        [("a", "MENTIONED_IN_TURN", "t1", "tagger", 1.0, "Entity"),
-         ("b", "MENTIONED_IN_TURN", "t2", "tagger", 2.0, "Entity")],
-        "subj string, pred string, obj string, source string, score double, evidence_type string",
-    )
-    m1 = merge_edges(spark, p, base)
-    assert m1.count() == 2
-
-    update = spark.createDataFrame(
-        [("a", "MENTIONED_IN_TURN", "t1", "tagger", 3.0, "Entity"),   # refresh
-         ("c", "MENTIONED_IN_TURN", "t3", "tagger", 1.0, "Entity")],  # insert
-        base.schema,
-    )
-    m2 = merge_edges(spark, p, update)
-    got = {(r["subj"], r["obj"]): r["score"] for r in m2.collect()}
-    assert got == {("a", "t1"): 3.0, ("b", "t2"): 2.0, ("c", "t3"): 1.0}
-    # idempotent re-merge
-    m3 = merge_edges(spark, p, update)
-    assert m3.count() == 3
 
 
 # -- round-3 quality filters vs pure-Python renditions ------------------------

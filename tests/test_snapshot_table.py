@@ -92,9 +92,10 @@ def test_manifest_scan_keeps_pushdown(spark, tmp_path):
 
 
 def test_merge_edges_snapshot_upsert_with_history(spark, tmp_path):
-    """merge_edges_snapshot: same upsert semantics as merge_edges, but every
-    merge is a snapshot commit — the pre-merge state stays time-travelable
-    and a bad load rolls back instead of restoring a backup."""
+    """merge_edges_snapshot upserts (highest score per edge key wins, a
+    re-merge is idempotent), and every merge is a snapshot commit — the
+    pre-merge state stays time-travelable and a bad load rolls back
+    instead of restoring a backup."""
     from ckg_spark.operators.materialize import merge_edges_snapshot
 
     d = str(tmp_path / "edges_tbl")
@@ -111,6 +112,9 @@ def test_merge_edges_snapshot_upsert_with_history(spark, tmp_path):
     m2 = merge_edges_snapshot(spark, d, update)
     got = {(r["subj"], r["obj"]): r["score"] for r in m2.collect()}
     assert got == {("a", "t1"): 3.0, ("b", "t2"): 2.0, ("c", "t3"): 1.0}
+    # idempotent re-merge
+    m3 = merge_edges_snapshot(spark, d, update)
+    assert {(r["subj"], r["obj"]): r["score"] for r in m3.collect()} == got
     # the pre-merge snapshot is still readable, and rollback restores it
     pre = {(r["subj"], r["obj"]): r["score"]
            for r in T.read(spark, d, version=1).collect()}

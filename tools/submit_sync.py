@@ -12,12 +12,12 @@ Deployment form:
         --transcripts-table s3://bucket/transcripts_tbl \
         --edges-table       s3://bucket/edges_tbl \
         --vocab-obo         s3://bucket/ontology.obo \
-        --comention --compact-every 10
+        --compact-every 10
 
 Sandbox form (same code, local paths):
 
     python tools/submit_sync.py --transcripts-table /tmp/ttbl \
-        --edges-table /tmp/etbl --synthetic-vocab 200 --comention
+        --edges-table /tmp/etbl --synthetic-vocab 200
 
 Safe to run on a schedule: a sync with no new source snapshots is a
 no-op, a crashed sync is replay-safe (the high-water mark lives in
@@ -46,9 +46,6 @@ def main() -> int:
                     help="deterministic synthetic vocabulary of N entities")
     ap.add_argument("--to-version", type=int, default=None,
                     help="sync up to this source version (default: latest)")
-    ap.add_argument("--comention", action="store_true",
-                    help="also append partial co-mention counts "
-                         "(exact totals via read_merged_edges)")
     ap.add_argument("--mapping-table", default=None,
                     help="canonical-mapping snapshot table dir: route the "
                          "sync through plans.canon.sync_graph so entity "
@@ -60,11 +57,13 @@ def main() -> int:
                          "for this sync (default: the vocabulary's own "
                          "identity edges — idempotent to refold)")
     ap.add_argument("--compact-every", type=int, default=0,
-                    help="fold merge-on-read partials when the edge table "
-                         "has accumulated this many snapshots (0 = never)")
+                    help="fold the edge table (and, with --mapping-table, "
+                         "the remap log) when it has accumulated this many "
+                         "snapshots (0 = never)")
     ap.add_argument("--cpus", type=int, default=None, help="local mode cores")
     args = ap.parse_args()
 
+    from ckg_spark.plans import canon as C
     from ckg_spark.plans import incremental as I
     from ckg_spark.plans import table as T
     from ckg_spark.session import get_spark
@@ -91,13 +90,6 @@ def main() -> int:
     tables = vocab_to_spark(spark, vocab)
     n_remaps = None
     if args.mapping_table:
-        from ckg_spark.plans import canon as C
-
-        if args.comention:
-            ap.error("--mapping-table derives exact co-mentions at READ "
-                     "time (plans.canon.read_graph_edges); storing partials "
-                     "under canonical drift would double-count — drop "
-                     "--comention")
         ident_delta = (spark.read.parquet(args.identity_edges)
                        .select("ident_a", "ident_b")
                        if args.identity_edges
@@ -110,12 +102,12 @@ def main() -> int:
     else:
         rep = I.sync_mention_edges(
             spark, args.transcripts_table, tables, args.edges_table,
-            to_version=args.to_version, comention=args.comention)
+            to_version=args.to_version)
 
     compacted = False
     if (args.compact_every and rep.edge_table_version is not None
             and len(T.snapshots(args.edges_table)) >= args.compact_every):
-        I.compact_merged(spark, args.edges_table)
+        C.compact_graph_edges(spark, args.edges_table, args.mapping_table)
         compacted = True
 
     print(json.dumps({
