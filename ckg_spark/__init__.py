@@ -14,8 +14,8 @@ Design rules (see SURVEY.md):
 - Canonicalization is an iterative hash-join label propagation with pointer
   jumping (O(log d) rounds); min() aggregation is algebraic so map-side
   combine absorbs degree skew.
-- Every stage is checkpointable: materialized parquet + a ``_lineage`` table
-  (run_id, stage, rows, wall) enables mid-run resume.
+- Every stage is checkpointable: a snapshot table whose one commit carries
+  its lineage row (run_id, stage, rows, wall) enables mid-run resume.
 """
 
 __version__ = "0.1.0"

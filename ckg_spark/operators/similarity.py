@@ -150,14 +150,12 @@ def build_ann_index(df: DataFrame, index_dir: str, n_planes: int = 8,
     At query time only the probed signature partitions are scanned
     (partition pruning), so each query touches ~C(n_planes, <=h)/2^n_planes
     of the data instead of a full pass — the fix for the round-1 'signatures
-    recomputed per query over a full scan' weakness. Routed through
-    lineage.write_stage so the index build itself is resumable and leaves a
-    per-partition metrics row.
+    recomputed per query over a full scan' weakness. The index is a plain
+    hive-partitioned parquet dir (``{index_dir}/ann_sigs``), not a snapshot
+    table: lookups rely on Spark's own ``PartitionFilters`` over it.
     """
     import json
     import os
-
-    from ..plans import lineage as LIN
 
     first = df.select(F.size(vec_col).alias("d")).limit(1).collect()
     if not first:
@@ -169,8 +167,8 @@ def build_ann_index(df: DataFrame, index_dir: str, n_planes: int = 8,
         F.col(vec_col).alias("v"),
         lsh_signature_col(vec_col, planes).alias("sig"),
     )
-    run_id = LIN.new_run_id()
-    LIN.write_stage(sigs, index_dir, "ann_sigs", run_id, partition_by=["sig"])
+    sigs.write.mode("overwrite").partitionBy("sig").parquet(
+        os.path.join(index_dir, "ann_sigs"))
     manifest = {"dim": dim, "n_planes": n_planes, "seed": seed,
                 "id_col": id_col, "vec_col": vec_col}
     with open(os.path.join(index_dir, "ann_manifest.json"), "w") as f:
@@ -201,8 +199,6 @@ def ann_topk(spark, index_dir: str, query: list[float], k: int = 10,
     import json
     import os
 
-    from ..plans import lineage as LIN
-
     with open(os.path.join(index_dir, "ann_manifest.json")) as f:
         m = json.load(f)
     planes = _planes(m["dim"], m["n_planes"], m["seed"])
@@ -211,7 +207,7 @@ def ann_topk(spark, index_dir: str, query: list[float], k: int = 10,
         if sum(a * b for a, b in zip(query, p)) >= 0:
             qsig |= 1 << i
     probes = _probe_sigs(qsig, m["n_planes"], multiprobe_hamming)
-    idx = LIN.read_stage(spark, index_dir, "ann_sigs")
+    idx = spark.read.parquet(os.path.join(index_dir, "ann_sigs"))
     cands = idx.where(F.col("sig").isin(probes))  # partition pruning
     return cosine_topk(
         cands.select(F.col("id").alias(m["id_col"]),
@@ -293,15 +289,13 @@ def build_ivf_index(df: DataFrame, index_dir: str, n_clusters: int = 16,
                     iters: int = 5, id_col: str = "vec_id",
                     vec_col: str = "embedding", seed: int = 7) -> str:
     """Materialize an IVF index: train the coarse quantizer, assign every
-    vector, write (cluster, id, vector) PARTITIONED BY cluster through
-    lineage.write_stage (resumable + per-partition metrics), and persist the
-    centroids in the manifest. Queries scan only the ``n_probe`` partitions
-    whose centroids are nearest the query — the IVF analog of the LSH
-    index's signature pruning."""
+    vector, write (cluster, id, vector) as parquet PARTITIONED BY cluster
+    (``{index_dir}/ivf_rows``), and persist the centroids in the manifest.
+    Queries scan only the ``n_probe`` partitions whose centroids are nearest
+    the query — the IVF analog of the LSH index's signature pruning, done
+    by Spark's ``PartitionFilters`` and dynamic partition pruning."""
     import json
     import os
-
-    from ..plans import lineage as LIN
 
     centroids = ivf_train(df, n_clusters, iters, id_col, vec_col, seed)
     assign = _ivf_assign_udf(centroids)
@@ -309,8 +303,8 @@ def build_ivf_index(df: DataFrame, index_dir: str, n_clusters: int = 16,
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         assign(F.col(vec_col)).alias("cluster"),
     )
-    run_id = LIN.new_run_id()
-    LIN.write_stage(rows, index_dir, "ivf_rows", run_id, partition_by=["cluster"])
+    rows.write.mode("overwrite").partitionBy("cluster").parquet(
+        os.path.join(index_dir, "ivf_rows"))
     manifest = {"n_clusters": n_clusters, "seed": seed, "iters": iters,
                 "id_col": id_col, "vec_col": vec_col, "centroids": centroids}
     with open(os.path.join(index_dir, "ivf_manifest.json"), "w") as f:
@@ -329,15 +323,13 @@ def ivf_topk(spark, index_dir: str, query: list[float], k: int = 10,
 
     import numpy as np
 
-    from ..plans import lineage as LIN
-
     with open(os.path.join(index_dir, "ivf_manifest.json")) as f:
         m = json.load(f)
     C = np.asarray(m["centroids"], dtype=np.float64)
     q = np.asarray(query, dtype=np.float64)
     d2 = ((C - q) ** 2).sum(axis=1)
     probes = [int(i) for i in np.argsort(d2)[:n_probe]]
-    idx = LIN.read_stage(spark, index_dir, "ivf_rows")
+    idx = spark.read.parquet(os.path.join(index_dir, "ivf_rows"))
     cands = idx.where(F.col("cluster").isin(probes))  # partition pruning
     return cosine_topk(
         cands.select(F.col("id").alias(m["id_col"]),
@@ -388,8 +380,6 @@ def ivf_topk_batch(spark, index_dir: str, queries: DataFrame, k: int = 10,
 
     from pyspark.sql import Window
 
-    from ..plans import lineage as LIN
-
     with open(os.path.join(index_dir, "ivf_manifest.json")) as f:
         m = json.load(f)
     probes = _ivf_probe_udf(m["centroids"], n_probe)
@@ -402,7 +392,7 @@ def ivf_topk_batch(spark, index_dir: str, queries: DataFrame, k: int = 10,
         F.col("qv"), F.lit(0.0),
         lambda acc, x: acc + x.cast("double") * x.cast("double")))
     qx = qx.withColumn("qnorm", qn)
-    idx = LIN.read_stage(spark, index_dir, "ivf_rows")
+    idx = spark.read.parquet(os.path.join(index_dir, "ivf_rows"))
     if broadcast_queries:
         # Spark's dynamic partition pruning declines this join (no selective
         # build-side predicate to derive from), so prune STATICALLY: the

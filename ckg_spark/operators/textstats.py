@@ -378,10 +378,10 @@ def build_unigram_model(df: DataFrame, model_dir: str,
                         id_col: str = "doc_id", text_col: str = "text",
                         vocab_size: int = 100_000) -> str:
     """Persist the corpus unigram LM (the ``unigram_logprob_score`` model)
-    as a parquet vocabulary + JSON manifest — train once over the 100-TB
-    corpus, score any stream/batch later without re-aggregating (same
-    persisted-artifact pattern as the IVF/LSH indexes). Stage write goes
-    through lineage (resumable, per-partition metrics)."""
+    as a vocabulary table + JSON manifest — train once over the 100-TB
+    corpus, score any stream/batch later without re-aggregating. The
+    vocabulary is a lineage stage (``unigram_vocab`` snapshot table with
+    its per-partition metrics; plans/lineage.py)."""
     import json
     import os
 

@@ -14,14 +14,16 @@ contract as the KG pipeline (plans/pipeline.py).
     40_language   language-ID allowlist
       v
     50_corpus     curated corpus + per-stage survivor counts in lineage
+                  (the corpus is 40_language's snapshot table)
 
 Reference analog: CKG's per-parser cleaning/dedup tail (stringParser.py:51
 quality cutoffs, proteomicsParser.py:382 drop_duplicates) — recomposed as
 the corpus-curation stage stack a 100-TB LLM-data pipeline runs. Every
-stage commits parquet + a lineage row with per-partition counts; reruns
-with the same out_dir resume after the last committed stage. Drop
-accounting is explicit (no silent caps): each stage's in/out counts live in
-the lineage table, and quality drops carry per-rule flags in 10_quality.
+stage is a snapshot table whose one commit carries its lineage row with
+per-partition counts (plans/lineage.py); reruns with the same out_dir
+resume after the last committed stage. Drop accounting is explicit (no
+silent caps): each stage's in/out counts live in the stages' snapshot
+properties, and quality drops carry per-rule flags in 10_quality.
 """
 
 from __future__ import annotations
@@ -87,7 +89,8 @@ def run_curation_pipeline(
     min_line_words: int = 5,
 ) -> CurationResult:
     """Run (or resume) the curation stack. Returns the curated corpus plus
-    per-stage document counts (from the lineage rows, not extra actions).
+    per-stage document counts (from the stages' lineage rows — manifest
+    record counts, not extra actions).
 
     ``line_filter`` applies the C4 line cleaner BEFORE the document-level
     rules (rebuild text from kept lines), matching the C4 ordering; the

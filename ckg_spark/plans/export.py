@@ -8,7 +8,7 @@ the KG and curation pipelines:
 
     documents (doc_id, text, source)
       v
-    10_curation   plans/curate.py stage stack (its own nested lineage)
+    10_curation   plans/curate.py stage stack (its own nested stage dir)
       v
     20_tokens     per-doc token counts (JVM expression; no UDF)
       v
@@ -20,11 +20,14 @@ the KG and curation pipelines:
 
 Reference analog: CKG's project-report export tail (analytics_factory +
 viewer download) — recomposed as the training-export a 100 TB LLM-data
-pipeline runs. Every stage commits parquet + a lineage row (per-partition
-counts from the parquet footers); reruns with the same out_dir resume
-after the last committed stage. The out_dir IS the recipe identity:
-resuming with different targets/seq_len would mix recipes, so the plan
-stamps them in a manifest and refuses a mismatched resume.
+pipeline runs. Every stage is a snapshot table whose one commit carries
+its lineage row (per-partition counts from the parquet footers,
+plans/lineage.py); reruns with the same out_dir resume after the last
+committed stage. The continuous export's ``segments`` / ``digests`` sync
+tables share the out_dir; their snapshots carry no ``stage`` and are not
+lineage. The out_dir IS the recipe identity: resuming with different
+targets/seq_len would mix recipes, so the plan stamps them in a manifest
+and refuses a mismatched resume.
 
 Scale shape: the corpus shuffles ZERO times after curation — token
 counting is a narrow projection, the mixture is a broadcast rate join +
@@ -127,7 +130,7 @@ def run_training_export(
     run_id = LIN.new_run_id()
     resumed: list[str] = []
 
-    # ---- stage 10: curation (nested plan — its own lineage dir) -----------
+    # ---- stage 10: curation (nested plan — its own stage dir) -------------
     cur = run_curation_pipeline(
         spark, documents, os.path.join(out_dir, "10_curation"),
         id_col=id_col, text_col=text_col, languages=languages,

@@ -11,8 +11,10 @@
       v
     40_nodes / 41_edges   (subj, pred, obj) materialization        [K1,K2,M5,M7]
 
-Each stage commits to parquet with a lineage row (plans/lineage.py); a rerun
-with the same out_dir resumes after the last committed stage.
+Each stage is a snapshot table at ``{out_dir}/{stage}`` whose one commit
+carries its lineage row (plans/lineage.py); a rerun with the same out_dir
+resumes after the last committed stage. ``41_edges`` and ``40_nodes`` are
+the graph tables: read them with ``plans.table.read``.
 """
 
 from __future__ import annotations
@@ -44,19 +46,15 @@ def run_pipeline(
     longest_match: bool = False,
     keep: str = "best",
     conv_partitions: int | None = None,
-    graph_table_dir: str | None = None,
 ) -> PipelineResult:
     """Run (or resume) the full construction pipeline.
 
     ``vocab_tables`` is the dict from vocab.vocab_to_spark: aliases,
     stoplist, parent_rels, identity_edges, terms.
 
-    ``graph_table_dir``: when set, the final nodes/edges ALSO commit into
-    snapshot tables under ``{graph_table_dir}/nodes`` and ``.../edges``
-    (edges partitioned by pred — the "partitioned Iceberg graph tables"
-    shape) with the run_id in the snapshot properties; a rerun that finds
-    its run already committed (resume after a crash between table commit
-    and caller acknowledgement) skips the duplicate commit.
+    The returned ``nodes`` / ``edges`` read the committed ``40_nodes`` /
+    ``41_edges`` snapshot tables; the snapshot properties record the
+    run_id that wrote each.
     """
     run_id = LIN.new_run_id()
     resumed: list[str] = []
@@ -118,33 +116,7 @@ def run_pipeline(
         resumed.append("41_edges")
     else:
         e = M.materialize_edges(linked_canon, canonical, vocab_tables["parent_rels"])
-        edges = LIN.write_stage(e, out_dir, "41_edges", run_id,
-                                partition_by=["pred"])
-
-    if graph_table_dir is not None:
-        _commit_graph_tables(nodes, edges, graph_table_dir, out_dir)
+        edges = LIN.write_stage(e, out_dir, "41_edges", run_id)
 
     return PipelineResult(run_id=run_id, nodes=nodes, edges=edges,
                           resumed_stages=resumed)
-
-
-def _commit_graph_tables(nodes: DataFrame, edges: DataFrame,
-                         graph_table_dir: str, out_dir: str) -> None:
-    """Snapshot-commit the pipeline outputs keyed by the STAGE STORE
-    identity (out_dir): one commit per pipeline output directory, so
-    resumed reruns over the same out_dir never double-append."""
-    import os
-
-    from . import table as T
-
-    for name, df, part in (("nodes", nodes, None),
-                           ("edges", edges, ["pred"])):
-        tdir = os.path.join(graph_table_dir, name)
-        committed = {
-            s.get("properties", {}).get("source_out_dir")
-            for s in (T.snapshots(tdir) if T.current_version(tdir) else [])
-        }
-        if out_dir in committed:
-            continue
-        T.append(df, tdir, properties={"source_out_dir": out_dir},
-                 partition_by=part)

@@ -3,8 +3,9 @@
 The north star materializes graph tables "as partitioned Iceberg tables".
 On a deployment that is literally Iceberg; this module keeps the part of
 the table format the pipeline's correctness depends on — and keeps it
-behind one small API so the swap is local (same stance as
-``plans/lineage.py`` for the stage store):
+behind one small API so the swap is local. It is the one commit protocol:
+every pipeline stage (``plans/lineage.py``), incremental table and sync
+mark commits through it.
 
 - **immutable data files + manifest commits**: every write lands data
   files under a fresh ``data/s<id>/`` prefix, then commits a JSON manifest
@@ -18,7 +19,9 @@ behind one small API so the swap is local (same stance as
   metadata-pointer swap in the catalog.
 - **append / overwrite**: append commits parent's files + new files;
   overwrite commits only the new files. Both record operation, row count,
-  file count and parent id — the snapshot log.
+  file count, parent id, caller properties and each file's record count
+  (``file_rows``, from the footers the write already opens) — the
+  snapshot log.
 - **time travel**: ``read(spark, dir, version=N)`` plans the scan from
   manifest N's file list, so any historical snapshot stays queryable
   until expired; ``rollback`` commits a new manifest that re-points to an
@@ -168,7 +171,8 @@ def _write_snapshot_files(df: DataFrame, table_dir: str,
                for f in df.schema.fields if f.name in (partition_by or [])}
               if partition_by else {})
     fstats = {f: st for f, (_, st) in zip(files, footers)}
-    return files, rows, sid, fparts, ptypes, fstats
+    frows = {f: n for f, (n, _) in zip(files, footers)}
+    return files, rows, sid, fparts, ptypes, fstats, frows
 
 
 def _schema_list(st) -> list:
@@ -319,9 +323,9 @@ def overwrite(df: DataFrame, table_dir: str,
     parent = current_version(table_dir)
     pm = read_manifest(table_dir, parent) if parent is not None else None
     schema, _ = _schema_evolution(df, pm, keeps_parent_files=False)
-    files, rows, sid, fparts, ptypes, fstats = _write_snapshot_files(
+    files, rows, sid, fparts, ptypes, fstats, frows = _write_snapshot_files(
         df, table_dir, partition_by)
-    extra = {"schema": schema, "file_stats": fstats}
+    extra = {"schema": schema, "file_stats": fstats, "file_rows": frows}
     extra.update(_partition_extra(pm, partition_by, fparts, ptypes,
                                   keeps_parent_files=False,
                                   all_files=files))
@@ -343,11 +347,13 @@ def append(df: DataFrame, table_dir: str,
         base_files, base_rows = pm["files"], pm["row_count"]
     schema, evolved = _schema_evolution(df, pm,
                                         keeps_parent_files=bool(base_files))
-    files, rows, sid, fparts, ptypes, fstats = _write_snapshot_files(
+    files, rows, sid, fparts, ptypes, fstats, frows = _write_snapshot_files(
         df, table_dir, partition_by)
     extra = {"schema": schema, "schema_evolved": evolved,
              "file_stats": {**(pm.get("file_stats", {}) if pm else {}),
-                            **fstats}}
+                            **fstats},
+             "file_rows": {**(pm.get("file_rows", {}) if pm else {}),
+                           **frows}}
     extra.update(_partition_extra(pm, partition_by, fparts, ptypes,
                                   keeps_parent_files=bool(base_files),
                                   all_files=base_files + files))
@@ -361,7 +367,8 @@ def _recommit(table_dir: str, m: dict, operation: str, parent: int | None,
     data is written."""
     extra = {k: m[k] for k in
              ("partition_by", "file_partitions", "partition_types",
-              "partition_evolved", "schema", "schema_evolved", "file_stats")
+              "partition_evolved", "schema", "schema_evolved", "file_stats",
+              "file_rows")
              if k in m}
     return _commit(table_dir, m["files"], operation, m["row_count"], parent,
                    uuid.uuid4().hex[:12], properties, extra)
@@ -543,11 +550,12 @@ def compact(spark: SparkSession, table_dir: str,
     n = target_files or int(spark.conf.get("spark.sql.shuffle.partitions"))
     part_by = m.get("partition_by")
     df = df.repartition(n, *part_by) if part_by else df.repartition(n)
-    files, rows, sid, fparts, ptypes, fstats = _write_snapshot_files(
+    files, rows, sid, fparts, ptypes, fstats, frows = _write_snapshot_files(
         df, table_dir, part_by)
     # a compact rewrite unifies file schemas AND partition specs: both
     # evolved flags reset (every rewritten file follows the current spec)
-    extra = {"schema": _schema_list(df.schema), "file_stats": fstats}
+    extra = {"schema": _schema_list(df.schema), "file_stats": fstats,
+             "file_rows": frows}
     extra.update(_partition_extra(None, part_by, fparts, ptypes,
                                   keeps_parent_files=False,
                                   all_files=files))
@@ -559,8 +567,8 @@ def _manifest_versions(table_dir: str) -> list[int]:
     """Every committed manifest version present on disk, ascending.
     Enumerated by listing meta/v*.json — NOT by walking up from v=1, which
     would stop at the first gap ``expire_snapshots`` leaves and hide every
-    live snapshot after it (breaking the streaming batch_id replay guard
-    and pipeline source_out_dir dedupe that scan snapshot properties)."""
+    live snapshot after it (breaking the high-water marks and lineage rows
+    read from snapshot properties)."""
     md = _meta_dir(table_dir)
     if not os.path.isdir(md):
         return []
@@ -575,7 +583,8 @@ def _manifest_versions(table_dir: str) -> list[int]:
 
 
 def snapshots(table_dir: str) -> list[dict]:
-    """Snapshot log, oldest first (version, operation, rows, files, parent).
+    """Snapshot log, oldest first (version, operation, rows, files, parent,
+    properties, and ``file_rows``: each live file's record count).
     Survives expiry gaps: versions come from the on-disk manifest listing."""
     out = []
     for v in _manifest_versions(table_dir):
@@ -583,7 +592,7 @@ def snapshots(table_dir: str) -> list[dict]:
         out.append({k: m.get(k) for k in
                     ("version", "snapshot_id", "operation", "parent_version",
                      "committed_at", "row_count", "file_count",
-                     "properties")})
+                     "properties", "file_rows")})
     return out
 
 

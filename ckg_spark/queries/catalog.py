@@ -3,120 +3,23 @@
 The reference catalogs Cypher templates in YAML with involved_nodes /
 involved_rels metadata (ckg/graphdb_connector/query_utils.py:16-50,
 report_manager/queries/datasets_cypher.yml). Here each entry is a Spark SQL
-template over the materialized ``nodes`` / ``edges`` views, with the same
-metadata so queries stay discoverable; parameters use {param} placeholders
-resolved by ``run_query`` (a DataFrame join replaces the reference's
-string-spliced "post"-query IN-lists, dataset.py:206-220).
+template over the ``{nodes}`` / ``{edges}`` DataFrames, with the same
+metadata so queries stay discoverable. Parameters are Spark's named
+parameter markers (``:entity``), bound by ``run_query`` as values: an id
+with a quote is matched as itself, never spliced into the SQL (the
+reference string-splices its "post"-query IN-lists, dataset.py:206-220).
 """
 
 from __future__ import annotations
 
 import os
 
+import yaml
 from pyspark.sql import DataFrame, SparkSession
 
-_YML = os.path.join(os.path.dirname(os.path.abspath(__file__)), "catalog.yml")
-
-_FALLBACK: dict[str, dict] = {
-    "node_counts_by_label": {
-        "involved_nodes": ["*"],
-        "involved_rels": [],
-        "sql": "SELECT label, count(*) AS n FROM nodes GROUP BY label ORDER BY label",
-    },
-    "edge_counts_by_pred": {
-        "involved_nodes": [],
-        "involved_rels": ["*"],
-        "sql": "SELECT pred, count(*) AS n FROM edges GROUP BY pred ORDER BY pred",
-    },
-    "entity_mention_counts": {
-        "involved_nodes": ["Entity"],
-        "involved_rels": ["MENTIONED_IN_TURN"],
-        "sql": (
-            "SELECT subj AS id, count(*) AS turns_mentioned, sum(score) AS total_mentions "
-            "FROM edges WHERE pred = 'MENTIONED_IN_TURN' "
-            "GROUP BY subj ORDER BY total_mentions DESC, id LIMIT {k}"
-        ),
-        "defaults": {"k": 25},
-    },
-    "top_comentions_for_entity": {
-        "involved_nodes": ["Entity"],
-        "involved_rels": ["CO_MENTIONED_WITH"],
-        "sql": (
-            "SELECT CASE WHEN subj = '{entity}' THEN obj ELSE subj END AS other, "
-            "sum(score) AS weight FROM edges "
-            "WHERE pred = 'CO_MENTIONED_WITH' AND (subj = '{entity}' OR obj = '{entity}') "
-            "GROUP BY 1 ORDER BY weight DESC, other LIMIT {k}"
-        ),
-        "defaults": {"k": 10},
-    },
-    "entity_turns": {
-        "involved_nodes": ["Entity"],
-        "involved_rels": ["MENTIONED_IN_TURN"],
-        "sql": (
-            "SELECT obj AS turn_key, score FROM edges "
-            "WHERE pred = 'MENTIONED_IN_TURN' AND subj = '{entity}' "
-            "ORDER BY turn_key"
-        ),
-    },
-    "parents_of": {
-        "involved_nodes": ["*"],
-        "involved_rels": ["HAS_PARENT"],
-        "sql": (
-            "SELECT obj AS parent FROM edges "
-            "WHERE pred = 'HAS_PARENT' AND subj = '{entity}' ORDER BY parent"
-        ),
-    },
-    "merged_identities": {
-        "involved_nodes": ["*"],
-        "involved_rels": ["MAPS_TO"],
-        "sql": (
-            "SELECT obj AS canonical_id, sort_array(collect_list(subj)) AS members "
-            "FROM edges WHERE pred = 'MAPS_TO' GROUP BY obj ORDER BY canonical_id"
-        ),
-    },
-    "dangling_endpoints": {
-        "involved_nodes": ["*"],
-        "involved_rels": ["*"],
-        "sql": (
-            "SELECT pred, 'subj' AS endpoint, count(*) AS n_dangling "
-            "FROM edges e LEFT ANTI JOIN nodes n ON e.subj = n.id GROUP BY pred "
-            "UNION ALL "
-            "SELECT pred, 'obj' AS endpoint, count(*) AS n_dangling "
-            "FROM edges e LEFT ANTI JOIN nodes n ON e.obj = n.id "
-            "WHERE pred NOT IN ('MENTIONED_IN_TURN') "
-            "GROUP BY pred ORDER BY pred, endpoint"
-        ),
-    },
-    "hub_entities": {
-        "involved_nodes": ["*"],
-        "involved_rels": ["*"],
-        "sql": (
-            "SELECT id, degree FROM ("
-            "  SELECT coalesce(o.id, i.id) AS id, "
-            "         coalesce(o.d, 0) + coalesce(i.d, 0) AS degree FROM "
-            "  (SELECT subj AS id, count(*) AS d FROM edges GROUP BY subj) o "
-            "  FULL OUTER JOIN "
-            "  (SELECT obj AS id, count(*) AS d FROM edges GROUP BY obj) i "
-            "  USING (id)) ORDER BY degree DESC, id LIMIT {k}"
-        ),
-        "defaults": {"k": 15},
-    },
-}
-
-
-def _load_catalog() -> dict[str, dict]:
-    """Load catalog.yml (the reference's YAML-catalog shape); fall back to
-    the embedded dict if PyYAML is unavailable."""
-    try:
-        import yaml
-
-        with open(_YML) as f:
-            return yaml.safe_load(f)
-    except Exception:
-        return _FALLBACK
-
-
-CATALOG: dict[str, dict] = _load_catalog()
+with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "catalog.yml")) as _f:
+    CATALOG: dict[str, dict] = yaml.safe_load(_f)
 
 
 def list_queries() -> list[str]:
@@ -133,8 +36,9 @@ def queries_involving(rel: str) -> list[str]:
 
 def run_query(spark: SparkSession, name: str, nodes: DataFrame, edges: DataFrame,
               **params) -> DataFrame:
+    """Run template ``name`` over ``nodes`` / ``edges``. ``params`` (over
+    the template's ``defaults``) bind its ``:param`` markers as values,
+    never as SQL text."""
     spec = CATALOG[name]
     args = {**spec.get("defaults", {}), **params}
-    nodes.createOrReplaceTempView("nodes")
-    edges.createOrReplaceTempView("edges")
-    return spark.sql(spec["sql"].format(**args))
+    return spark.sql(spec["sql"], args=args, nodes=nodes, edges=edges)

@@ -175,6 +175,50 @@ def test_catalog_recursive_ancestors(spark):
     assert list(got["ancestor"]) == ["b", "c", "d"]
 
 
+def test_catalog_entity_params_are_values_not_sql(spark):
+    """Entity templates bind the id as a value: an id with a quote gets
+    pandas' answer, and an injection string matches nothing."""
+    import pandas as pd
+
+    q = "O'Neil"
+    rows = [(q, "MENTIONED_IN_TURN", "t1", 2.0), (q, "MENTIONED_IN_TURN", "t2", 1.0),
+            ("b", "MENTIONED_IN_TURN", "t1", 1.0),
+            (q, "CO_MENTIONED_WITH", "b", 2.0), ("c", "CO_MENTIONED_WITH", q, 1.0),
+            ("b", "CO_MENTIONED_WITH", "c", 5.0),
+            (q, "HAS_PARENT", "p'1", 1.0), ("p'1", "HAS_PARENT", "p2", 1.0),
+            ("b", "HAS_PARENT", "p3", 1.0)]
+    e = pd.DataFrame(rows, columns=["subj", "pred", "obj", "score"])
+    edges = spark.createDataFrame(e.assign(source="s"))
+    nodes = spark.createDataFrame([(q, "Entity")], "id string, label string")
+
+    def pd_answer(name, ent):
+        by = {p: e[(e["pred"] == p)] for p in e["pred"].unique()}
+        if name == "entity_turns":
+            r = by["MENTIONED_IN_TURN"]
+            r = r[r["subj"] == ent]
+            return sorted(zip(r["obj"], r["score"]))
+        if name == "top_comentions_for_entity":
+            r = by["CO_MENTIONED_WITH"]
+            r = r[(r["subj"] == ent) | (r["obj"] == ent)]
+            w = r.assign(o=r["obj"].where(r["subj"] == ent, r["subj"]))
+            w = w.groupby("o")["score"].sum()
+            return sorted(w.items(), key=lambda kv: (-kv[1], kv[0]))
+        hp = by["HAS_PARENT"]
+        frontier, seen = {ent}, set()
+        for _ in range(1 if name == "parents_of" else 5):
+            frontier = set(hp[hp["subj"].isin(frontier)]["obj"])
+            seen |= frontier
+        return [(p,) for p in sorted(seen)]
+
+    for name in ("entity_turns", "top_comentions_for_entity", "parents_of",
+                 "ancestors_of"):
+        got = [tuple(r) for r in
+               Q.run_query(spark, name, nodes, edges, entity=q).collect()]
+        assert got == pd_answer(name, q) != [], name
+        assert Q.run_query(spark, name, nodes, edges,
+                           entity="x' OR '1'='1").collect() == [], name
+
+
 def test_streaming_restart_exactly_once(spark, vocab_tables, transcripts_pdf,
                                         tmp_path):
     """availableNow stream, stop, land a new file, restart with the same

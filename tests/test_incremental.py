@@ -199,3 +199,36 @@ def test_sync_partitioned_transcript_table(spark, tmp_path, vocab_tables):
     assert T.read_manifest(str(tmp_path / "tTrue"))["partition_by"] == [
         "conv_id"]
     assert got[True] == got[False] and got[False]
+
+
+def test_submit_sync_compact_every_counts_since_last_fold(
+        spark, tmp_path, monkeypatch, capsys):
+    """``tools/submit_sync.py --compact-every 3`` over four syncs folds the
+    edge table once: the count restarts at each fold's overwrite."""
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    from ckg_spark import session
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "submit_sync.py")
+    spec = importlib.util.spec_from_file_location("submit_sync", path)
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    tdir, edir = str(tmp_path / "transcripts"), str(tmp_path / "edges")
+    compacted = []
+    for seed in (1, 2, 3, 4):
+        T.append(_chunk(spark, 60, seed), tdir)
+        monkeypatch.setattr(sys, "argv", [
+            "submit_sync.py", "--transcripts-table", tdir,
+            "--edges-table", edir, "--synthetic-vocab", "40",
+            "--compact-every", "3"])
+        assert cli.main() == 0
+        out = capsys.readouterr().out.strip().splitlines()[-1]
+        compacted.append(json.loads(out)["compacted"])
+    assert compacted == [False, False, True, False]
+    assert [s["operation"] for s in T.snapshots(edir)] == \
+        ["append"] * 3 + ["overwrite", "append"]

@@ -1,8 +1,10 @@
 """End-to-end pipeline: triple P/R vs oracle, per-turn invariant, resume."""
 
 import os
+import shutil
 
 import pandas as pd
+import pytest
 from pyspark.sql import Window, functions as F
 
 from ckg_spark.oracle_ref import oracle_triples, triple_prf
@@ -42,22 +44,90 @@ def test_per_turn_invariant(spark, transcripts_df, transcripts_pdf):
     assert (ordered["rn"] == ordered["turn_idx"] + 1).all()
 
 
+STAGES = ["10_mentions", "20_linked", "30_canonical", "40_nodes", "41_edges"]
+EDGE_K = ["subj", "pred", "obj", "source", "score"]
+
+
+def _triples(df: pd.DataFrame) -> list:
+    return sorted(map(tuple, df[EDGE_K].itertuples(index=False)))
+
+
 def test_pipeline_resume_skips_committed_stages(spark, vocab_tables,
                                                 transcripts_df, tmp_path):
     out = str(tmp_path / "kg2")
     r1 = run_pipeline(spark, transcripts_df, vocab_tables, out)
     assert r1.resumed_stages == []
     e1 = r1.edges.toPandas().sort_values(["subj", "pred", "obj"]).reset_index(drop=True)
-    n_lineage_1 = len(LIN.read_lineage(out))
-    # simulate a crash after stage 20: delete later stages' commits
+    lin1 = LIN.read_lineage(out)
+    assert [r["stage"] for r in lin1] == STAGES
+    # simulate a crash after stage 20: later stages never committed
     for stage in ["30_canonical", "40_nodes", "41_edges"]:
-        os.remove(os.path.join(out, stage, "_SUCCESS"))
+        shutil.rmtree(os.path.join(out, stage))
     r2 = run_pipeline(spark, transcripts_df, vocab_tables, out)
     assert set(r2.resumed_stages) == {"10_mentions", "20_linked"}
-    assert len(LIN.read_lineage(out)) == n_lineage_1 + 3
+    lin2 = LIN.read_lineage(out)
+    assert lin2[:2] == lin1[:2]
+    assert [r["stage"] for r in lin2] == STAGES
+    assert {r["run_id"] for r in lin2[2:]} == {r2.run_id}
     # resumed run produces the identical triple set
     e2 = r2.edges.toPandas().sort_values(["subj", "pred", "obj"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(e1[e2.columns], e2, check_dtype=False)
+
+
+def test_pipeline_crash_in_materialize_resumes(spark, vocab, vocab_tables,
+                                               transcripts_df, transcripts_pdf,
+                                               tmp_path, monkeypatch):
+    """A build killed inside edge materialization, after 40_nodes has
+    committed, resumes every committed stage and builds the oracle graph."""
+    from ckg_spark.operators import materialize as M
+
+    out = str(tmp_path / "crash_a")
+
+    def boom(*a, **k):
+        raise RuntimeError("killed in materialize_edges")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "materialize_edges", boom)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_pipeline(spark, transcripts_df, vocab_tables, out)
+    assert [LIN.stage_done(out, s) for s in STAGES] == [True] * 4 + [False]
+    res = run_pipeline(spark, transcripts_df, vocab_tables, out)
+    assert res.resumed_stages == STAGES[:4]
+    assert (_triples(res.edges.toPandas())
+            == _triples(oracle_triples(transcripts_pdf, vocab)))
+
+
+def test_pipeline_crash_before_commit_rewrites_stage(
+        spark, vocab, vocab_tables, transcripts_df, transcripts_pdf, tmp_path,
+        monkeypatch):
+    """A build killed after 41_edges' data files are written but before its
+    manifest commit: the stage is not done, the rerun rewrites it, and the
+    lineage holds exactly one row per stage (data and lineage row are one
+    commit, so neither can exist without the other)."""
+    from ckg_spark.plans import table as T
+
+    out = str(tmp_path / "crash_b")
+    commit = T._commit
+
+    def killed_commit(table_dir, *a, **k):
+        if table_dir.endswith("41_edges"):
+            raise RuntimeError("killed before the 41_edges commit")
+        return commit(table_dir, *a, **k)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(T, "_commit", killed_commit)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_pipeline(spark, transcripts_df, vocab_tables, out)
+    assert os.path.isdir(os.path.join(out, "41_edges", "data"))
+    assert not LIN.stage_done(out, "41_edges")
+    res = run_pipeline(spark, transcripts_df, vocab_tables, out)
+    assert res.resumed_stages == STAGES[:4]
+    lin = LIN.read_lineage(out)
+    assert sorted(r["stage"] for r in lin) == STAGES
+    edges = res.edges.toPandas()
+    assert lin[-1]["rows"] == len(edges) == sum(
+        lin[-1]["partition_rows"].values())
+    assert _triples(edges) == _triples(oracle_triples(transcripts_pdf, vocab))
 
 
 def test_determinism_across_parallelism(spark, vocab, vocab_tables,

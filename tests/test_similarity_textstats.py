@@ -138,15 +138,6 @@ def test_ann_index_scan_is_partition_pruned(spark, tmp_path):
     assert "sig" in seg, f"sig not pruned at scan: {seg}"
 
 
-def test_ann_index_build_leaves_lineage(spark, tmp_path):
-    from ckg_spark.plans import lineage as LIN
-    df, _ = _vectors(spark, n=100, dim=8, seed=9)
-    idx = str(tmp_path / "ann_idx3")
-    S.build_ann_index(df, idx, n_planes=6)
-    rows = LIN.read_lineage(idx)
-    assert rows and rows[0]["stage"] == "ann_sigs" and rows[0]["rows"] == 100
-
-
 def test_lang_best_script_ranges(spark):
     rows = [
         (1, "the cat sat on the mat and it was good for the dog"),

@@ -245,37 +245,34 @@ def test_schema_evolution_partitioned(spark, tmp_path):
 
 def test_pipeline_graph_table_commit_and_resume_idempotent(
         spark, vocab_tables, transcripts_df, tmp_path):
-    """run_pipeline(graph_table_dir=...) commits nodes/edges snapshot
-    tables (edges pred-partitioned); a resumed rerun over the same out_dir
-    does NOT double-append; a second batch from a different out_dir does."""
+    """run_pipeline's stages are snapshot tables: 40_nodes / 41_edges are
+    the graph tables, each one overwrite commit stamped with the run_id;
+    a resumed rerun over the same out_dir adds no snapshot anywhere."""
     from ckg_spark.plans.pipeline import run_pipeline
 
-    out1, gt = str(tmp_path / "o1"), str(tmp_path / "graph")
-    r1 = run_pipeline(spark, transcripts_df, vocab_tables, out1,
-                      graph_table_dir=gt)
-    e_dir = os.path.join(gt, "edges")
+    out1 = str(tmp_path / "o1")
+    r1 = run_pipeline(spark, transcripts_df, vocab_tables, out1)
+    stages = ["10_mentions", "20_linked", "30_canonical", "40_nodes",
+              "41_edges"]
+    e_dir = os.path.join(out1, "41_edges")
     n1 = T.read(spark, e_dir).count()
     assert n1 == r1.edges.count() > 0
-    assert T.read_manifest(e_dir).get("partition_by") == ["pred"]
-    # pruned read agrees with the stage output per pred
-    for pred in ("MAPS_TO", "HAS_PARENT"):
-        assert (T.read(spark, e_dir, partition_filter={"pred": pred}).count()
-                == r1.edges.where(f"pred = '{pred}'").count())
+    assert T.read(spark, os.path.join(out1, "40_nodes")).count() \
+        == r1.nodes.count() > 0
+    for stage in stages:
+        (s,) = T.snapshots(os.path.join(out1, stage))
+        assert s["operation"] == "overwrite"
+        assert s["properties"]["run_id"] == r1.run_id
+        assert s["properties"]["stage"] == stage
+    assert T.read_manifest(e_dir).get("partition_by") is None
 
     # resume same out_dir: all stages resumed, NO new snapshot
-    v_before = T.current_version(e_dir)
-    r2 = run_pipeline(spark, transcripts_df, vocab_tables, out1,
-                      graph_table_dir=gt)
-    assert len(r2.resumed_stages) >= 4
-    assert T.current_version(e_dir) == v_before
-
-    # a second batch (different out_dir) appends
-    half = transcripts_df.limit(200)
-    run_pipeline(spark, half, vocab_tables, str(tmp_path / "o2"),
-                 graph_table_dir=gt)
-    assert T.current_version(e_dir) == v_before + 1
-    assert T.read(spark, e_dir).count() > n1
-    assert T.read(spark, e_dir, version=v_before).count() == n1
+    v_before = [T.current_version(os.path.join(out1, st)) for st in stages]
+    r2 = run_pipeline(spark, transcripts_df, vocab_tables, out1)
+    assert r2.resumed_stages == stages
+    assert [T.current_version(os.path.join(out1, st))
+            for st in stages] == v_before
+    assert r2.edges.count() == n1
 
 
 def test_range_filter_data_skipping(spark, tmp_path):

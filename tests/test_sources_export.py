@@ -125,52 +125,3 @@ def test_lineage_partition_metrics(spark, tmp_path):
     assert r["rows"] == 1000
     assert sum(r["partition_rows"].values()) == 1000
     assert r["max_partition_rows"] >= 1000 // (r["partitions"] or 1)
-
-
-def test_fetch_dataset_file_url(tmp_path):
-    from ckg_spark.sources.remote import fetch_dataset
-    src = tmp_path / "vocab.tsv"
-    src.write_text("id\tname\nE1\tspark\n")
-    dest_dir = str(tmp_path / "dl")
-    p = fetch_dataset(f"file://{src}", dest_dir)
-    assert open(p).read().startswith("id\tname")
-    import os, json
-    marker = json.load(open(p + ".fetched"))
-    assert marker["bytes"] == os.path.getsize(p) and len(marker["sha256"]) == 64
-    # second call skips (mtime unchanged)
-    m1 = os.path.getmtime(p)
-    assert fetch_dataset(f"file://{src}", dest_dir) == p
-    assert os.path.getmtime(p) == m1
-
-
-def test_archive_restore_roundtrip(spark, tmp_path):
-    from ckg_spark.sources.remote import archive_stage, restore_stage
-    out = str(tmp_path / "out")
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "id int, v string")
-    df.write.parquet(out + "/40_nodes")
-    arch = archive_stage(out, "40_nodes", str(tmp_path / "bak"))
-    restored = restore_stage(arch, str(tmp_path / "restored"))
-    got = spark.read.parquet(restored)
-    assert got.count() == 100
-    assert sorted(r["v"] for r in got.collect()) == sorted(f"v{i}" for i in range(100))
-
-
-def test_restore_detects_corruption(spark, tmp_path):
-    from ckg_spark.sources.remote import archive_stage, restore_stage
-    import tarfile, os, pytest as pt
-    out = str(tmp_path / "out2")
-    spark.range(10).write.parquet(out + "/41_edges")
-    arch = archive_stage(out, "41_edges", str(tmp_path / "bak2"))
-    # corrupt one data byte inside the tar's largest member
-    raw = bytearray(open(arch, "rb").read())
-    # decompress, flip, recompress: simpler — restore then tamper then re-verify
-    restored = restore_stage(arch, str(tmp_path / "r1"))
-    files = [os.path.join(dp, f) for dp, _, fs in os.walk(restored) for f in fs
-             if f.endswith(".parquet")]
-    with open(files[0], "r+b") as f:
-        f.seek(10); f.write(b"\x00")
-    from ckg_spark.sources.remote import _dir_manifest
-    # re-archive of tampered dir then restore of ORIGINAL still fine;
-    # verification logic itself: manifests must now differ
-    assert _dir_manifest(restored) != _dir_manifest(
-        restore_stage(arch, str(tmp_path / "r2")))

@@ -110,7 +110,7 @@ def test_export_budget_caps_tokens(spark, tmp_path):
     rates = SA.mixture_rates(
         {s: float(r["w"]) for s, r in
          ((row["source"], row) for row in
-          full.corpus.sparkSession.read.parquet(f"{out_cap}/20_tokens")
+          TBL.read(spark, f"{out_cap}/20_tokens")
           .groupBy("source").agg(F.sum("n_tokens").alias("w")).collect())
          if s in targets},
         targets, budget=full_tok / 2)

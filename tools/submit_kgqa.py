@@ -34,8 +34,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--nodes", required=True, help="nodes parquet path")
-    ap.add_argument("--edges", required=True, help="edges parquet path")
+    ap.add_argument("--nodes", required=True,
+                    help="nodes snapshot table (a run_pipeline out_dir's 40_nodes)")
+    ap.add_argument("--edges", required=True,
+                    help="edges snapshot table (a run_pipeline out_dir's 41_edges)")
     ap.add_argument("--rules", help="CSV of pred,subj_type,obj_type allowed combos")
     ap.add_argument("--comention-triangles", action="store_true")
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
@@ -45,11 +47,12 @@ def main() -> int:
     from ckg_spark.session import get_spark
     from ckg_spark.operators.kg_qa import schema_violations, violation_summary
     from ckg_spark.operators.graph_algos import triangle_counts
+    from ckg_spark.plans import table as T
 
     spark = get_spark("submit_kgqa", cpus=args.cpus, shuffle_partitions=args.cpus)
     t0 = time.time()
-    nodes = spark.read.parquet(args.nodes)
-    edges = spark.read.parquet(args.edges)
+    nodes = T.read(spark, args.nodes)
+    edges = T.read(spark, args.edges)
     ids = nodes.select("id")
     out = {
         "edges": edges.count(),

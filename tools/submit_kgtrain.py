@@ -41,7 +41,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--edges", required=True, help="edges parquet path")
+    ap.add_argument("--edges", required=True,
+                    help="edges snapshot table (a run_pipeline out_dir's 41_edges)")
     ap.add_argument("--out", required=True, help="output dir (train/, val/)")
     ap.add_argument("--preds", default="CO_MENTIONED_WITH",
                     help="comma list of predicates to train on")
@@ -56,12 +57,13 @@ def main() -> int:
     from ckg_spark.session import get_spark
     from ckg_spark.operators.kg_qa import negative_triples
     from ckg_spark.operators.sampling import hash_uniform
+    from ckg_spark.plans import table as T
 
     spark = get_spark("submit_kgtrain", cpus=args.cpus,
                       shuffle_partitions=args.cpus)
     t0 = time.time()
     preds = [p.strip() for p in args.preds.split(",") if p.strip()]
-    edges = spark.read.parquet(args.edges)
+    edges = T.read(spark, args.edges)
     # persist the positive set: every downstream leg (pool index, draw,
     # anti-join, both writes) hangs off it, and without the persist the
     # whole read->distinct lineage re-runs ~5x (review finding)

@@ -14,7 +14,8 @@ On the sandbox it runs the same code on local parquet:
     python tools/submit_pipeline.py --transcripts /root/repo/data/transcripts_smoke.parquet \
         --synthetic-vocab 200 --out /tmp/kg_out
 
-Resume: rerunning with the same --out skips committed stages (lineage).
+Resume: rerunning with the same --out skips every stage whose snapshot
+table has a commit (plans/lineage.py).
 """
 
 from __future__ import annotations
@@ -31,7 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--transcripts", required=True, help="transcripts parquet/Iceberg path")
-    ap.add_argument("--out", required=True, help="output dir for graph tables + lineage")
+    ap.add_argument("--out", required=True,
+                    help="output dir: one snapshot table per stage, its "
+                         "lineage row in the snapshot properties")
     ap.add_argument("--vocab-obo", help="OBO ontology file for the vocabulary")
     ap.add_argument("--synthetic-vocab", type=int, default=0,
                     help="generate a deterministic synthetic vocabulary of N entities")

@@ -59,7 +59,7 @@ def main() -> int:
     ap.add_argument("--compact-every", type=int, default=0,
                     help="fold the edge table (and, with --mapping-table, "
                          "the remap log) when it has accumulated this many "
-                         "snapshots (0 = never)")
+                         "snapshots since its last fold (0 = never)")
     ap.add_argument("--cpus", type=int, default=None, help="local mode cores")
     args = ap.parse_args()
 
@@ -104,9 +104,13 @@ def main() -> int:
             spark, args.transcripts_table, tables, args.edges_table,
             to_version=args.to_version)
 
+    # snapshots since the last fold: compaction commits an overwrite
+    since_fold = 0
+    for s in T.snapshots(args.edges_table):
+        since_fold = 0 if s["operation"] == "overwrite" else since_fold + 1
     compacted = False
     if (args.compact_every and rep.edge_table_version is not None
-            and len(T.snapshots(args.edges_table)) >= args.compact_every):
+            and since_fold >= args.compact_every):
         C.compact_graph_edges(spark, args.edges_table, args.mapping_table)
         compacted = True
 
